@@ -31,6 +31,11 @@ artifact-backed queries (round-16 VERDICT #2: q_view_compaction read
 11.6 s driver vs 1.3 s builder median purely from accounting, not
 regression). Read driver walls against this column, steady-state
 medians against ``queries``.
+
+``cache_builds`` / ``cache_build_sec`` name, per query, the artifacts
+its rep 0 built (memo kinds and on-disk families, from the
+``cache.STATS`` counter deltas) — so the one query that paid for a
+build shared across a family (the trade-graph edges) is visible.
 """
 
 from __future__ import annotations
@@ -45,6 +50,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from dynamodb_streaming_datalake_spark.cache import STATS  # noqa: E402
 from dynamodb_streaming_datalake_spark.registry import all_queries  # noqa: E402
 from dynamodb_streaming_datalake_spark.session import get_spark  # noqa: E402
 
@@ -199,8 +205,11 @@ def main() -> None:
     compile_sec: dict[str, float] = {}
     construct_sec: dict[str, float] = {}
     cold_wall_sec: dict[str, float] = {}
+    cache_builds: dict[str, dict[str, int]] = {}
+    cache_build_sec: dict[str, dict[str, float]] = {}
     for name in sorted(queries):
         ts = []
+        before = {k: dict(v) for k, v in STATS.items()}
         for i in range(reps):
             t0 = time.perf_counter()
             df = queries[name](spark, sf_dir)
@@ -222,6 +231,15 @@ def main() -> None:
                 compile_sec[name] = round(time.perf_counter() - t_built, 3)
             df.count()
             ts.append(round(time.perf_counter() - t0, 3))
+            if i == 0:
+                cache_builds[name], cache_build_sec[name] = {}, {}
+                for k, v in STATS.items():
+                    b = before.get(k, {"builds": 0, "build_sec": 0.0})
+                    if v["builds"] > b["builds"]:
+                        cache_builds[name][k] = v["builds"] - b["builds"]
+                        cache_build_sec[name][k] = round(
+                            v["build_sec"] - b["build_sec"], 3
+                        )
         samples[name] = ts
         timings[name] = round(statistics.median(ts), 3)
         # rep-0 wall includes construction + any one-time cached
@@ -436,6 +454,8 @@ def main() -> None:
                 "compile_sec": compile_sec,
                 "construct_sec": construct_sec,
                 "cold_wall_sec": cold_wall_sec,
+                "cache_builds": cache_builds,
+                "cache_build_sec": cache_build_sec,
                 "samples": samples,
                 "reps": reps,
                 "sf": sf,

@@ -1,13 +1,26 @@
-"""Shared per-dataset build cache with atomic-rename commit.
+"""Shared per-dataset artifact caches: one in-process memo, one on-disk
+build directory, one set of counters.
 
-Several driver-gated queries exercise an operator whose input must
-first be BUILT from a fixture (the gzip CDC zone, the fragmented +
-compacted zone, z-ordered parquet, MVCC snapshot versions). Each build
-is deterministic in (family version, sf_dir), so it is materialized
-once under ``$TMPDIR/<family>_cache_<version>_<sha16(sf_dir)>`` and
-reused by bench, correctness, and tests.
+In process — ``memo(kind, paths, build, session=None)``: every
+artifact derived from fixture files (parquet schemas, footer row
+counts, scan-plan handles, the pinned trade-graph edges, trained BPE
+merges, the unigram DP, PQ codebook rows) is stored under
+``(kind, session, stamps)`` where each input file contributes its
+``(realpath, st_mtime_ns, st_size)``. A rewritten input changes its
+stamp, so the next call rebuilds. Artifacts bound to a SparkSession
+(DataFrames, checkpointed frames) pass that session and are never
+handed to another one; session-free payloads (schemas, driver rows,
+counts) pass ``None`` and serve every session. A hit costs one
+``os.stat`` per input and one dict lookup — no py4j call.
 
-Discipline (shared by every family through ``ensure_cached_build``):
+One eviction rule: storing an entry drops the entries of the same kind
+and the same input paths whose stamp differs or whose session has been
+stopped (``sparkContext._jsc is None``). So the memo holds at most one
+stamp per (kind, paths) and live session.
+
+On disk — ``ensure_cached_build``: builds that are materialized under
+``$TMPDIR/<family>_cache_<version>_<sha16(sf_dir)>`` and reused by
+bench, correctness, and tests. Its discipline:
 
 * the build lands in a unique temp dir and is atomically renamed into
   place, so a crashed build can never be mistaken for a complete one
@@ -17,6 +30,11 @@ Discipline (shared by every family through ``ensure_cached_build``):
   version is encoded in the dir name, so same-version caches for other
   sf_dirs survive (bench/tests alternating between scales don't thrash
   each other), and other families are never touched.
+
+Counters: ``STATS[kind]`` holds ``hits``, ``builds`` and ``build_sec``
+for every memo kind and every on-disk family. A build's seconds include
+any nested memo builds it triggers (the edge build reads its tables
+through ``read_table``).
 """
 
 from __future__ import annotations
@@ -25,7 +43,66 @@ import hashlib
 import os
 import shutil
 import tempfile
+import time
+from collections import defaultdict
 from collections.abc import Callable, Sequence
+from typing import Any
+
+STATS: defaultdict[str, dict[str, float]] = defaultdict(
+    lambda: {"hits": 0, "builds": 0, "build_sec": 0.0}
+)
+
+_MEMO: dict[tuple, Any] = {}
+
+
+def _stamp(path: str) -> tuple[str, int, int]:
+    real = os.path.realpath(path)
+    try:
+        st = os.stat(real)
+    except OSError:
+        return (real, -1, -1)
+    return (real, st.st_mtime_ns, st.st_size)
+
+
+def _timed_build(kind: str, build: Callable[[], Any]) -> Any:
+    t0 = time.perf_counter()
+    value = build()
+    s = STATS[kind]
+    s["builds"] += 1
+    s["build_sec"] += time.perf_counter() - t0
+    return value
+
+
+def memo(
+    kind: str,
+    paths: Sequence[str],
+    build: Callable[[], Any],
+    session: Any = None,
+) -> Any:
+    """Return the ``kind`` artifact for the current stamps of ``paths``
+    (and ``session``, when the artifact is bound to one), calling
+    ``build()`` on a miss. See the module docstring for the key and
+    the eviction rule."""
+    stamps = tuple(_stamp(p) for p in paths)
+    key = (kind, session, stamps)
+    try:
+        value = _MEMO[key]
+    except KeyError:
+        pass
+    else:
+        STATS[kind]["hits"] += 1
+        return value
+    value = _timed_build(kind, build)
+    names = tuple(s[0] for s in stamps)
+    for k in list(_MEMO):
+        k_kind, k_session, k_stamps = k
+        if k_kind != kind or tuple(s[0] for s in k_stamps) != names:
+            continue
+        stopped = k_session is not None and k_session.sparkContext._jsc is None
+        if k_stamps != stamps or stopped:
+            del _MEMO[k]
+    _MEMO[key] = value
+    return value
 
 
 def cache_path(family: str, version: str, sf_dir: str) -> str:
@@ -48,6 +125,7 @@ def ensure_cached_build(
     names legacy layouts to sweep alongside older versions."""
     final = cache_path(family, version, sf_dir)
     if os.path.isdir(final):
+        STATS[family]["hits"] += 1
         return final
     tmp_root = tempfile.gettempdir()
     keep = f"{family}_cache_{version}_"
@@ -59,7 +137,7 @@ def ensure_cached_build(
             shutil.rmtree(os.path.join(tmp_root, name), ignore_errors=True)
     build = tempfile.mkdtemp(prefix=f"{family}_build_", dir=tmp_root)
     try:
-        build_fn(build)
+        _timed_build(family, lambda: build_fn(build))
         try:
             os.rename(build, final)
         except OSError:

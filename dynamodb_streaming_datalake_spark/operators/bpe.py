@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dynamodb_streaming_datalake_spark.cache import memo
 from dynamodb_streaming_datalake_spark.registry import format_doc as _fmt
 from dynamodb_streaming_datalake_spark.registry import query
 from dynamodb_streaming_datalake_spark.sources.readers import read_table
@@ -98,49 +99,34 @@ def word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: learned merges per (documents.parquet path, mtime, n_merges) — the
-#: PQ-codebook cache discipline (similarity._PQ_TCB_CACHE): K rows per
-#: entry, latest mtime per path only, so q_bpe_train + q_bpe_tokenize
-#: in one sweep train once, not twice
-_BPE_CACHE: dict[tuple, list[tuple]] = {}
-
-
-def _bpe_cache_key(sf_dir: str, n_merges: int) -> tuple:
-    import os
-
-    path = os.path.join(os.path.realpath(sf_dir), "documents.parquet")
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = -1
-    return (path, mtime, n_merges)
-
-
 def bpe_train(
     spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (merges, tokenized_vocab): ``merges`` has one row per
     learned merge (merge_rank, left_tok, right_tok, merged,
     pair_count); ``tokenized_vocab`` is (w, cnt, toks) after all
-    merges. Training runs once per dataset per driver (mtime-keyed
-    cache); rebuilding the vocab from cached merges is the map-only
-    fold chain, no pair-count shuffles."""
-    key = _bpe_cache_key(sf_dir, n_merges)
-    merge_rows = _BPE_CACHE.get(key)
+    merges. Training runs once per dataset per driver (the merge rows
+    are memoized on the documents file stamp and serve every session,
+    so q_bpe_train + q_bpe_tokenize in one sweep train once); rebuilding
+    the vocab from cached merges is the map-only fold chain, no
+    pair-count shuffles."""
     words = word_freqs(spark, sf_dir).select(
         "w", "cnt", F.expr(_CHARS).alias("toks")
     )
-    if merge_rows is None:
+    trained = None
+
+    def train() -> list[tuple]:
+        nonlocal trained
         # pin the histogram ONCE before the loop (the pagerank /
         # simhash bounded-materialization idiom — vocabulary-sized, a
         # persisted shuffle output on a cluster): every merge round
         # then starts from the pinned table instead of re-running the
         # corpus scan plus all prior folds
-        words = words.localCheckpoint(eager=True)
-        merge_rows = []
+        w = words.localCheckpoint(eager=True)
+        rows = []
         for k in range(n_merges):
             counts = (
-                words.select(
+                w.select(
                     "cnt", F.explode(F.expr(_pairs_expr("toks"))).alias("p")
                 )
                 .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
@@ -153,10 +139,10 @@ def bpe_train(
             best = (
                 counts.orderBy(F.col("c").desc(), "a", "b").limit(1).collect()[0]
             )
-            merge_rows.append(
+            rows.append(
                 (k, best["a"], best["b"], best["a"] + best["b"], int(best["c"]))
             )
-            words = words.select(
+            w = w.select(
                 "w",
                 "cnt",
                 _apply_merge(
@@ -166,10 +152,15 @@ def bpe_train(
             # bounded cadence: round k replays at most
             # BPE_CHECKPOINT_EVERY folds, never the whole chain
             if (k + 1) % BPE_CHECKPOINT_EVERY == 0:
-                words = words.localCheckpoint(eager=True)
-        for stale in [s for s in _BPE_CACHE if s[0] == key[0] and s != key]:
-            del _BPE_CACHE[stale]
-        _BPE_CACHE[key] = merge_rows
+                w = w.localCheckpoint(eager=True)
+        trained = w
+        return rows
+
+    merge_rows = memo(
+        f"bpe_merges/{n_merges}", (f"{sf_dir}/documents.parquet",), train
+    )
+    if trained is not None:
+        words = trained
     else:
         for i, (_, a, b, _m, _c) in enumerate(merge_rows):
             words = words.select(
@@ -613,13 +604,6 @@ def q_unigram_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: solved DP per (documents path, mtime): the three frames are all
-#: eagerly checkpointed (vocabulary-sized), so caching the HANDLES —
-#: not driver rows — lets q_unigram_tokenize and q_tokenizer_eval in
-#: one sweep solve the DP once (the _BPE_CACHE discipline)
-_UNI_CACHE: dict[tuple, tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
 def unigram_dp(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -627,11 +611,22 @@ def unigram_dp(
     q_tokenizer_eval: returns ``(wf, vocab, final)`` — the word
     histogram (word, freq) over words of length <= UNI_MAX_LEN, the
     scored piece vocabulary (piece, cost), and the solved DP frontier
-    (word, comb) where ``comb`` packs (min_cost * 32 + n_tokens)."""
-    key = _bpe_cache_key(sf_dir, -1)
-    cached = _UNI_CACHE.get(key)
-    if cached is not None:
-        return cached
+    (word, comb) where ``comb`` packs (min_cost * 32 + n_tokens).
+
+    The three frames are all eagerly checkpointed (vocabulary-sized) and
+    memoized per (session, documents file stamp), so q_unigram_tokenize
+    and q_tokenizer_eval in one sweep solve the DP once."""
+    return memo(
+        "unigram_dp",
+        (f"{sf_dir}/documents.parquet",),
+        lambda: _solve_unigram_dp(spark, sf_dir),
+        spark,
+    )
+
+
+def _solve_unigram_dp(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     d = read_table(spark, sf_dir, "documents")
     wf = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
@@ -709,11 +704,7 @@ def unigram_dp(
     for k in range(1, UNI_MAX_LEN + 1):
         f_k = dp[k].where(F.length("word") == k)
         final = f_k if final is None else final.unionByName(f_k)
-    final = final.localCheckpoint(eager=True)
-    for stale in [s for s in _UNI_CACHE if s[0] == key[0] and s != key]:
-        del _UNI_CACHE[stale]
-    _UNI_CACHE[key] = (wf, vocab, final)
-    return wf, vocab, final
+    return wf, vocab, final.localCheckpoint(eager=True)
 
 
 _fmt(

@@ -41,12 +41,6 @@ from dynamodb_streaming_datalake_spark.model import (
 # ---------------------------------------------------------------------------
 
 
-def decode_base64(df: DataFrame, col: str = "data", out: str = "json") -> DataFrame:
-    """Firehose delivers base64 payloads; the Lambda b64-decodes then
-    utf-8 decodes (``firehose_transformation.py:27``)."""
-    return df.withColumn(out, F.unbase64(F.col(col)).cast("string"))
-
-
 def parse_envelope(df: DataFrame, json_col: str = "json") -> DataFrame:
     """``json.loads`` equivalent (``:34``): typed ``from_json`` against
     the declared envelope schema — schema-on-read, no inference pass."""

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dynamodb_streaming_datalake_spark.cache import memo
 from dynamodb_streaming_datalake_spark.registry import format_doc as _fmt
 from dynamodb_streaming_datalake_spark.registry import query
 from dynamodb_streaming_datalake_spark.sources.readers import read_table
@@ -69,7 +70,7 @@ def pagerank(
 
     ``edges_w`` / ``n_nodes`` let a caller supply the pinned
     (edge + outdeg) table and the |V| probe from a per-dataset cache
-    (q_pagerank does, via ``_edge_aux``) so repeated invocations skip
+    (q_pagerank does, via ``_edge_memo``) so repeated invocations skip
     the per-call materialization + collect."""
     if edges_w is None:
         # materialize the (edge + outdeg) table once: every iteration
@@ -124,65 +125,51 @@ def pagerank(
     return ranks.select("node", "rank_fp")
 
 
-#: checkpointed edge frame per (orders path, mtime): six graph queries
-#: build the same orders x lineitem distinct edge table — caching the
-#: HANDLE to one eagerly-pinned frame (the unigram-DP cache
-#: discipline) makes a registry sweep build it once, not six times
-_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _edge_cache_key(sf_dir: str) -> tuple:
-    import os
-
-    path = os.path.join(os.path.realpath(sf_dir), "orders.parquet")
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = -1
-    return (path, mtime)
+def _edge_memo(kind: str, spark: SparkSession, sf_dir: str, build):
+    """Per-dataset trade-graph artifact, memoized on the stamps of both
+    edge inputs and bound to ``spark`` (the frames are checkpointed in
+    that session). Everything cached this way is O(|V|+|E|) and
+    deterministic in the dataset: the edge table itself, pagerank's
+    pinned (edge + outdeg) table, the |V| probe (one 1-row collect per
+    dataset instead of one per invocation), BFS's pinned initial
+    distance vector, HITS' forward half and its hub count."""
+    inputs = (f"{sf_dir}/orders.parquet", f"{sf_dir}/lineitem.parquet")
+    return memo(kind, inputs, build, spark)
 
 
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct customer<->supplier pairs through orders x lineitem,
     in both directions, with typed node keys ('c<id>' / 's<id>').
     Returns an eagerly-pinned frame, cached per dataset — every
-    consumer loops over it, so the pin is shared, not per-query."""
-    key = _edge_cache_key(sf_dir)
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select("o_custkey", "l_suppkey")
-        .distinct()
+    consumer loops over it, so a registry sweep builds the pin once,
+    not once per graph query."""
+
+    def build() -> DataFrame:
+        orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+        li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+        pairs = (
+            orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
+            .select("o_custkey", "l_suppkey")
+            .distinct()
+        )
+        c = F.concat(F.lit("c"), F.col("o_custkey"))
+        s = F.concat(F.lit("s"), F.col("l_suppkey"))
+        fwd = pairs.select(c.alias("src"), s.alias("dst"))
+        rev = pairs.select(s.alias("src"), c.alias("dst"))
+        return fwd.unionAll(rev).localCheckpoint(eager=True)
+
+    return _edge_memo("trade_edges", spark, sf_dir, build)
+
+
+def _n_nodes(spark: SparkSession, sf_dir: str) -> int:
+    """|V| of the trade graph (distinct src of the pinned edge table) —
+    the scalar every graph query's broadcast dispatch reads."""
+    return _edge_memo(
+        "n_nodes",
+        spark,
+        sf_dir,
+        lambda: _trade_edges(spark, sf_dir).select("src").distinct().count(),
     )
-    c = F.concat(F.lit("c"), F.col("o_custkey"))
-    s = F.concat(F.lit("s"), F.col("l_suppkey"))
-    fwd = pairs.select(c.alias("src"), s.alias("dst"))
-    rev = pairs.select(s.alias("src"), c.alias("dst"))
-    edges = fwd.unionAll(rev).localCheckpoint(eager=True)
-    for stale in [k for k in _EDGE_CACHE if k[0] == key[0] and k != key]:
-        del _EDGE_CACHE[stale]
-        _EDGE_AUX.pop(stale, None)
-    _EDGE_CACHE[key] = edges
-    return edges
-
-
-#: per-dataset artifacts DERIVED from the cached edge table, built
-#: lazily on first use by the consuming query and shared thereafter
-#: (round 18): n_nodes (the broadcast size-dispatch probe — one 1-row
-#: collect per DATASET instead of one per invocation), pagerank's
-#: pinned (edge + outdeg) table, BFS's pinned initial distance vector,
-#: HITS' forward-graph hub count. Same lifecycle as _EDGE_CACHE
-#: (mtime-keyed, evicted alongside it); everything here is O(|V|+|E|)
-#: and deterministic in the dataset, exactly like the edge pin itself.
-_EDGE_AUX: dict[tuple, dict] = {}
-
-
-def _edge_aux(sf_dir: str) -> dict:
-    return _EDGE_AUX.setdefault(_edge_cache_key(sf_dir), {})
 
 
 _SQL_EDGES = """
@@ -251,21 +238,13 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     family SURVEY.md §2 lists as non-SQL-native), proven value-exact
     rather than rows-only."""
     edges = _trade_edges(spark, sf_dir)
-    aux = _edge_aux(sf_dir)
-    if "edges_w" not in aux:
+
+    def weighted() -> DataFrame:
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        aux["edges_w"] = edges.join(deg, "src").localCheckpoint()
-    if "n_nodes" not in aux:
-        aux["n_nodes"] = (
-            aux["edges_w"]
-            .select(F.col("src").alias("node"))
-            .distinct()
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()[0]["n"]
-        )
-    ranks = pagerank(
-        edges, edges_w=aux["edges_w"], n_nodes=aux["n_nodes"]
-    )
+        return edges.join(deg, "src").localCheckpoint()
+
+    edges_w = _edge_memo("edges_w", spark, sf_dir, weighted)
+    ranks = pagerank(edges, edges_w=edges_w, n_nodes=_n_nodes(spark, sf_dir))
     return (
         ranks.orderBy(F.col("rank_fp").desc(), "node")
         .limit(PR_TOP)
@@ -498,15 +477,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    # |V| probe shared per dataset (_edge_aux): distinct src of the
-    # pinned edge table — the same scalar every graph query dispatches
-    # on, collected once per dataset instead of once per invocation
-    aux = _edge_aux(sf_dir)
-    if "n_nodes" not in aux:
-        aux["n_nodes"] = labels.agg(F.count(F.lit(1)).alias("n")).collect()[
-            0
-        ]["n"]
-    small = aux["n_nodes"] <= PR_BROADCAST_MAX_NODES
+    small = _n_nodes(spark, sf_dir) <= PR_BROADCAST_MAX_NODES
     bc = F.broadcast if small else (lambda df: df)
     for _ in range(LP_ITERS):
         nbr = (
@@ -816,14 +787,13 @@ def q_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _trade_edges(spark, sf_dir)
     nodes = edges.select(F.col("src").alias("node")).distinct()
     # the initial distance vector and the |V| probe are deterministic
-    # in the dataset — cached per dataset (_edge_aux, round 18) so
+    # in the dataset — cached per dataset (_edge_memo, round 18) so
     # repeated invocations skip one eager O(|V|) pin + one collect;
     # the per-ROUND pins below stay (measured: dropping them loses —
     # see OPTIMIZATION_r18.md, graph family)
-    aux = _edge_aux(sf_dir)
-    if "bfs_dist0" not in aux:
+    def dist0() -> DataFrame:
         srcn = nodes.agg(F.min("node").alias("s"))
-        aux["bfs_dist0"] = (
+        return (
             nodes.crossJoin(F.broadcast(srcn))
             .select(
                 "node",
@@ -833,12 +803,9 @@ def q_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    dist = aux["bfs_dist0"]
-    if "n_nodes" not in aux:
-        aux["n_nodes"] = nodes.agg(F.count(F.lit(1)).alias("n")).collect()[
-            0
-        ]["n"]
-    small = aux["n_nodes"] <= PR_BROADCAST_MAX_NODES
+
+    dist = _edge_memo("bfs_dist0", spark, sf_dir, dist0)
+    small = _n_nodes(spark, sf_dir) <= PR_BROADCAST_MAX_NODES
     bc = F.broadcast if small else (lambda df: df)
     for _ in range(BFS_ITERS):
         nbr = (
@@ -1269,23 +1236,25 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector cannot express."""
     # the forward (customer->supplier) half of the pinned edge table
     # and its hub count are dataset-deterministic — cached per dataset
-    # (_edge_aux, round 18) so repeated invocations skip the per-call
+    # (_edge_memo, round 18) so repeated invocations skip the per-call
     # lazy pin + the |V| probe; the per-half-step pins inside hits()
     # stay (measured: dropping them explodes the recompute lineage,
     # 5.8 -> 43 s — see OPTIMIZATION_r18.md)
-    aux = _edge_aux(sf_dir)
-    if "hits_fwd" not in aux:
-        aux["hits_fwd"] = (
-            _trade_edges(spark, sf_dir)
-            .where(F.col("src").startswith("c"))
-            .localCheckpoint(eager=False)
-        )
-        aux["hits_n_hubs"] = (
-            aux["hits_fwd"].select("src").distinct().count()
-        )
-    scores = hits(
-        aux["hits_fwd"], pinned=True, n_nodes=aux["hits_n_hubs"]
+    fwd = _edge_memo(
+        "hits_fwd",
+        spark,
+        sf_dir,
+        lambda: _trade_edges(spark, sf_dir)
+        .where(F.col("src").startswith("c"))
+        .localCheckpoint(eager=False),
     )
+    n_hubs = _edge_memo(
+        "hits_n_hubs",
+        spark,
+        sf_dir,
+        lambda: fwd.select("src").distinct().count(),
+    )
+    scores = hits(fwd, pinned=True, n_nodes=n_hubs)
     w = Window.partitionBy("side").orderBy(
         F.col("score_fp").desc(), "node"
     )

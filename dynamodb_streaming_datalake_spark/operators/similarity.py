@@ -33,6 +33,7 @@ from dynamodb_streaming_datalake_spark.functions.texthash import (
     sql_cosine,
     sql_portable_hash60,
 )
+from dynamodb_streaming_datalake_spark.cache import memo
 from dynamodb_streaming_datalake_spark.registry import format_doc as _fmt
 from dynamodb_streaming_datalake_spark.registry import query
 from dynamodb_streaming_datalake_spark.sources.readers import fan_out, read_table
@@ -762,44 +763,29 @@ def _pq_assign(sub: DataFrame, codebook: DataFrame) -> DataFrame:
     )
 
 
-#: per-dataset trained PQ codebook rows — M x K = 128 rows of 8
-#: doubles, a broadcast-sized object; caching it across the three PQ
-#: queries (quantize / ADC / rerank) removes two redundant Lloyd
-#: passes per bench round. float64 round-trips exactly through the
-#: driver, so the recreated frame is bit-identical to the trained one.
-#: Keys carry the source parquet's mtime (see ``_pq_cache_key``), so a
-#: dataset regenerated in place within one driver process retrains
-#: instead of silently reusing a stale codebook. Bounded: storing a new
-#: mtime for a path evicts that path's older entries (``_pq_cache_put``),
-#: so the cache holds at most one codebook per distinct dataset path for
-#: the driver's lifetime.
-_PQ_TCB_CACHE: dict[tuple, list[tuple]] = {}
-
-
-def _pq_cache_put(key: tuple, rows: list[tuple]) -> None:
-    path = key[0]
-    for stale in [k for k in _PQ_TCB_CACHE if k[0] == path and k != key]:
-        del _PQ_TCB_CACHE[stale]
-    _PQ_TCB_CACHE[key] = rows
-
-
-def _pq_cache_key(sf_dir: str) -> tuple:
-    path = os.path.join(os.path.realpath(sf_dir), "embeddings.parquet")
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = -1
-    return (path, mtime)
-
-
-def _pq_trained_codebook(sub: DataFrame, cache_key: tuple | None = None) -> DataFrame:
+def _pq_trained_codebook(sub: DataFrame, sf_dir: str | None = None) -> DataFrame:
     """(s, code, c): one exact-decimal Lloyd iteration from the
-    deterministic first-K init, per subspace. With ``cache_key`` the
-    trained rows are collected once (bounded: M x K) and reused."""
-    if cache_key is not None and cache_key in _PQ_TCB_CACHE:
-        spark = sub.sparkSession
-        return spark.createDataFrame(
-            _PQ_TCB_CACHE[cache_key], "s int, code long, c array<double>"
+    deterministic first-K init, per subspace.
+
+    With ``sf_dir`` (``sub`` derives from its embeddings table) the
+    trained rows — M x K = 128 rows of 8 doubles, broadcast-sized — are
+    collected once per embeddings file stamp and reused across the PQ
+    queries (quantize / ADC / rerank), removing two redundant Lloyd
+    passes per bench round. The memo holds plain rows, not a frame, so
+    every session gets a frame rebuilt from them; float64 round-trips
+    exactly through the driver, so it is bit-identical to the trained
+    one."""
+    if sf_dir is not None:
+
+        def train() -> list[tuple]:
+            return [
+                (int(r["s"]), int(r["code"]), [float(x) for x in r["c"]])
+                for r in _pq_trained_codebook(sub).collect()
+            ]
+
+        rows = memo("pq_codebook", (f"{sf_dir}/embeddings.parquet",), train)
+        return sub.sparkSession.createDataFrame(
+            rows, "s int, code long, c array<double>"
         )
     icb = sub.where(F.col("vec_id") < PQ_K).select(
         "s", F.col("vec_id").alias("code"), F.col("v").alias("c")
@@ -828,7 +814,7 @@ def _pq_trained_codebook(sub: DataFrame, cache_key: tuple | None = None) -> Data
         ).alias(f"d{d}")
         for d in range(PQ_SUBDIM)
     ]
-    tcb = (
+    return (
         a1v.groupBy("s", "code")
         .agg(*dims)
         .select(
@@ -837,17 +823,6 @@ def _pq_trained_codebook(sub: DataFrame, cache_key: tuple | None = None) -> Data
             F.array(*[F.col(f"d{d}") for d in range(PQ_SUBDIM)]).alias("c"),
         )
     )
-    if cache_key is not None:
-        rows = [
-            (int(r["s"]), int(r["code"]), [float(x) for x in r["c"]])
-            for r in tcb.collect()
-        ]
-        _pq_cache_put(cache_key, rows)
-        spark = sub.sparkSession
-        return spark.createDataFrame(
-            rows, "s int, code long, c array<double>"
-        )
-    return tcb
 
 
 @query(
@@ -918,7 +893,7 @@ def q_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the same shape FAISS's PQ trainer distributes.
     """
     sub = _pq_subvectors(read_table(spark, sf_dir, "embeddings"))
-    tcb = _pq_trained_codebook(sub, cache_key=_pq_cache_key(sf_dir))
+    tcb = _pq_trained_codebook(sub, sf_dir=sf_dir)
     enc = _pq_assign(sub, tcb)
     lst = F.sort_array(F.collect_list(F.struct("s", "code", "dist")))
     return (
@@ -1114,7 +1089,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     full scan per query batch.
     """
     sub = _pq_subvectors(read_table(spark, sf_dir, "embeddings"))
-    tcb = _pq_trained_codebook(sub, cache_key=_pq_cache_key(sf_dir))
+    tcb = _pq_trained_codebook(sub, sf_dir=sf_dir)
     return (
         _pq_adc_ranked(sub, tcb, pool=PQ_TOPK)
         .where(F.col("rank") <= PQ_TOPK)
@@ -1186,7 +1161,7 @@ def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = read_table(spark, sf_dir, "embeddings")
     sub = _pq_subvectors(e)
-    tcb = _pq_trained_codebook(sub, cache_key=_pq_cache_key(sf_dir))
+    tcb = _pq_trained_codebook(sub, sf_dir=sf_dir)
     shortlist = (
         _pq_adc_ranked(sub, tcb, pool=PQ_RERANK_POOL)
         .where(F.col("rank") <= PQ_RERANK_POOL)
@@ -1351,7 +1326,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     train + assign + probe + ADC + rank end to end."""
     e = read_table(spark, sf_dir, "embeddings")
     sub = _pq_subvectors(e)
-    tcb = _pq_trained_codebook(sub, cache_key=_pq_cache_key(sf_dir))
+    tcb = _pq_trained_codebook(sub, sf_dir=sf_dir)
     enc = _pq_assign(sub, tcb).select("vec_id", "s", "code")
     cand = _ivfpq_candidates(e)
     lut = _pq_lut(sub, tcb)
@@ -1463,7 +1438,7 @@ def q_ann_pq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("vec_id"), "lang"
     )
     sub = _pq_subvectors(e)
-    tcb = _pq_trained_codebook(sub, cache_key=_pq_cache_key(sf_dir))
+    tcb = _pq_trained_codebook(sub, sf_dir=sf_dir)
     enc = _pq_assign(sub, tcb).select("vec_id", "s", "code")
     lut = _pq_lut(sub, tcb)
     qmeta = (
@@ -3467,7 +3442,7 @@ def _ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     def build(build_dir: str) -> None:
         e = read_table(spark, sf_dir, "embeddings")
         sub = _pq_subvectors(e)
-        tcb = _pq_trained_codebook(sub, cache_key=_pq_cache_key(sf_dir))
+        tcb = _pq_trained_codebook(sub, sf_dir=sf_dir)
         cents = ivfpq_coarse_centroids(e)
         ivfpq_encode(e, tcb, cents).write.partitionBy("cid").parquet(
             os.path.join(build_dir, "codes")

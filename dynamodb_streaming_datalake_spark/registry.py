@@ -31,7 +31,7 @@ ORACLE: dict[str, str] = {}
 # PRIORITY derived by scripts/rotate_window.py from
 # CORRECTNESS_r*.json (latest: r17).  Do not hand-order;
 # regenerate after each driver round.  Derivation: the
-# 49 never-driver-proven names lead, then proofs
+# 35 never-driver-proven names lead, then proofs
 # ascending by round (stable tie-break: prior order).
 PRIORITY: tuple[str, ...] = (
     # -- never driver-proven --
@@ -42,49 +42,40 @@ PRIORITY: tuple[str, ...] = (
     "q_regression_discontinuity",
     "q_raking",
     "q_quantile_treatment_effect",
+    "q_stateful_latest_state",
+    "q_enrich_stream",
+    "q_hits",
+    "q_stream_sessionize",
+    "q_stream_enrich_scd2",
+    "q_kcenter_seeds",
+    "q_kmeans",
+    "q_ann_serve_pq",
+    "q_embedding_outliers",
+    "q_ann_codes_stream",
+    "q_label_propagation",
+    "q_unigram_tokenize",
+    "q_ri_audit",
+    "q_pagerank",
+    "q_bpe_train",
+    "q_bpe_tokenize",
+    "q_blocking_eval",
+    "q_kcore",
+    "q_shortest_paths",
+    "q_degree_stats",
+    "q_tokenizer_eval",
+    "q_pq_quantize",
+    "q_ann_pq",
+    "q_ann_pq_rerank",
+    "q_ann_ivfpq",
+    "q_ann_pq_filtered",
+    "q_mmr_diverse",
+    "q_embedding_covariance",
+    # -- proven r11 --
     "q_media_jpeg",
     "q_media_gif",
     "q_media_tiff",
     "q_dedup_apply",
     "q_dedup_apply_clustered",
-    "q_dedup_incremental",
-    "q_ann_ivf",
-    "q_media_decode",
-    "q_media_frame_stats",
-    "q_media_audio_stats",
-    "q_media_wav",
-    "q_media_ppm",
-    "q_corpus_curation",
-    "q_embedding_silhouette",
-    "q_source_overlap",
-    "q_triangle_count",
-    "q_dedup_spans",
-    "q_retrieval_eval",
-    "q_media_wav_adpcm",
-    "q_media_mp4_samples",
-    "q_media_mp3_sideinfo",
-    "q_media_webp",
-    "q_entity_resolution",
-    "q_item_similarity",
-    "q_dedup_keep_best",
-    "q_dedup_eval",
-    "q_media_wav_g711",
-    "q_media_flac",
-    "q_media_jpeg_prog",
-    "q_media_jpeg_color",
-    "q_decontaminate_fuzzy",
-    "q_view_compaction",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_minhash_lsh",
-    "q_dedup_simhash",
-    "q_pacf",
-    "q_shard_rebalance",
-    "q_assoc_rules",
-    "q_distinctive_terms",
-    "q_dedup_threshold_sweep",
-    "q_ann_tuning",
-    "q_matryoshka_eval",
-    # -- proven r11 --
     "q_sequence_pack",
     "q_stratified_cap",
     "q_salted_join",
@@ -103,8 +94,6 @@ PRIORITY: tuple[str, ...] = (
     "q_scd2_intervals",
     "q_bloom_prejoin",
     "q_cdc_zone_roundtrip",
-    "q_stateful_latest_state",
-    "q_enrich_stream",
     "q_grouping_sets",
     "q_window_time_range",
     "q_user_value_deciles",
@@ -117,14 +106,19 @@ PRIORITY: tuple[str, ...] = (
     "q_text_fingerprint",
     "q_lang_distribution",
     # -- proven r12 --
-    "q_hits",
+    "q_dedup_incremental",
+    "q_ann_ivf",
+    "q_media_decode",
+    "q_media_frame_stats",
+    "q_media_audio_stats",
+    "q_media_wav",
+    "q_media_ppm",
+    "q_corpus_curation",
     "q_benford_audit",
     "q_mad_outliers",
-    "q_stream_sessionize",
     "q_holt_trend",
     "q_cumulative_users",
     "q_grouped_forecast",
-    "q_stream_enrich_scd2",
     "q_vocab_growth",
     "q_ngram_novelty",
     "q_rake_keywords",
@@ -136,7 +130,6 @@ PRIORITY: tuple[str, ...] = (
     "q_lift_deciles",
     "q_markov_eval",
     "q_srm_check",
-    "q_kcenter_seeds",
     "q_dedup_stream",
     "q_bloom_stream",
     "q_text_repetition",
@@ -145,7 +138,6 @@ PRIORITY: tuple[str, ...] = (
     "q_heavy_hitters",
     "q_ann_topk",
     "q_ann_lsh",
-    "q_kmeans",
     "q_embedding_quantize",
     "q_ann_filtered",
     "q_udf_vector_norms",
@@ -160,12 +152,14 @@ PRIORITY: tuple[str, ...] = (
     "q_window_tumbling",
     "q_window_sliding",
     # -- proven r13 --
+    "q_embedding_silhouette",
+    "q_source_overlap",
+    "q_triangle_count",
     "q_ohlc_bars",
     "q_gini_coefficient",
     "q_feature_hashing",
     "q_zipf_fit",
     "q_token_entropy",
-    "q_ann_serve_pq",
     "q_random_projection",
     "q_cluster_purity",
     "q_neyman_allocation",
@@ -208,17 +202,30 @@ PRIORITY: tuple[str, ...] = (
     "q9_product_profit",
     "q10_returned_items",
     # -- proven r14 --
+    "q_dedup_spans",
+    "q_retrieval_eval",
+    "q_media_wav_adpcm",
+    "q_media_mp4_samples",
+    "q_media_mp3_sideinfo",
+    "q_media_webp",
+    "q_entity_resolution",
+    "q_item_similarity",
+    "q_dedup_keep_best",
+    "q_dedup_eval",
+    "q_media_wav_g711",
+    "q_media_flac",
+    "q_media_jpeg_prog",
+    "q_media_jpeg_color",
+    "q_decontaminate_fuzzy",
     "q_source_mix_drift",
     "q_dp_quantile",
     "q_adaptive_salted_join",
     "q_linear_probe",
     "q_bitext_mine",
-    "q_embedding_outliers",
     "q_quality_resample",
     "q_grouped_regression",
     "q_probe_calibration",
     "q_mvcc_changefeed",
-    "q_ann_codes_stream",
     "q_decontaminate_stream",
     "q_probe_stream",
     "q13_customer_distribution",
@@ -234,8 +241,6 @@ PRIORITY: tuple[str, ...] = (
     "q_asof_join",
     "q_incr_agg_stream",
     "q_pit_join",
-    "q_label_propagation",
-    "q_unigram_tokenize",
     "q_interp_linear",
     "q_anomaly_zscore",
     "q_bootstrap_ci",
@@ -244,10 +249,13 @@ PRIORITY: tuple[str, ...] = (
     "q_skew_diagnose",
     "q_salted_agg",
     # -- proven r15 --
+    "q_view_compaction",
+    "q_dedup_ngram_jaccard",
+    "q_dedup_minhash_lsh",
+    "q_dedup_simhash",
     "q_notin_nullaware",
     "q_partial_update_merge",
     "q_fd_audit",
-    "q_ri_audit",
     "q_interval_join",
     "q_exact_quantile_twopass",
     "q_interval_join_spanning",
@@ -276,9 +284,6 @@ PRIORITY: tuple[str, ...] = (
     "q_histogram_value",
     "q_incr_agg",
     "q_snapshot_diff",
-    "q_pagerank",
-    "q_bpe_train",
-    "q_bpe_tokenize",
     "q_bigram_lm",
     "q_data_quality_report",
     "q_compact_scan",
@@ -291,6 +296,13 @@ PRIORITY: tuple[str, ...] = (
     "q_dedup_exact",
     "q_ivm_join",
     # -- proven r16 --
+    "q_pacf",
+    "q_shard_rebalance",
+    "q_assoc_rules",
+    "q_distinctive_terms",
+    "q_dedup_threshold_sweep",
+    "q_ann_tuning",
+    "q_matryoshka_eval",
     "q_retractable_minmax",
     "q_two_sample_ks",
     "q_mann_whitney",
@@ -304,7 +316,6 @@ PRIORITY: tuple[str, ...] = (
     "q_lsh_planner",
     "q_weighted_reservoir",
     "q_t_closeness",
-    "q_blocking_eval",
     "q_isotonic_calibration",
     "q_bandit_posterior",
     "q_effect_size",
@@ -323,10 +334,6 @@ PRIORITY: tuple[str, ...] = (
     "q_rfm_segments",
     "q_join_order_dp",
     "q_bandit_stream",
-    "q_kcore",
-    "q_shortest_paths",
-    "q_degree_stats",
-    "q_tokenizer_eval",
     "q_freshness_monitor",
     "q_bloom_fpr_sweep",
     "q_winsorize",
@@ -364,19 +371,12 @@ PRIORITY: tuple[str, ...] = (
     "q_quality_classifier",
     "q_dedup_clusters",
     "q_para_dedup",
-    "q_pq_quantize",
-    "q_ann_pq",
-    "q_ann_pq_rerank",
-    "q_ann_ivfpq",
-    "q_ann_pq_filtered",
     "q_hybrid_search",
     "q_media_bmp",
     "q_link_prediction",
     "q_histogram_drift",
     "q_autocorrelation",
     "q_dedup_containment",
-    "q_mmr_diverse",
-    "q_embedding_covariance",
     "q_curriculum_order",
     "q_ams_f2",
     "q_cuped",

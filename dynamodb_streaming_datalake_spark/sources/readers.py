@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dynamodb_streaming_datalake_spark.cache import memo
+
 #: tables the driver generates under /root/testdata/sf*/ (TESTDATA.md)
 TABLES = (
     "region",
@@ -46,6 +48,9 @@ _NANO_TS_COLUMNS: dict[str, tuple[str, ...]] = {
 
 
 def _normalize_nanos(df: DataFrame, table: str) -> DataFrame:
+    # row-preserving by contract: scan_row_count answers COUNT(*) of a
+    # read_table handle from the parquet footers, so a filter here would
+    # make that count wrong
     for c in _NANO_TS_COLUMNS.get(table, ()):
         field = df.schema[c] if c in df.columns else None
         if field is not None and isinstance(field.dataType, T.LongType):
@@ -58,78 +63,45 @@ def _normalize_nanos(df: DataFrame, table: str) -> DataFrame:
     return df
 
 
-#: parquet schema per (realpath, mtime_ns) — METADATA only, the role a
-#: metastore/catalog plays at scale. A plain ``spark.read.parquet``
-#: re-lists and re-reads footers on every call (~0.3 s for lineitem,
-#: measured); with the schema supplied the reader skips inference
-#: (~0.03 s). No row data is cached — every action still scans the
-#: parquet files — and the mtime key drops the entry the moment a
-#: fixture is rewritten.
-_SCHEMA_CACHE: dict[tuple[str, int], "T.StructType"] = {}
-
-
-def _table_path_key(sf_dir: str, name: str) -> tuple[str, int]:
-    import os
-
-    path = os.path.realpath(f"{sf_dir}/{name}.parquet")
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = -1
-    return (path, mtime)
-
-
-#: normalized scan-plan HANDLE per (session id, realpath, mtime_ns) —
-#: a DataFrame is an immutable lazy plan, so handing every caller the
-#: same object is pure metadata reuse (the analyzed plan), exactly like
-#: the schema cache one level down: no row data is cached, every action
-#: still scans the parquet files, and the mtime key invalidates on
-#: rewrite (round 18: the schema-supplied reader still costs ~14 ms of
-#: py4j per call x ~400 call sites per bench).
-_DF_CACHE: dict[tuple, DataFrame] = {}
+def _table_schema(spark: SparkSession, path: str) -> T.StructType:
+    """Parquet schema of one table file — METADATA only, the role a
+    metastore/catalog plays at scale. A plain ``spark.read.parquet``
+    re-lists and re-reads footers on every call (~0.3 s for lineitem,
+    measured); with the schema supplied the reader skips inference
+    (~0.03 s). No row data is cached, and the file stamp drops the
+    entry the moment a fixture is rewritten."""
+    return memo("table_schema", (path,), lambda: spark.read.parquet(path).schema)
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one synthetic lake table (B1 parquet scan)."""
+    """Read one synthetic lake table (B1 parquet scan).
+
+    Returns one normalized scan-plan HANDLE per (session, file stamp):
+    a DataFrame is an immutable lazy plan, so handing every caller the
+    same object is pure metadata reuse (the analyzed plan). No row data
+    is cached — every action still scans the parquet files (round 18:
+    the schema-supplied reader still costs ~14 ms of py4j per call x
+    ~400 call sites per bench)."""
     path = f"{sf_dir}/{name}.parquet"
-    key = _table_path_key(sf_dir, name)
-    # keyed on the session OBJECT (not id(): ids can be reused after a
-    # stopped session is collected); a process holds a handful of
-    # sessions at most, so the strong ref is bounded
-    dfkey = (spark, *key)
-    cached = _DF_CACHE.get(dfkey)
-    if cached is not None:
-        return cached
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        for stale in [k for k in _SCHEMA_CACHE if k[0] == key[0] and k != key]:
-            del _SCHEMA_CACHE[stale]
-        _SCHEMA_CACHE[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
-    out = _normalize_nanos(df, name)
-    # tag the handle with its (path, mtime) identity so scan_row_count
-    # can answer COUNT(*) from footer statistics (row-preserving
-    # normalization above keeps the footer count exact for the handle)
-    out._graft_table_key = key
-    for stale in [k for k in _DF_CACHE if k[1] == key[0] and k != dfkey]:
-        del _DF_CACHE[stale]
-    _DF_CACHE[dfkey] = out
-    return out
 
+    def scan() -> DataFrame:
+        df = spark.read.schema(_table_schema(spark, path)).parquet(path)
+        out = _normalize_nanos(df, name)
+        # tag the handle with its path so scan_row_count can answer
+        # COUNT(*) from footer statistics
+        out._graft_table_path = path
+        return out
 
-#: row count per (realpath, mtime_ns) — parquet FOOTER metadata, the
-#: table-statistics half of the metastore role the schema cache plays:
-#: ANALYZE TABLE persists exactly this number. Nothing is computed from
-#: row data (footers record exact row counts), and the mtime key drops
-#: the entry the moment a fixture is rewritten.
-_NROWS_CACHE: dict[tuple[str, int], int] = {}
+    return memo("table_scan", (path,), scan, spark)
 
 
 def _footer_num_rows(path: str) -> int | None:
     """Exact row count from parquet footer metadata (file or directory
-    of part files); None when footers cannot be read."""
+    of part files); None when footers cannot be read. Follows Spark's
+    path filter: names starting with ``_`` or ``.`` (``_temporary/``
+    left by an interrupted write, ``_SUCCESS``, ``.crc``) are not data;
+    a data file without the ``.parquet`` suffix answers None, so the
+    caller counts through Spark instead of guessing."""
     import os
 
     try:
@@ -137,12 +109,14 @@ def _footer_num_rows(path: str) -> int | None:
 
         if os.path.isdir(path):
             total = 0
-            for root, _dirs, files in os.walk(path):
+            for root, dirs, files in os.walk(path):
+                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
                 for f in files:
-                    if f.endswith(".parquet"):
-                        total += pq.read_metadata(
-                            os.path.join(root, f)
-                        ).num_rows
+                    if f.startswith(("_", ".")):
+                        continue
+                    if not f.endswith(".parquet"):
+                        return None
+                    total += pq.read_metadata(os.path.join(root, f)).num_rows
             return total
         return pq.read_metadata(path).num_rows
     except Exception:
@@ -152,17 +126,13 @@ def _footer_num_rows(path: str) -> int | None:
 def scan_row_count(df: DataFrame) -> int:
     """COUNT(*) of a base-table scan handle, answered from parquet
     footer statistics when the handle came from ``read_table`` (a
-    metadata read — no Spark job, no data scan; the role table stats
-    play in a metastore). Any other frame falls back to ``count()``,
-    so operators sizing themselves from an arbitrary input stay
-    correct."""
-    key = getattr(df, "_graft_table_key", None)
-    if key is not None:
-        n = _NROWS_CACHE.get(key)
-        if n is None:
-            n = _footer_num_rows(key[0])
-            if n is not None:
-                _NROWS_CACHE[key] = n
+    metadata read — no Spark job, no data scan; the role ANALYZE TABLE
+    statistics play in a metastore). Any other frame falls back to
+    ``count()``, so operators sizing themselves from an arbitrary input
+    stay correct."""
+    path = getattr(df, "_graft_table_path", None)
+    if path is not None:
+        n = memo("table_rows", (path,), lambda: _footer_num_rows(path))
         if n is not None:
             return n
     return df.count()
@@ -217,11 +187,7 @@ def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Stream a synthetic table through the file source — the test
     harness's replay of the Kinesis stream (SURVEY §2 A1), with the same
     nano-timestamp normalization as the batch reader."""
-    key = _table_path_key(sf_dir, name)
-    raw_schema = _SCHEMA_CACHE.get(key)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
-        _SCHEMA_CACHE[key] = raw_schema
+    raw_schema = _table_schema(spark, f"{sf_dir}/{name}.parquet")
     df = (
         spark.readStream.schema(raw_schema)
         # FileStreamSource needs a directory; pick the one table via glob

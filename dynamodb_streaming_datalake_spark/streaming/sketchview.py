@@ -755,23 +755,6 @@ _register_ams()
 # capped band-bucket join as batch dedup.
 
 
-def merge_minhash(prev: DataFrame, delta: DataFrame) -> DataFrame:
-    """Column-wise MIN per doc — the MinHash monoid operation
-    (idempotent, so stale re-folds are also harmless). The streaming
-    commit no longer materializes this per batch (segments fold at
-    read/compaction time, ``streaming.segments``); kept as the named
-    monoid for tests and batch callers."""
-    from dynamodb_streaming_datalake_spark.operators.dedup import (
-        MINHASH_SEEDS,
-    )
-
-    return (
-        prev.unionByName(delta)
-        .groupBy("doc_id")
-        .agg(*[F.min(f"m{s}").alias(f"m{s}") for s in range(MINHASH_SEEDS)])
-    )
-
-
 def upsert_minhash_view(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -1238,15 +1221,6 @@ _register_bloom()
 IVF_VIEW_VERSION = "v2"
 
 
-def merge_ivf_lists(prev: DataFrame, delta: DataFrame) -> DataFrame:
-    """Append — the inverted-list monoid (each vector arrives once
-    under exactly-once versioning; no per-key reconciliation). The
-    streaming commit expresses this as a delta segment, so nothing
-    ever unions corpus-sized frames per batch; kept as the named
-    monoid for batch callers."""
-    return prev.unionByName(delta)
-
-
 def upsert_ivf_view(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -1454,7 +1428,6 @@ def _ensure_pq_codes_view(spark: SparkSession, sf_dir: str) -> str:
 
     from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
     from dynamodb_streaming_datalake_spark.operators.similarity import (
-        _pq_cache_key,
         _pq_subvectors,
         _pq_trained_codebook,
         ivfpq_coarse_centroids,
@@ -1466,9 +1439,7 @@ def _ensure_pq_codes_view(spark: SparkSession, sf_dir: str) -> str:
         e = read_table(spark, sf_dir, "embeddings")
         # the frozen artifacts: full-corpus codebook + first-K coarse
         # quantizer, exactly what _ensure_ivfpq_index persists
-        tcb = _pq_trained_codebook(
-            _pq_subvectors(e), cache_key=_pq_cache_key(sf_dir)
-        )
+        tcb = _pq_trained_codebook(_pq_subvectors(e), sf_dir=sf_dir)
         cents = ivfpq_coarse_centroids(e)
         upsert_pq_codes_view(
             spark, e.where(F.col("vec_id") % 2 == 0), tcb, cents, view, version=1
@@ -1483,7 +1454,6 @@ def _ensure_pq_codes_view(spark: SparkSession, sf_dir: str) -> str:
 def _register_pq_codes() -> None:
     from dynamodb_streaming_datalake_spark.operators.similarity import (
         SQL_IVFPQ_SERVE,
-        _pq_cache_key,
         _pq_subvectors,
         _pq_trained_codebook,
         ivfpq_coarse_centroids,
@@ -1515,9 +1485,7 @@ def _register_pq_codes() -> None:
         path = _ensure_pq_codes_view(spark, sf_dir)
         codes = current_sketch_view(spark, os.path.join(path, "view"))
         e = read_table(spark, sf_dir, "embeddings")
-        tcb = _pq_trained_codebook(
-            _pq_subvectors(e), cache_key=_pq_cache_key(sf_dir)
-        )
+        tcb = _pq_trained_codebook(_pq_subvectors(e), sf_dir=sf_dir)
         return ivfpq_serve(codes, ivfpq_coarse_centroids(e), tcb, e)
 
 
@@ -2082,25 +2050,6 @@ def upsert_sprt_view(
     prev = current_snapshot(spark, view_dir, live_only=False)
     merged = delta if prev is None else merge_sprt(prev, delta)
     merged.write.mode("overwrite").parquet(f"{view_dir}/v={version}")
-
-
-def start_sprt_maintenance(
-    events: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_sprt_view(
-            batch_df.sparkSession, batch_df, view_dir, version=batch_id
-        )
-
-    writer = events.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _ensure_sprt_view(spark: SparkSession, sf_dir: str) -> str:

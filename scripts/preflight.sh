@@ -28,6 +28,40 @@ EOF
 python scripts/rotate_window.py --check
 python scripts/refresh_budgets.py --check
 
+# dead-code guard: a module-level function whose name occurs nowhere
+# else in the repo's .py files is unreferenced (pytest's test_*
+# functions, @query-registered queries and names built by a
+# globals()[f"<prefix>{...}"] lookup are reached by name lookup)
+python - <<'EOF'
+import ast, os, re, sys
+from collections import Counter
+
+srcs = {}
+for root, dirs, files in os.walk("."):
+    dirs[:] = [d for d in dirs if not d.startswith((".", "__"))]
+    for f in files:
+        if f.endswith(".py"):
+            p = os.path.join(root, f)
+            srcs[p] = open(p, encoding="utf-8").read()
+words = Counter(w for s in srcs.values() for w in re.findall(r"\w+", s))
+looked_up = tuple(re.findall(r'globals\(\)\[f"(\w+)\{', "\n".join(srcs.values())))
+dead = [
+    f"{p}:{n.lineno} {n.name}"
+    for p, s in sorted(srcs.items())
+    for n in ast.parse(s, p).body
+    if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    and not n.name.startswith(("test_", *looked_up))
+    and not any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in n.decorator_list
+    )
+    and words[n.name] <= 1
+]
+if dead:
+    sys.exit("unreferenced module-level functions:\n" + "\n".join(dead))
+print("dead-code scan OK")
+EOF
+
 if [ "${1:-}" = "quick" ]; then
     echo "preflight (quick) PASSED"
     exit 0

@@ -123,23 +123,34 @@ def test_bigram_lm_is_a_probability_model(spark, sf_smoke):
     assert seen + unseen == 1
 
 
-def test_train_wall_time_linear_in_merge_count(spark, sf_smoke):
+def test_train_wall_time_linear_in_merge_count(spark, sf_smoke, tmp_path):
     """The round-6 scale flag: training must be O(K) vocabulary passes
     plus ONE corpus scan, not K corpus scans + O(K^2) folds. Pin it by
     timing: 64 merges vs 16 merges is 4x the rounds — linear training
     lands near 4x wall-clock, the old unpinned recurrence near 16x.
     Threshold 9x splits the two regimes with slack for job-launch
     noise (each round is argmax-collect-bound locally)."""
+    import os
+    import shutil
     import time
 
-    from dynamodb_streaming_datalake_spark.operators.bpe import _BPE_CACHE
+    from dynamodb_streaming_datalake_spark import cache
+
+    # a private copy of the corpus: bumping its mtime gives each call a
+    # fresh stamp, so the merge memo trains for real instead of replaying
+    docs = tmp_path / "documents.parquet"
+    shutil.copy(f"{sf_smoke}/documents.parquet", docs)
+    os.chmod(docs, 0o644)
 
     def train(k: int) -> float:
-        _BPE_CACHE.clear()  # force real training, not cached replay
+        st = docs.stat()
+        os.utime(docs, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+        builds = cache.STATS[f"bpe_merges/{k}"]["builds"]
         t0 = time.perf_counter()
-        merges, _ = bpe_train(spark, sf_smoke, n_merges=k)
+        merges, _ = bpe_train(spark, str(tmp_path), n_merges=k)
         rows = merges.collect()
         assert [r["merge_rank"] for r in rows] == list(range(k))
+        assert cache.STATS[f"bpe_merges/{k}"]["builds"] == builds + 1
         return time.perf_counter() - t0
 
     train(4)  # warm-up: JVM codegen + parquet footer caches
@@ -150,7 +161,6 @@ def test_train_wall_time_linear_in_merge_count(spark, sf_smoke):
         ratios.append(t64 / t16)
         if ratios[-1] < 9.0:
             break
-    _BPE_CACHE.clear()  # don't leave a K=64 entry for later tests
     assert min(ratios) < 9.0, (
         f"training looks super-linear in merge count: "
         f"K=16 {t16:.2f}s vs K=64 {t64:.2f}s "

@@ -342,65 +342,107 @@ def test_scd2_from_patches_current_equals_patch_merge(spark, sf_smoke):
     assert 0 < n_versions < n_patches
 
 
+def _memo_keys(kind: str, path: str) -> list[tuple]:
+    import os
+
+    from dynamodb_streaming_datalake_spark import cache
+
+    real = os.path.realpath(path)
+    return [k for k in cache._MEMO if k[0] == kind and k[2][0][0] == real]
+
+
 def test_read_table_schema_cache_hits_and_invalidates(spark, tmp_path):
-    """The per-(path, mtime) parquet schema cache must (a) return the
-    same schema and rows on a cache hit, and (b) drop the entry when
-    the file is rewritten with a different schema — it is a metadata
-    cache, never a data cache."""
+    """The parquet schema memo (kind ``table_schema``) must (a) return
+    the same schema on a hit without re-inferring, and (b) re-infer
+    and evict the stale stamp when the file is rewritten with a
+    different schema — it is a metadata cache, never a data cache."""
     import time as _time
 
+    from dynamodb_streaming_datalake_spark import cache
     from dynamodb_streaming_datalake_spark.sources import readers
 
     d = str(tmp_path)
-    spark.range(3).selectExpr("id AS a").write.mode("overwrite").parquet(
-        f"{d}/t.parquet"
-    )
+    path = f"{d}/t.parquet"
+    spark.range(3).selectExpr("id AS a").write.mode("overwrite").parquet(path)
+    stats = cache.STATS["table_schema"]
+    builds, hits = stats["builds"], stats["hits"]
     df1 = readers.read_table(spark, d, "t")
-    key = readers._table_path_key(d, "t")
-    assert key in readers._SCHEMA_CACHE
-    df2 = readers.read_table(spark, d, "t")  # cache hit
-    assert df2.schema == df1.schema
-    assert sorted(r["a"] for r in df2.collect()) == [0, 1, 2]
-    # rewrite with a DIFFERENT schema -> mtime key changes -> re-infer
+    assert stats["builds"] == builds + 1
+    assert readers._table_schema(spark, path) == df1.schema  # hit
+    assert (stats["builds"], stats["hits"]) == (builds + 1, hits + 1)
+    assert sorted(r["a"] for r in df1.collect()) == [0, 1, 2]
+    (old_key,) = _memo_keys("table_schema", path)
+    # rewrite with a DIFFERENT schema -> new stamp -> re-infer
     _time.sleep(0.01)
     spark.range(2).selectExpr(
         "id AS a", "CAST(id AS STRING) AS b"
-    ).write.mode("overwrite").parquet(f"{d}/t.parquet")
+    ).write.mode("overwrite").parquet(path)
     df3 = readers.read_table(spark, d, "t")
+    assert stats["builds"] == builds + 2
     assert set(df3.columns) == {"a", "b"}
     assert sorted(r["a"] for r in df3.collect()) == [0, 1]
     # stale entry evicted, fresh one present
-    assert key not in readers._SCHEMA_CACHE
-    assert readers._table_path_key(d, "t") in readers._SCHEMA_CACHE
+    (new_key,) = _memo_keys("table_schema", path)
+    assert new_key != old_key
 
 
 def test_read_table_handle_cache_identity_and_invalidation(spark, tmp_path):
     """Round 18: read_table returns a cached scan-plan HANDLE per
-    (session, path, mtime). (a) same object on a hit — plan metadata
-    reuse, not data caching: a rewrite of the FILE with the same schema
-    must still be visible to the next action through a fresh mtime key;
-    (b) the stale handle is evicted on rewrite."""
+    (session, file stamp) — memo kind ``table_scan``. (a) same object
+    on a hit — plan metadata reuse, not data caching: a rewrite of the
+    FILE with the same schema must still be visible to the next action
+    through a fresh stamp; (b) the stale handle is evicted on rewrite."""
     import time as _time
+
+    from dynamodb_streaming_datalake_spark import cache
+    from dynamodb_streaming_datalake_spark.sources import readers
+
+    d = str(tmp_path)
+    path = f"{d}/t.parquet"
+    spark.range(3).selectExpr("id AS a").write.mode("overwrite").parquet(path)
+    stats = cache.STATS["table_scan"]
+    hits = stats["hits"]
+    df1 = readers.read_table(spark, d, "t")
+    df2 = readers.read_table(spark, d, "t")
+    assert df2 is df1  # the handle, not a rebuilt plan
+    assert stats["hits"] == hits + 1
+    (key1,) = _memo_keys("table_scan", path)
+    assert key1[1] is spark  # bound to the session that planned it
+    _time.sleep(0.01)
+    spark.range(5).selectExpr("id AS a").write.mode("overwrite").parquet(path)
+    df3 = readers.read_table(spark, d, "t")
+    assert df3 is not df1
+    assert df3.count() == 5  # new data visible through the new handle
+    assert _memo_keys("table_scan", path) != [key1]  # stale handle evicted
+    assert len(_memo_keys("table_scan", path)) == 1
+
+
+def test_footer_row_count_follows_spark_path_filter(spark, tmp_path):
+    """scan_row_count answers from parquet footers, so it must skip
+    what Spark's file index skips: a ``_temporary/`` part file left by
+    an interrupted write is not table data. A data file without the
+    ``.parquet`` suffix (Spark still reads it) makes the footer path
+    give up and count through Spark."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from dynamodb_streaming_datalake_spark.sources import readers
 
     d = str(tmp_path)
-    spark.range(3).selectExpr("id AS a").write.mode("overwrite").parquet(
-        f"{d}/t.parquet"
-    )
-    df1 = readers.read_table(spark, d, "t")
-    df2 = readers.read_table(spark, d, "t")
-    assert df2 is df1  # the handle, not a rebuilt plan
-    key1 = (spark, *readers._table_path_key(d, "t"))
-    assert key1 in readers._DF_CACHE
-    _time.sleep(0.01)
-    spark.range(5).selectExpr("id AS a").write.mode("overwrite").parquet(
-        f"{d}/t.parquet"
-    )
-    df3 = readers.read_table(spark, d, "t")
-    assert df3 is not df1
-    assert df3.count() == 5  # new data visible through the new handle
-    assert key1 not in readers._DF_CACHE  # stale handle evicted
+    path = f"{d}/t.parquet"
+    spark.range(3).coalesce(1).selectExpr("id AS a").write.parquet(path)
+    stray = tmp_path / "t.parquet" / "_temporary" / "0"
+    stray.mkdir(parents=True)
+    pq.write_table(pa.table({"a": list(range(10))}), stray / "part-0.parquet")
+    df = readers.read_table(spark, d, "t")
+    assert readers.scan_row_count(df) == df.count() == 3
+
+    part = next(p for p in (tmp_path / "t.parquet").iterdir() if p.suffix == ".parquet")
+    shutil.copy(part, tmp_path / "t.parquet" / "part-extra")
+    df = readers.read_table(spark, d, "t")
+    assert readers.scan_row_count(df) == df.count() == 6
 
 
 def test_fan_out_partition_probe_memoized(spark, sf_smoke):

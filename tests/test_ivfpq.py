@@ -21,7 +21,6 @@ from dynamodb_streaming_datalake_spark.operators.similarity import (
     _adc_fold_and_rank,
     _ivfpq_candidates,
     _pq_assign,
-    _pq_cache_key,
     _pq_filtered_pairs,
     _pq_lut,
     _pq_subvectors,
@@ -36,7 +35,7 @@ from dynamodb_streaming_datalake_spark.sources.readers import read_table
 def _pq_parts(spark, sf_dir):
     e = read_table(spark, sf_dir, "embeddings")
     sub = _pq_subvectors(e)
-    tcb = _pq_trained_codebook(sub, cache_key=_pq_cache_key(sf_dir))
+    tcb = _pq_trained_codebook(sub, sf_dir=sf_dir)
     return e, sub, tcb
 
 
@@ -180,43 +179,56 @@ def test_ivfpq_vs_exhaustive_adc_volume(spark, sf_smoke):
     assert q_ann_ivfpq(spark, sf_smoke).count() == PQ_NQ * PQ_TOPK
 
 
-def test_pq_codebook_cache_is_session_agnostic(spark, sf_smoke):
-    """The trained-codebook cache stores plain Python rows, not a
-    DataFrame: a second SparkSession in the same process gets a frame
-    rebuilt from those rows (bit-identical — float64 round-trips the
-    driver exactly), never a frame bound to the first session. Also
-    pins the eviction contract: a new mtime for the same path replaces
-    that path's entry instead of accumulating."""
+def test_pq_codebook_cache_is_session_agnostic(spark, sf_smoke, tmp_path):
+    """The trained-codebook memo (kind ``pq_codebook``) stores plain
+    Python rows, not a DataFrame, under no session: another
+    SparkSession in the same process gets a frame rebuilt from those
+    rows (bit-identical — float64 round-trips the driver exactly) and
+    bound to ITSELF, without retraining. Also pins the eviction rule:
+    a new stamp for the same embeddings file retrains and replaces
+    that file's entry instead of accumulating."""
+    import os
+    import shutil
+
+    from dynamodb_streaming_datalake_spark import cache
     from dynamodb_streaming_datalake_spark.operators.similarity import (
-        _PQ_TCB_CACHE,
-        _pq_cache_key,
-        _pq_cache_put,
         _pq_subvectors,
         _pq_trained_codebook,
     )
 
-    key = _pq_cache_key(sf_smoke)
+    def snap(df):
+        return {(r["s"], r["code"]): tuple(r["c"]) for r in df.collect()}
+
+    stats = cache.STATS["pq_codebook"]
     sub = _pq_subvectors(read_table(spark, sf_smoke, "embeddings"))
-    first = {
-        (r["s"], r["code"]): tuple(r["c"])
-        for r in _pq_trained_codebook(sub, cache_key=key).collect()
-    }
-    assert key in _PQ_TCB_CACHE
-    # a "different session" is represented by the same rows re-hydrated:
-    # the cached payload is pure python, so createDataFrame in ANY
-    # session reproduces the identical frame
-    again = {
-        (r["s"], r["code"]): tuple(r["c"])
-        for r in _pq_trained_codebook(sub, cache_key=key).collect()
-    }
-    assert first == again
-    # eviction: same path, new mtime -> old entry replaced, not kept
-    fake_new = (key[0], key[1] + 1)
-    _pq_cache_put(fake_new, _PQ_TCB_CACHE[key])
-    assert fake_new in _PQ_TCB_CACHE and key not in _PQ_TCB_CACHE
-    # restore the real entry for other tests sharing the process
-    _pq_cache_put(key, _PQ_TCB_CACHE[fake_new])
-    assert key in _PQ_TCB_CACHE and fake_new not in _PQ_TCB_CACHE
+    first = snap(_pq_trained_codebook(sub, sf_dir=sf_smoke))
+    builds, hits = stats["builds"], stats["hits"]
+    assert snap(_pq_trained_codebook(sub, sf_dir=sf_smoke)) == first
+    assert (stats["builds"], stats["hits"]) == (builds, hits + 1)
+    real = os.path.realpath(f"{sf_smoke}/embeddings.parquet")
+    (key,) = [k for k in cache._MEMO if k[0] == "pq_codebook" and k[2][0][0] == real]
+    assert key[1] is None  # session-free payload
+
+    other = spark.newSession()
+    sub2 = _pq_subvectors(read_table(other, sf_smoke, "embeddings"))
+    tcb2 = _pq_trained_codebook(sub2, sf_dir=sf_smoke)
+    assert tcb2.sparkSession is other
+    assert snap(tcb2) == first and stats["builds"] == builds
+
+    # eviction: same path, new stamp -> retrain, old entry replaced
+    shutil.copy(f"{sf_smoke}/embeddings.parquet", tmp_path / "embeddings.parquet")
+    emb = tmp_path / "embeddings.parquet"
+    os.chmod(emb, 0o644)
+    d = str(tmp_path)
+    sub3 = _pq_subvectors(read_table(spark, d, "embeddings"))
+    assert snap(_pq_trained_codebook(sub3, sf_dir=d)) == first
+    st = emb.stat()
+    os.utime(emb, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    sub3 = _pq_subvectors(read_table(spark, d, "embeddings"))
+    assert snap(_pq_trained_codebook(sub3, sf_dir=d)) == first
+    assert stats["builds"] == builds + 2
+    real = os.path.realpath(emb)
+    assert len([k for k in cache._MEMO if k[0] == "pq_codebook" and k[2][0][0] == real]) == 1
 
 
 def test_pq_family_recall_floors(spark, sf_oracle):

@@ -961,7 +961,6 @@ def test_pq_codes_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
     from the view must row-equal q_ann_serve_pq's persisted-index
     answer."""
     from dynamodb_streaming_datalake_spark.operators.similarity import (
-        _pq_cache_key,
         _pq_subvectors,
         _pq_trained_codebook,
         ivfpq_coarse_centroids,
@@ -977,9 +976,7 @@ def test_pq_codes_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
     from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
 
     e = read_table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
-    tcb = _pq_trained_codebook(
-        _pq_subvectors(e), cache_key=_pq_cache_key(sf_smoke)
-    )
+    tcb = _pq_trained_codebook(_pq_subvectors(e), sf_dir=sf_smoke)
     cents = ivfpq_coarse_centroids(e)
     src = str(tmp_path / "vec_src")
     e.repartition(3).write.parquet(src)

@@ -170,6 +170,11 @@ def test_embedding_gram_kernel_is_result_invisible(spark, sf_smoke):
     # partition-count invariance: the per-partition partials merge to
     # the same exact sums regardless of layout
     assert snap(_gram_sums_kernel(e.repartition(7))) == want
+    # the diagonal-only pass (the Mahalanobis screen's input) emits
+    # exactly the full pass's dim_a == dim_b rows
+    diag = {k: v for k, v in want.items() if k[0] == k[1]}
+    assert len(diag) == 64
+    assert snap(_gram_sums_kernel(e, diag_only=True)) == diag
 
 
 def test_pca_power_recovers_planted_component(spark):
