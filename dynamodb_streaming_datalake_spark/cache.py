@@ -14,9 +14,11 @@ counts) pass ``None`` and serve every session. A hit costs one
 ``os.stat`` per input and one dict lookup — no py4j call.
 
 One eviction rule: storing an entry drops the entries of the same kind
-and the same input paths whose stamp differs or whose session has been
-stopped (``sparkContext._jsc is None``). So the memo holds at most one
-stamp per (kind, paths) and live session.
+that are stale — an input whose stamp has changed since, or is gone —
+or whose session has been stopped (``sparkContext._jsc is None``). So
+the memo holds at most one stamp per (kind, paths) and live session,
+and an entry does not outlive its inputs by more than one store of its
+kind (a vacuumed snapshot version's schema goes at the next commit).
 
 On disk — ``ensure_cached_build``: builds that are materialized under
 ``$TMPDIR/<family>_cache_<version>_<sha16(sf_dir)>`` and reused by
@@ -93,13 +95,10 @@ def memo(
         STATS[kind]["hits"] += 1
         return value
     value = _timed_build(kind, build)
-    names = tuple(s[0] for s in stamps)
-    for k in list(_MEMO):
-        k_kind, k_session, k_stamps = k
-        if k_kind != kind or tuple(s[0] for s in k_stamps) != names:
-            continue
+    for k in [k for k in _MEMO if k[0] == kind]:
+        _, k_session, k_stamps = k
         stopped = k_session is not None and k_session.sparkContext._jsc is None
-        if k_stamps != stamps or stopped:
+        if stopped or any(_stamp(s[0]) != s for s in k_stamps):
             del _MEMO[k]
     _MEMO[key] = value
     return value
@@ -122,7 +121,13 @@ def ensure_cached_build(
     """Return the committed cache dir for (family, version, sf_dir),
     building it with ``build_fn(build_dir)`` if absent. See module
     docstring for the commit/sweep discipline. ``extra_stale_prefixes``
-    names legacy layouts to sweep alongside older versions."""
+    names legacy layouts to sweep alongside older versions.
+
+    The key is only (family, version, sf_dir): nothing notices that the
+    code which built a cached dir has changed. Bump a family's version
+    whenever its build code path changes (the build function or any
+    kernel it calls), or every reader keeps serving — and every oracle
+    check keeps re-proving — what the old code wrote."""
     final = cache_path(family, version, sf_dir)
     if os.path.isdir(final):
         STATS[family]["hits"] += 1

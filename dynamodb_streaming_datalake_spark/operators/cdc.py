@@ -2,8 +2,9 @@
 
 This is the Spark-first rebuild of the reference's Firehose Lambda
 (``/root/reference/resources/firehose_transformation.py:5-39``): every
-step is a pure DataFrame->DataFrame function built from JVM-side column
-expressions — no Python row loop, no UDF — so one code path serves both
+step is a pure function returning JVM-side column expressions — no
+Python row loop, no UDF — and the pipeline composes them into one
+filter and one select per output, so one code path serves both
 ``spark.read`` (batch backfill) and ``spark.readStream`` (live CDC), and
 whole-stage codegen keeps the hot path compiled.
 
@@ -41,10 +42,10 @@ from dynamodb_streaming_datalake_spark.model import (
 # ---------------------------------------------------------------------------
 
 
-def parse_envelope(df: DataFrame, json_col: str = "json") -> DataFrame:
+def parse_envelope(json_col: str = "json") -> Column:
     """``json.loads`` equivalent (``:34``): typed ``from_json`` against
     the declared envelope schema — schema-on-read, no inference pass."""
-    return df.withColumn("env", F.from_json(F.col(json_col), cdc_envelope_schema()))
+    return F.from_json(F.col(json_col), cdc_envelope_schema())
 
 
 # ---------------------------------------------------------------------------
@@ -52,16 +53,15 @@ def parse_envelope(df: DataFrame, json_col: str = "json") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def select_image(df: DataFrame, env_col: str = "env") -> DataFrame:
+def select_image(env_col: str = "env") -> Column:
     """INSERT/MODIFY -> NewImage; REMOVE -> OldImage
     (``firehose_transformation.py:6-10``). Unknown events yield a null
     image and are split off by ``route_errors``."""
     e = F.col(f"{env_col}.eventName")
-    return df.withColumn(
-        "image",
+    return (
         F.when(e.isin("INSERT", "MODIFY"), F.col(f"{env_col}.dynamodb.NewImage"))
         .when(e == "REMOVE", F.col(f"{env_col}.dynamodb.OldImage"))
-        .otherwise(F.lit(None).cast("map<string,map<string,string>>")),
+        .otherwise(F.lit(None).cast("map<string,map<string,string>>"))
     )
 
 
@@ -70,24 +70,23 @@ def select_image(df: DataFrame, env_col: str = "env") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def flatten_image(df: DataFrame, image_col: str = "image") -> DataFrame:
+def _untag(value: Column) -> Column:
+    return F.element_at(F.map_values(value), 1)
+
+
+def flatten_image(image: Column) -> Column:
     """``{attr: {typeTag: val}} -> {attr: val}`` dropping the type tag —
     the reference's per-record dict loop (``:12-14``) as one
     higher-order-function expression (JVM-side, codegen'd)."""
-    return df.withColumn(
-        "attrs",
-        F.transform_values(
-            F.col(image_col), lambda _k, v: F.element_at(F.map_values(v), 1)
-        ),
-    )
+    return F.transform_values(image, lambda _k, v: _untag(v))
 
 
-def project_attributes(df: DataFrame, attributes: tuple[str, ...]) -> DataFrame:
-    """Pivot the attrs map into declared string columns (the lake's
-    queryable shape; columns absent in a record become null)."""
-    cols = [F.col("attrs").getItem(a).alias(a) for a in attributes]
-    keep = [c for c in df.columns if c not in ("attrs",)]
-    return df.select(*keep, *cols)
+def project_attributes(image: Column, attributes: tuple[str, ...]) -> list[Column]:
+    """Pivot declared attributes into string columns (the lake's
+    queryable shape; attributes absent in a record become null) — each
+    is ``flatten_image``'s value for its key, untagged straight off the
+    image without building the whole flattened map."""
+    return [_untag(image.getItem(a)).alias(a) for a in attributes]
 
 
 # ---------------------------------------------------------------------------
@@ -95,24 +94,19 @@ def project_attributes(df: DataFrame, attributes: tuple[str, ...]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def enrich(
-    df: DataFrame,
-    env_col: str = "env",
-    ingestion_ts: Column | None = None,
-) -> DataFrame:
-    """Append ``Event`` + ``ingestion_timestamp``
-    (``firehose_transformation.py:18-19``). Pass a literal/derived
-    ``ingestion_ts`` for deterministic tests; default is processing time
-    exactly like the reference's ``datetime.now()``."""
+def enrich(env_col: str = "env", ingestion_ts: Column | None = None) -> dict[str, Column]:
+    """``Event`` + ``ingestion_timestamp``
+    (``firehose_transformation.py:18-19``), plus the change's own
+    ``event_time``. Pass a literal/derived ``ingestion_ts`` for
+    deterministic tests; default is processing time exactly like the
+    reference's ``datetime.now()``."""
     ts = ingestion_ts if ingestion_ts is not None else F.current_timestamp()
-    return (
-        df.withColumn("Event", F.col(f"{env_col}.eventName"))
-        .withColumn("ingestion_timestamp", ts.cast("string"))
-        .withColumn(
-            "event_time",
-            F.timestamp_seconds(F.col(f"{env_col}.dynamodb.ApproximateCreationDateTime")),
-        )
-    )
+    created = F.col(f"{env_col}.dynamodb.ApproximateCreationDateTime")
+    return {
+        "Event": F.col(f"{env_col}.eventName").alias("Event"),
+        "ingestion_timestamp": ts.cast("string").alias("ingestion_timestamp"),
+        "event_time": F.timestamp_seconds(created).alias("event_time"),
+    }
 
 
 def add_hour_partitions(df: DataFrame, ts_col: str = "ingestion_timestamp") -> DataFrame:
@@ -120,11 +114,8 @@ def add_hour_partitions(df: DataFrame, ts_col: str = "ingestion_timestamp") -> D
     ``yyyy/MM/dd/HH`` (``dynamodb-streaming-datalake-stack.ts:222``) as
     first-class partition columns so Catalyst prunes them (B3)."""
     t = F.col(ts_col).cast("timestamp")
-    return (
-        df.withColumn("y", F.year(t))
-        .withColumn("m", F.month(t))
-        .withColumn("d", F.dayofmonth(t))
-        .withColumn("h", F.hour(t))
+    return df.withColumns(
+        {"y": F.year(t), "m": F.month(t), "d": F.dayofmonth(t), "h": F.hour(t)}
     )
 
 
@@ -133,28 +124,41 @@ def add_hour_partitions(df: DataFrame, ts_col: str = "ingestion_timestamp") -> D
 # ---------------------------------------------------------------------------
 
 
-def route_errors(df: DataFrame, env_col: str = "env") -> tuple[DataFrame, DataFrame]:
-    """Split ok vs error rows. Errors = unparseable JSON, unknown
-    eventName (the reference would crash: NameError on unbound
-    ``item_json``), or a missing image. Mirrors Firehose's
+def route_errors(image: Column, env_col: str = "env") -> tuple[Column, Column]:
+    """(is-ok predicate, error ``result`` label). Errors = unparseable
+    JSON, unknown eventName (the reference would crash: NameError on
+    unbound ``item_json``), or a missing image. Mirrors Firehose's
     ``result=<type>`` error prefix routing
     (``dynamodb-streaming-datalake-stack.ts:221``)."""
     is_parsed = F.col(env_col).isNotNull() & F.col(f"{env_col}.eventName").isNotNull()
     is_known = F.col(f"{env_col}.eventName").isin(*KNOWN_EVENTS)
-    has_image = F.col("image").isNotNull()
-    ok = df.where(is_parsed & is_known & has_image)
-    err = df.where(~(is_parsed & is_known & has_image)).withColumn(
-        "result",
+    result = (
         F.when(~is_parsed, F.lit("MalformedRecord"))
         .when(~is_known, F.lit("UnknownEvent"))
-        .otherwise(F.lit("MissingImage")),
+        .otherwise(F.lit("MissingImage"))
     )
-    return ok, err
+    return is_parsed & is_known & image.isNotNull(), result
 
 
 # ---------------------------------------------------------------------------
 # composed pipeline
 # ---------------------------------------------------------------------------
+
+
+def _parse_and_route(raw: DataFrame, json_col: str) -> tuple[DataFrame, Column, DataFrame]:
+    """(ok rows still to be projected, their image, error rows). The
+    envelope is parsed once into ``env`` next to ``raw``'s own columns,
+    which a caller's ``ingestion_ts`` may read."""
+    env = raw.withColumn("env", parse_envelope(json_col))
+    image = select_image()
+    is_ok, result = route_errors(image)
+    err = env.where(~is_ok).select(
+        F.col(json_col).alias("raw"),
+        F.col("env.eventID").alias("eventID"),
+        F.col("env.eventName").alias("eventName"),
+        result.alias("result"),
+    )
+    return env.where(is_ok), image, err
 
 
 def cdc_transform(
@@ -169,22 +173,13 @@ def cdc_transform(
     pivots the attrs map into declared columns; None keeps the generic
     ``attrs`` map (schemaless mode, like the reference lake).
     """
-    env = parse_envelope(raw, json_col)
-    dispatched = select_image(env)
-    flat = flatten_image(dispatched)
-    enriched = enrich(flat, ingestion_ts=ingestion_ts)
-    ok, err = route_errors(enriched)
-    keep = ["eventID", "event_time", "attrs", "Event", "ingestion_timestamp"]
-    ok = ok.select(F.col("env.eventID").alias("eventID"), *keep[1:])
+    ok, image, err = _parse_and_route(raw, json_col)
+    d = enrich(ingestion_ts=ingestion_ts)
+    head = [F.col("env.eventID").alias("eventID"), d["event_time"]]
+    tail = [d["Event"], d["ingestion_timestamp"]]
     if attributes:
-        ok = project_attributes(ok, attributes)
-    err = err.select(
-        F.col(json_col).alias("raw"),
-        F.col("env.eventID").alias("eventID"),
-        F.col("env.eventName").alias("eventName"),
-        "result",
-    )
-    return ok, err
+        return ok.select(*head, *tail, *project_attributes(image, attributes)), err
+    return ok.select(*head, flatten_image(image).alias("attrs"), *tail), err
 
 
 # ---------------------------------------------------------------------------
@@ -214,9 +209,7 @@ _TAG_DECODERS = {
 }
 
 
-def project_attributes_typed(
-    df: DataFrame, spec: dict[str, str], image_col: str = "image"
-) -> DataFrame:
+def project_attributes_typed(image: Column, spec: dict[str, str]) -> list[Column]:
     """Typed projection straight off the *tagged* image (not the
     stringly ``attrs``): ``spec`` maps attribute -> AttributeValue tag,
     e.g. ``{"salary": "N", "active": "BOOL", "tags": "L"}``. Each column
@@ -228,10 +221,8 @@ def project_attributes_typed(
     for attr, tag in spec.items():
         if tag not in _TAG_DECODERS:
             raise ValueError(f"unknown AttributeValue tag {tag!r} for {attr!r}")
-        raw = F.col(image_col).getItem(attr).getItem(tag)
-        cols.append(_TAG_DECODERS[tag](raw).alias(attr))
-    keep = [c for c in df.columns if c not in spec]
-    return df.select(*keep, *cols)
+        cols.append(_TAG_DECODERS[tag](image.getItem(attr).getItem(tag)).alias(attr))
+    return cols
 
 
 def cdc_transform_typed(
@@ -244,24 +235,11 @@ def cdc_transform_typed(
     attributes land with native types instead of the reference's
     string coercion. Use for analytics zones; use ``cdc_transform`` for
     reference-faithful lake parity."""
-    env = parse_envelope(raw, json_col)
-    dispatched = select_image(env)
-    enriched = enrich(dispatched, ingestion_ts=ingestion_ts)
-    ok, err = route_errors(enriched)
-    ok = project_attributes_typed(
-        ok.select(
-            F.col("env.eventID").alias("eventID"),
-            "event_time",
-            "image",
-            "Event",
-            "ingestion_timestamp",
-        ),
-        spec,
-    ).drop("image")
-    err = err.select(
-        F.col(json_col).alias("raw"),
-        F.col("env.eventID").alias("eventID"),
-        F.col("env.eventName").alias("eventName"),
-        "result",
-    )
-    return ok, err
+    ok, image, err = _parse_and_route(raw, json_col)
+    base = {
+        "eventID": F.col("env.eventID").alias("eventID"),
+        **enrich(ingestion_ts=ingestion_ts),
+    }
+    order = ("eventID", "event_time", "Event", "ingestion_timestamp")
+    kept = [base[n] for n in order if n not in spec]
+    return ok.select(*kept, *project_attributes_typed(image, spec)), err

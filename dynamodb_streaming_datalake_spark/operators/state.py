@@ -8,9 +8,13 @@ key is ``(id, name)``
 
 Two physical strategies for top-1-per-key, chosen for scale:
 
-* ``agg`` (default): ``max_by(col, struct(version...))`` under a plain
-  groupBy — partial aggregation runs map-side, so at 100 TB the shuffle
+* ``agg`` (default): one ``max_by(struct(payload...),
+  struct(version...))`` under a plain groupBy, expanded back into
+  columns — partial aggregation runs map-side, so at 100 TB the shuffle
   carries one row per key per input partition instead of every version.
+  The payload rides as the max_by VALUE, never as an ordering, so a
+  map column (the schemaless ``attrs``) is fine where ``max(struct)``
+  would fail to order it.
 * ``window``: ``row_number() over (partition by key order by version
   desc) = 1`` — full shuffle + per-partition sort of ALL versions;
   kept because it is the standard formulation and is what the DuckDB
@@ -43,8 +47,9 @@ def latest_state(
     payload = [c for c in df.columns if c not in keys]
     if method == "agg":
         version = F.struct(*[F.col(c) for c in order_by])
-        aggs = [F.max_by(F.col(c), version).alias(c) for c in payload]
-        return df.groupBy(*keys).agg(*aggs)
+        row = F.struct(*[F.col(c) for c in payload])
+        latest = F.max_by(row, version).alias("__latest")
+        return df.groupBy(*keys).agg(latest).select(*keys, "__latest.*")
     if method == "window":
         w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
         return (

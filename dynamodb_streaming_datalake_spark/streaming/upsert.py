@@ -15,11 +15,13 @@ surrounding plumbing; the interface is format-agnostic on purpose.
 Scale: each upsert shuffles (previous snapshot ∪ batch) once on the
 key — the snapshot side is bounded by key cardinality (table size,
 REMOVE keys persist as one tombstone row each), not stream history.
-Batches are pre-reduced to one row per key before the merge, so the
-union's streaming side is bounded by keys-touched, not
-events-received. Tombstones are kept in storage (filtered at read) so
-an out-of-order older event can never resurrect a deleted key — it
-loses the merge to the tombstone's newer order key.
+Partial aggregation reduces the batch map-side, so the shuffle carries
+at most one batch row per key per input partition; one shuffle per
+commit. A committed version's schema is known from the write, so
+neither the next merge nor a serve read runs a footer-inference job.
+Tombstones are kept in storage (filtered at read) so an out-of-order
+older event can never resurrect a deleted key — it loses the merge to
+the tombstone's newer order key.
 """
 
 from __future__ import annotations
@@ -28,26 +30,39 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from dynamodb_streaming_datalake_spark.cache import memo
 from dynamodb_streaming_datalake_spark.operators.state import latest_state
+from dynamodb_streaming_datalake_spark.sources.readers import _table_schema
 
 
 def _versions(spark: SparkSession, snapshot_dir: str) -> list[int]:
+    """Committed versions, ascending: one glob for the ``_SUCCESS``
+    markers, so the cost does not grow a namenode call per version."""
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(snapshot_dir)
-    fs = path.getFileSystem(conf)
-    if not fs.exists(path):
-        return []
-    out = []
-    for status in fs.listStatus(path):
-        name = status.getPath().getName()
-        if name.startswith("v=") and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(status.getPath(), "_SUCCESS")
-        ):
-            out.append(int(name[2:]))
-    return sorted(out)
+    marker = jvm.org.apache.hadoop.fs.Path(f"{snapshot_dir}/v=*/_SUCCESS")
+    found = marker.getFileSystem(conf).globStatus(marker) or []
+    return sorted(int(s.getPath().getParent().getName()[2:]) for s in found)
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and map value nullable — the
+    schema Spark reports for a Parquet file it reads back."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 def current_snapshot(
@@ -82,7 +97,8 @@ def current_snapshot(
     if manifest is not None:
         df = read_segmented(spark, snapshot_dir, manifest)
     else:
-        df = spark.read.parquet(f"{snapshot_dir}/v={version}")
+        path = f"{snapshot_dir}/v={version}"
+        df = spark.read.schema(_table_schema(spark, path)).parquet(path)
     return df.where(F.col(event_col) != delete_event) if live_only else df
 
 
@@ -96,10 +112,13 @@ def upsert_snapshot(
 ) -> None:
     """Merge one micro-batch into the snapshot, writing version ``version``.
 
-    Batch rows are reduced to newest-per-key first; the previous
-    snapshot's rows lose ties only to strictly newer order keys, so
-    replayed batches (checkpoint recovery re-running foreachBatch) are
-    idempotent: re-merging the same rows produces the same snapshot.
+    One ``latest_state`` over (previous snapshot ∪ batch): partial
+    aggregation reduces the batch per key map-side, so the commit is a
+    single shuffle. Every row of a key competes on the same order key,
+    so replayed batches (checkpoint recovery re-running foreachBatch)
+    are idempotent: re-merging the same rows produces the same snapshot.
+    Once the write returns, the version's schema is stored in the
+    ``table_schema`` memo, so reading it back infers nothing.
 
     Replay of an ALREADY-COMMITTED version is a no-op: if ``v=<version>``
     has a _SUCCESS marker the batch's merge result is durably on disk,
@@ -111,16 +130,16 @@ def upsert_snapshot(
     """
     if version in _versions(spark, snapshot_dir):
         return
-    reduced = latest_state(batch_df, keys, order_by)
     prev = current_snapshot(spark, snapshot_dir, live_only=False)
-    merged = (
-        reduced
+    rows = (
+        batch_df
         if prev is None
-        else latest_state(
-            prev.unionByName(reduced, allowMissingColumns=True), keys, order_by
-        )
+        else prev.unionByName(batch_df, allowMissingColumns=True)
     )
-    merged.write.mode("overwrite").parquet(f"{snapshot_dir}/v={version}")
+    merged = latest_state(rows, keys, order_by)
+    path = f"{snapshot_dir}/v={version}"
+    merged.write.mode("overwrite").parquet(path)
+    memo("table_schema", (path,), lambda: _as_nullable(merged.schema))
 
 
 def start_snapshot_maintenance(
@@ -157,30 +176,11 @@ def start_snapshot_maintenance(
     return writer.start()
 
 
-def vacuum_snapshots(
-    spark: SparkSession, snapshot_dir: str, keep_last: int = 2
-) -> list[int]:
-    """Delete all but the newest ``keep_last`` committed versions
-    (time travel keeps every version readable until vacuumed — storage
-    grows by one snapshot per micro-batch otherwise). Returns the
-    version numbers removed. Never touches the current version;
-    ``keep_last`` is clamped to >= 1."""
-    keep_last = max(1, keep_last)
-    vs = _versions(spark, snapshot_dir)
-    doomed = vs[:-keep_last]
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    for v in doomed:
-        path = jvm.org.apache.hadoop.fs.Path(f"{snapshot_dir}/v={v}")
-        path.getFileSystem(conf).delete(path, True)
-    return doomed
-
-
 # ---------------------------------------------------------------------------
 # driver-gated MVCC lifecycle (round 5)
 # ---------------------------------------------------------------------------
 
-_MVCC_VERSION = "v1"
+_MVCC_VERSION = "v2"
 
 
 def _ensure_mvcc_snapshots(spark: SparkSession, sf_dir: str) -> str:
@@ -276,8 +276,8 @@ def _register() -> None:
         filtered). A merge that lost a tombstone, resurrected a deleted
         key, or mutated a committed version would hash-diverge.
 
-        Scale: each upsert shuffles (prev snapshot ∪ pre-reduced batch)
-        once on the key; committed versions are immutable directories,
+        Scale: each upsert shuffles (prev snapshot ∪ batch) once on the
+        key, the batch reduced map-side; committed versions are immutable directories,
         so time travel is a plain pruned read."""
         import os
 
@@ -332,7 +332,7 @@ def vacuum_snapshots(
     return doomed
 
 
-_VACUUM_VERSION = "v1"
+_VACUUM_VERSION = "v2"
 
 
 def _ensure_vacuumed_snapshots(spark: SparkSession, sf_dir: str) -> str:

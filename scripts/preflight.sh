@@ -31,7 +31,9 @@ python scripts/refresh_budgets.py --check
 # dead-code guard: a module-level function whose name occurs nowhere
 # else in the repo's .py files is unreferenced (pytest's test_*
 # functions, @query-registered queries and names built by a
-# globals()[f"<prefix>{...}"] lookup are reached by name lookup)
+# globals()[f"<prefix>{...}"] lookup are reached by name lookup); a
+# module-level function or class defined twice in one module is dead
+# in its first definition, which the second replaces at import
 python - <<'EOF'
 import ast, os, re, sys
 from collections import Counter
@@ -45,10 +47,22 @@ for root, dirs, files in os.walk("."):
             srcs[p] = open(p, encoding="utf-8").read()
 words = Counter(w for s in srcs.values() for w in re.findall(r"\w+", s))
 looked_up = tuple(re.findall(r'globals\(\)\[f"(\w+)\{', "\n".join(srcs.values())))
+trees = {p: ast.parse(s, p) for p, s in sorted(srcs.items())}
+defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+twice = []
+for p, tree in trees.items():
+    seen = set()
+    for n in tree.body:
+        if isinstance(n, defs):
+            if n.name in seen:
+                twice.append(f"{p}:{n.lineno} {n.name}")
+            seen.add(n.name)
+if twice:
+    sys.exit("module-level names defined twice in one module:\n" + "\n".join(twice))
 dead = [
     f"{p}:{n.lineno} {n.name}"
-    for p, s in sorted(srcs.items())
-    for n in ast.parse(s, p).body
+    for p, tree in trees.items()
+    for n in tree.body
     if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
     and not n.name.startswith(("test_", *looked_up))
     and not any(

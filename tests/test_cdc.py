@@ -133,6 +133,33 @@ def test_agg_and_window_latest_state_agree(spark):
     )
 
 
+def test_ingestion_ts_may_read_raw_columns(spark):
+    """``ingestion_ts`` may name a column of ``raw`` itself (the CDC
+    zone passes its events' ``ts``), not only ``env`` fields: the
+    transform keeps ``raw``'s columns visible next to the parsed
+    envelope, in the stringly, schemaless and typed forms alike."""
+    from dynamodb_streaming_datalake_spark.operators.cdc import cdc_transform_typed
+
+    fx = generate_fixture(n_keys=5, n_events=30, unknown_rate=0.1)
+    lines = fx.json_lines() + ["{not json"]
+    raw = spark.createDataFrame(
+        [(line, 1_700_000_000 + i) for i, line in enumerate(lines)], "json string, ts long"
+    )
+    stamp = F.timestamp_seconds(F.col("ts"))
+    want = {
+        str(r["stamp"]) for r in raw.select(stamp.alias("stamp")).collect()
+    }
+    for ok, err in (
+        cdc_transform(raw, attributes=ATTRS, ingestion_ts=stamp),
+        cdc_transform(raw, ingestion_ts=stamp),
+        cdc_transform_typed(raw, {"salary": "N"}, ingestion_ts=stamp),
+    ):
+        got = {r["ingestion_timestamp"] for r in ok.collect()}
+        assert got and got <= want
+        assert ok.count() + err.count() == len(lines)
+        assert err.where(F.col("result") == "MalformedRecord").count() == 1
+
+
 def test_typed_decode(spark):
     """SURVEY §7 risk register: the typed decode path — N -> decimal,
     BOOL -> boolean, L/M -> parsed structures — alongside the

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import glob
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from dynamodb_streaming_datalake_spark.operators.cdc import cdc_transform
@@ -377,6 +379,150 @@ def test_upsert_replay_of_committed_version_is_noop(spark, tmp_path):
     upsert_snapshot(spark, ok, snap, keys, order, version=0)
     got = sorted(map(tuple, current_snapshot(spark, snap, live_only=False).collect()))
     assert got == want
+
+
+def _in_job_group(spark, group, fn):
+    """Run ``fn()`` under Spark job group ``group``; return its result,
+    the number of jobs it ran and the number of stages those jobs
+    planned (skipped ones included)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    return out, len(jobs), len(stages)
+
+
+def _ok_rows(spark, lines, schemaless=False):
+    """The ok side of ``cdc_transform`` over ``lines``. Schemaless mode
+    keeps the ``attrs`` map and lifts only the key out of it."""
+    raw = spark.createDataFrame([(l,) for l in lines], "json string")
+    ok, _ = cdc_transform(
+        raw, attributes=None if schemaless else ATTRS, ingestion_ts=EVENT_TS()
+    )
+    if schemaless:
+        attrs = F.col("attrs")
+        ok = ok.select(attrs["id"].alias("id"), attrs["name"].alias("name"), "*")
+    return ok
+
+
+def _canon(rows) -> list[tuple]:
+    """Rows as sortable tuples (map values as sorted item tuples); the
+    key leads every row, so rows never compare past it."""
+    return sorted(
+        tuple(tuple(sorted(v.items())) if isinstance(v, dict) else v for v in r)
+        for r in rows
+    )
+
+
+def test_snapshot_commit_is_one_shuffle_and_reads_infer_nothing(spark, tmp_path):
+    """A commit on top of a previous version is one shuffle (at most 3
+    stages planned; a separate batch pre-reduce planned 7), and a serve
+    read of a committed version runs no job before its action: the
+    write seeded the version's schema, and that seed is exactly the
+    schema Spark reads back from the files."""
+    from dynamodb_streaming_datalake_spark import cache
+    from dynamodb_streaming_datalake_spark.streaming.upsert import (
+        current_snapshot,
+        upsert_snapshot,
+    )
+
+    fx = generate_fixture(n_keys=40, n_events=300, unknown_rate=0.0)
+    ok = _ok_rows(spark, fx.json_lines())
+    snap = str(tmp_path / "snap")
+    keys, order = ["id", "name"], ["event_time", "eventID"]
+    upsert_snapshot(
+        spark, ok.where(F.col("eventID") < "ev-250"), snap, keys, order, version=0
+    )
+    _, jobs, stages = _in_job_group(
+        spark, "commit", lambda: upsert_snapshot(spark, ok, snap, keys, order, version=1)
+    )
+    assert jobs >= 1 and stages <= 3, (jobs, stages)
+
+    df, jobs, _ = _in_job_group(spark, "serve", lambda: current_snapshot(spark, snap))
+    assert jobs == 0
+    want = reconstruct_table(ok, keys, order)
+    assert df.count() == want.count()
+
+    for v in (0, 1):
+        path = f"{snap}/v={v}"
+        seeded = cache.memo(
+            "table_schema", (path,), lambda: pytest.fail(f"v={v} schema not seeded")
+        )
+        assert seeded == spark.read.parquet(path).schema
+
+
+@pytest.mark.parametrize("schemaless", [False, True], ids=["attributes", "attrs_map"])
+def test_snapshot_versions_replay_late_events_and_tombstones(spark, tmp_path, schemaless):
+    """Four commits of shuffled events — every batch after the first
+    carries events older than ones already committed, REMOVEs included:
+    each version equals ``reconstruct_table`` over all events so far,
+    and time travel to every earlier version still serves its prefix.
+    Both the projected-attributes shape and the schemaless ``attrs``
+    map (which ``latest_state`` carries as a max_by value, never as an
+    ordering) go through the same kernel."""
+    import random
+
+    from dynamodb_streaming_datalake_spark.streaming.upsert import (
+        current_snapshot,
+        upsert_snapshot,
+    )
+
+    lines = generate_fixture(n_keys=25, n_events=240, unknown_rate=0.0, seed=11).json_lines()
+    random.Random(11).shuffle(lines)
+    batches = [lines[i::4] for i in range(4)]
+    snap = str(tmp_path / "snap")
+    keys, order = ["id", "name"], ["event_time", "eventID"]
+    prefixes = []
+    for v, batch in enumerate(batches):
+        upsert_snapshot(spark, _ok_rows(spark, batch, schemaless), snap, keys, order, version=v)
+        seen = [l for b in batches[: v + 1] for l in b]
+        want = reconstruct_table(_ok_rows(spark, seen, schemaless), keys, order)
+        prefixes.append((want.columns, _canon(want.collect())))
+        got = current_snapshot(spark, snap).select(*want.columns)
+        assert _canon(got.collect()) == prefixes[-1][1], f"v={v}"
+    stored = current_snapshot(spark, snap, live_only=False)
+    assert stored.where(F.col("Event") == "REMOVE").count() > 0  # tombstones kept
+    for v, (cols, rows) in enumerate(prefixes[:-1]):
+        got = current_snapshot(spark, snap, version=v).select(*cols)
+        assert _canon(got.collect()) == rows, f"time travel to v={v}"
+
+
+def test_snapshot_schema_memo_does_not_outlive_vacuumed_versions(spark, tmp_path):
+    """Each commit seeds one schema memo entry; vacuumed versions' entries
+    are gone once the next commit stores its own."""
+    import os
+
+    from dynamodb_streaming_datalake_spark import cache
+    from dynamodb_streaming_datalake_spark.streaming.upsert import (
+        upsert_snapshot,
+        vacuum_snapshots,
+    )
+
+    fx = generate_fixture(n_keys=10, n_events=60, unknown_rate=0.0)
+    ok = _ok_rows(spark, fx.json_lines())
+    snap = str(tmp_path / "snap")
+    keys, order = ["id", "name"], ["event_time", "eventID"]
+
+    def memo_versions() -> list[str]:
+        root = os.path.realpath(snap)
+        return sorted(
+            os.path.basename(k[2][0][0])
+            for k in cache._MEMO
+            if k[0] == "table_schema" and os.path.dirname(k[2][0][0]) == root
+        )
+
+    for v in range(4):
+        upsert_snapshot(spark, ok, snap, keys, order, version=v)
+    assert memo_versions() == ["v=0", "v=1", "v=2", "v=3"]
+    assert vacuum_snapshots(spark, snap, keep_last=2) == [0, 1]
+    upsert_snapshot(spark, ok, snap, keys, order, version=4)
+    assert memo_versions() == ["v=2", "v=3", "v=4"]
 
 
 def test_processing_time_trigger_drains_continuously(spark, tmp_path):
