@@ -31,7 +31,7 @@ ORACLE: dict[str, str] = {}
 # PRIORITY derived by scripts/rotate_window.py from
 # CORRECTNESS_r*.json (latest: r17).  Do not hand-order;
 # regenerate after each driver round.  Derivation: the
-# 35 never-driver-proven names lead, then proofs
+# 56 never-driver-proven names lead, then proofs
 # ascending by round (stable tie-break: prior order).
 PRIORITY: tuple[str, ...] = (
     # -- never driver-proven --
@@ -70,6 +70,27 @@ PRIORITY: tuple[str, ...] = (
     "q_ann_pq_filtered",
     "q_mmr_diverse",
     "q_embedding_covariance",
+    "q_mvcc_timetravel",
+    "q_dedup_stream",
+    "q_bloom_stream",
+    "q_ann_index_stream",
+    "q_ohlc_stream",
+    "q_sprt_stream",
+    "q_mvcc_changefeed",
+    "q_decontaminate_stream",
+    "q_probe_stream",
+    "q_incr_agg_stream",
+    "q_view_compaction",
+    "q_changefeed_refresh",
+    "q_partial_update_stream",
+    "q_mvcc_vacuum",
+    "q_cms_stream",
+    "q_hll_stream",
+    "q_bandit_stream",
+    "q_ri_audit_incr",
+    "q_theta_stream",
+    "q_hll_rolling_stream",
+    "q_ams_stream",
     # -- proven r11 --
     "q_media_jpeg",
     "q_media_gif",
@@ -86,7 +107,6 @@ PRIORITY: tuple[str, ...] = (
     "q_avro_scan",
     "q_warc_ingest",
     "q_stream_attribution",
-    "q_mvcc_timetravel",
     "q1_pricing_summary",
     "q3_shipping_priority",
     "q_latest_state_per_key",
@@ -130,8 +150,6 @@ PRIORITY: tuple[str, ...] = (
     "q_lift_deciles",
     "q_markov_eval",
     "q_srm_check",
-    "q_dedup_stream",
-    "q_bloom_stream",
     "q_text_repetition",
     "q_doc_chunks",
     "q_tfidf_terms",
@@ -167,9 +185,6 @@ PRIORITY: tuple[str, ...] = (
     "q_sprt_monitor",
     "q_conformal_calibrate",
     "q_diff_in_diff",
-    "q_ann_index_stream",
-    "q_ohlc_stream",
-    "q_sprt_stream",
     "q_window_session",
     "q5_nation_revenue",
     "q_customers_without_orders",
@@ -225,9 +240,6 @@ PRIORITY: tuple[str, ...] = (
     "q_quality_resample",
     "q_grouped_regression",
     "q_probe_calibration",
-    "q_mvcc_changefeed",
-    "q_decontaminate_stream",
-    "q_probe_stream",
     "q13_customer_distribution",
     "q15_top_supplier",
     "q17_small_quantity_revenue",
@@ -239,7 +251,6 @@ PRIORITY: tuple[str, ...] = (
     "q16_parts_supplier_counts",
     "q20_dominant_part_suppliers",
     "q_asof_join",
-    "q_incr_agg_stream",
     "q_pit_join",
     "q_interp_linear",
     "q_anomaly_zscore",
@@ -249,7 +260,6 @@ PRIORITY: tuple[str, ...] = (
     "q_skew_diagnose",
     "q_salted_agg",
     # -- proven r15 --
-    "q_view_compaction",
     "q_dedup_ngram_jaccard",
     "q_dedup_minhash_lsh",
     "q_dedup_simhash",
@@ -266,8 +276,6 @@ PRIORITY: tuple[str, ...] = (
     "q_probe_auc",
     "q_linear_probe_k",
     "q_grouped_regression_k",
-    "q_changefeed_refresh",
-    "q_partial_update_stream",
     "q_encoding_advisor",
     "q_cms_heavy_hitters",
     "q_hll_distinct",
@@ -275,9 +283,6 @@ PRIORITY: tuple[str, ...] = (
     "q_analyze_ndv",
     "q_join_estimate",
     "q_geo_join",
-    "q_mvcc_vacuum",
-    "q_cms_stream",
-    "q_hll_stream",
     "q_range_join_clicks",
     "q_pivot_event_matrix",
     "q_event_moments",
@@ -333,7 +338,6 @@ PRIORITY: tuple[str, ...] = (
     "q_quantile_normalize",
     "q_rfm_segments",
     "q_join_order_dp",
-    "q_bandit_stream",
     "q_freshness_monitor",
     "q_bloom_fpr_sweep",
     "q_winsorize",
@@ -343,7 +347,6 @@ PRIORITY: tuple[str, ...] = (
     "q_l_diversity",
     # -- proven r17 --
     "q_scd2_from_patches",
-    "q_ri_audit_incr",
     "q_partition_advisor",
     "q_zonemap_prune",
     "q_theta_distinct",
@@ -361,8 +364,6 @@ PRIORITY: tuple[str, ...] = (
     "q_hard_negatives",
     "q_negative_sampling",
     "q_semdedup",
-    "q_theta_stream",
-    "q_hll_rolling_stream",
     "q_dedup_simhash_pairs",
     "q_dedup_embedding",
     "q_dedup_embedding_trained",
@@ -381,7 +382,6 @@ PRIORITY: tuple[str, ...] = (
     "q_ams_f2",
     "q_cuped",
     "q_stream_attribution_outer",
-    "q_ams_stream",
     "q_media_png",
     "q_media_mp4",
     "q_media_mp3",

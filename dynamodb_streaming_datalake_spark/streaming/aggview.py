@@ -2,92 +2,45 @@
 
 The batch path (operators.state.q_incr_agg) merges a delta's partials
 into a pre-existing view once. This module keeps that view
-*continuously materialized*: a ``foreachBatch`` sink folds each
-micro-batch's partials into a versioned Parquet view with the SAME
-merge kernel (state.merge_agg_partials), the same MVCC ``v=<n>``
-directory discipline as streaming.upsert, and the same crash-replay
-guard (an already-committed version is a no-op, which is what makes a
+*continuously materialized*: each micro-batch's partials fold into a
+versioned Parquet view with the SAME merge kernel
+(state.merge_agg_partials), as a whole-directory view of the
+``streaming.views`` kernel. Its replay guard is what makes this
 non-idempotent fold safe under checkpoint recovery: either the version
-committed — skip — or it didn't — re-merge from the previous version).
+committed — skip — or it didn't — re-merge from the previous version.
 
 Scale: each refresh is O(|batch keys| + |view|): the batch pre-reduces
-to its distinct keys map-side, the merge joins on the view key, and
-with the view bucketed by key the join is shuffle-free. The view is
-bounded by key cardinality, not stream history.
+to its distinct keys map-side, and ``merge_agg_partials`` is a
+full-outer join of view and batch partials on the key. The view is
+written unbucketed, so every refresh shuffles the whole view: the
+merge is not shuffle-free. The view is bounded by key cardinality,
+not stream history.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from dynamodb_streaming_datalake_spark.operators.state import (
     agg_event_partials,
     merge_agg_partials,
 )
-from dynamodb_streaming_datalake_spark.streaming.upsert import (
-    _versions,
-    current_snapshot,
+from dynamodb_streaming_datalake_spark.streaming.views import (
+    advance_view,
+    current_view,
+    monoid,
 )
 
-
-def upsert_agg_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-) -> None:
-    """Fold one micro-batch of raw events into the view as version
-    ``version``. Committed-version replays are no-ops (see module
-    docstring); otherwise the previous committed view is merged with
-    the batch's partials and written whole."""
-    if version in _versions(spark, view_dir):
-        return
-    delta = agg_event_partials(batch_df)
-    prev = current_snapshot(spark, view_dir, live_only=False)
-    merged = delta if prev is None else merge_agg_partials(prev, delta)
-    merged.write.mode("overwrite").parquet(f"{view_dir}/v={version}")
-
-
-def start_agg_view_maintenance(
-    events: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink over a raw-events stream; each micro-batch
-    advances the view one version, readers always see the last
-    committed version via ``current_agg_view``."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_agg_view(
-            batch_df.sparkSession, batch_df, view_dir, version=batch_id
-        )
-
-    writer = events.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def current_agg_view(
-    spark: SparkSession, view_dir: str, version: int | None = None
-) -> DataFrame | None:
-    """The committed view (optionally time-traveled); None before the
-    first commit."""
-    return current_snapshot(
-        spark, view_dir, live_only=False, version=version
-    )
+#: raw events -> per-(user_id, event_type) partials, merged additively
+AGG_VIEW = monoid(agg_event_partials, merge_agg_partials)
 
 
 # ---------------------------------------------------------------------------
 # driver-gated lifecycle (round 7): the streaming twin of q_incr_agg
 # ---------------------------------------------------------------------------
 
-_AGGVIEW_VERSION = "v1"
+_AGGVIEW_VERSION = "v2"
 
 
 def _ensure_agg_view(spark: SparkSession, sf_dir: str) -> str:
@@ -105,10 +58,9 @@ def _ensure_agg_view(spark: SparkSession, sf_dir: str) -> str:
     def build(build_dir: str) -> None:
         view = os.path.join(build_dir, "view")
         ev = read_table(spark, sf_dir, "events")
-        base = ev.where(F.col("event_id") % INCR_SPLIT != 0)
-        delta = ev.where(F.col("event_id") % INCR_SPLIT == 0)
-        upsert_agg_view(spark, base, view, version=1)
-        upsert_agg_view(spark, delta, view, version=2)
+        is_delta = F.col("event_id") % INCR_SPLIT == 0
+        advance_view(spark, ev.where(~is_delta), view, 1, AGG_VIEW)
+        advance_view(spark, ev.where(is_delta), view, 2, AGG_VIEW)
 
     return ensure_cached_build("aggview", _AGGVIEW_VERSION, sf_dir, build)
 
@@ -165,7 +117,7 @@ def _register() -> None:
         view = os.path.join(path, "view")
         out = []
         for v in (1, 2):
-            df = finalize_agg_view(current_agg_view(spark, view, version=v))
+            df = finalize_agg_view(current_view(spark, view, version=v))
             out.append(df.select(F.lit(v).cast("int").alias("version"), "*"))
         return out[0].unionByName(out[1])
 

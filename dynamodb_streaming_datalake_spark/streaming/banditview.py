@@ -4,10 +4,10 @@ The batch readout (operators.experiments.q_bandit_posterior) computes
 per-arm (n, s) counts and the grid-integrated P(best) once. In
 production Thompson sampling the state advances with every micro-batch
 and the allocator reads the posterior from the committed view — this
-module is that loop: a ``foreachBatch`` sink folds each batch's arm
-counts into a versioned Parquet view (counts are a monoid: n+n, s+s)
-with the same MVCC ``v=<n>`` discipline and crash-replay guard as
-streaming.upsert/aggview, and the readout runs the IDENTICAL
+module is that loop: each batch's arm counts fold into a versioned
+Parquet view (counts are a monoid: n+n, s+s), a whole-directory view
+of the ``streaming.views`` kernel (its MVCC ``v=<n>`` commit and
+crash-replay guard), and the readout runs the IDENTICAL
 ``bandit_readout`` kernel over any committed version.
 
 Scale: each refresh is O(|batch arms| + |arms|): the batch pre-reduces
@@ -20,97 +20,63 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from dynamodb_streaming_datalake_spark.operators.experiments import (
     bandit_arm_counts,
     bandit_oracle_sql,
     bandit_readout,
 )
-from dynamodb_streaming_datalake_spark.streaming.upsert import (
-    _versions,
-    current_snapshot,
+from dynamodb_streaming_datalake_spark.streaming.views import (
+    advance_view,
+    current_view,
+    monoid,
 )
 
 
-def upsert_bandit_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-) -> None:
-    """Fold one micro-batch's arm counts into the view as version
-    ``version``. Committed-version replays are no-ops (checkpoint
-    recovery safety); otherwise counts merge additively with the
-    previous committed view."""
-    if version in _versions(spark, view_dir):
-        return
-    delta = bandit_arm_counts(batch_df)
-    prev = current_snapshot(spark, view_dir, live_only=False)
-    if prev is None:
-        merged = delta
-    else:
-        merged = (
-            prev.select(
-                F.col("event_type"),
-                F.col("n").alias("n_prev"),
-                F.col("s").alias("s_prev"),
-            )
-            .join(
-                delta.select(
-                    "event_type",
-                    F.col("n").alias("n_new"),
-                    F.col("s").alias("s_new"),
-                ),
-                "event_type",
-                "full_outer",
-            )
-            .select(
-                "event_type",
-                (
-                    F.coalesce(F.col("n_prev"), F.lit(0))
-                    + F.coalesce(F.col("n_new"), F.lit(0))
-                )
-                .cast("long")
-                .alias("n"),
-                (
-                    F.coalesce(F.col("s_prev"), F.lit(0))
-                    + F.coalesce(F.col("s_new"), F.lit(0))
-                )
-                .cast("long")
-                .alias("s"),
-            )
+def merge_arm_counts(prev: DataFrame, delta: DataFrame) -> DataFrame:
+    """Per-arm additive merge of two (event_type, n, s) count frames."""
+    return (
+        prev.select(
+            F.col("event_type"),
+            F.col("n").alias("n_prev"),
+            F.col("s").alias("s_prev"),
         )
-    merged.write.mode("overwrite").parquet(f"{view_dir}/v={version}")
-
-
-def start_bandit_view_maintenance(
-    events: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink over a raw-events stream; every micro-batch
-    advances the arm-count view one version."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_bandit_view(
-            batch_df.sparkSession, batch_df, view_dir, version=batch_id
+        .join(
+            delta.select(
+                "event_type",
+                F.col("n").alias("n_new"),
+                F.col("s").alias("s_new"),
+            ),
+            "event_type",
+            "full_outer",
         )
-
-    writer = events.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+        .select(
+            "event_type",
+            (
+                F.coalesce(F.col("n_prev"), F.lit(0))
+                + F.coalesce(F.col("n_new"), F.lit(0))
+            )
+            .cast("long")
+            .alias("n"),
+            (
+                F.coalesce(F.col("s_prev"), F.lit(0))
+                + F.coalesce(F.col("s_new"), F.lit(0))
+            )
+            .cast("long")
+            .alias("s"),
+        )
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+#: raw events -> per-arm (n, s) counts
+BANDIT_VIEW = monoid(bandit_arm_counts, merge_arm_counts)
 
 
 # ---------------------------------------------------------------------------
 # driver-gated lifecycle: the streaming twin of q_bandit_posterior
 # ---------------------------------------------------------------------------
 
-_BANDITVIEW_VERSION = "v1"
+_BANDITVIEW_VERSION = "v2"
 
 
 def _ensure_bandit_view(spark: SparkSession, sf_dir: str) -> str:
@@ -125,12 +91,9 @@ def _ensure_bandit_view(spark: SparkSession, sf_dir: str) -> str:
     def build(build_dir: str) -> None:
         view = os.path.join(build_dir, "view")
         ev = read_table(spark, sf_dir, "events")
-        upsert_bandit_view(
-            spark, ev.where(F.col("event_id") % 2 == 0), view, version=1
-        )
-        upsert_bandit_view(
-            spark, ev.where(F.col("event_id") % 2 == 1), view, version=2
-        )
+        for v in (1, 2):
+            half = ev.where(F.col("event_id") % 2 == v - 1)
+            advance_view(spark, half, view, v, BANDIT_VIEW)
 
     return ensure_cached_build(
         "banditview", _BANDITVIEW_VERSION, sf_dir, build
@@ -167,9 +130,7 @@ def _register() -> None:
         view = os.path.join(path, "view")
         out = []
         for v in (1, 2):
-            arms = current_snapshot(
-                spark, view, live_only=False, version=v
-            )
+            arms = current_view(spark, view, version=v)
             out.append(
                 bandit_readout(spark, arms).select(
                     F.lit(v).cast("int").alias("version"), "*"

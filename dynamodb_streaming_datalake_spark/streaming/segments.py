@@ -1,6 +1,6 @@
 """Delta-segment commits for GROWING streaming views (round 14).
 
-The MVCC ``v=<n>`` discipline (streaming.upsert) writes each version as
+The MVCC ``v=<n>`` discipline (streaming.views) writes each version as
 a whole directory. For the constant-size sketch views (CMS cells, HLL
 registers, the probe's 9 sums) that is O(1) per micro-batch and stays.
 For views that GROW with the corpus — IVF inverted lists, PQ code
@@ -45,8 +45,9 @@ written via tmp-file + atomic rename, and the version's ``_SUCCESS``
 marker is created LAST — a crash at any point leaves either a fully
 committed version or an uncommitted one whose replay (foreachBatch
 re-delivery under the same batch_id) rewrites the same segment and
-completes the commit. Replays of already-committed versions no-op on
-the ``_SUCCESS`` check exactly as in ``streaming.upsert``.
+completes the commit. Replays of already-committed versions never get
+here: ``streaming.views.advance_view`` no-ops them on the ``_SUCCESS``
+check, for both commit forms.
 """
 
 from __future__ import annotations
@@ -114,6 +115,15 @@ CONSOLIDATORS = {
 
 def _version_dir(view_dir: str, version: int) -> str:
     return f"{view_dir}/v={version}"
+
+
+def _versions(spark: SparkSession, view_dir: str) -> list[int]:
+    """Committed versions, ascending: one glob for the ``_SUCCESS``
+    markers, so the cost does not grow a namenode call per version."""
+    jvm, fs = _fs(spark, view_dir)
+    marker = jvm.org.apache.hadoop.fs.Path(f"{view_dir}/v=*/_SUCCESS")
+    found = fs.globStatus(marker) or []
+    return sorted(int(s.getPath().getParent().getName()[2:]) for s in found)
 
 
 def _manifest_files(jvm, fs, vdir_path) -> list[tuple[int, object]]:
@@ -186,29 +196,26 @@ def commit_segment(
     view_dir: str,
     delta_df: DataFrame,
     version: int,
-    consolidate: str = "none",
+    consolidate: str,
+    head: int | None,
 ) -> None:
-    """Commit one micro-batch's delta as version ``version``, writing
-    O(delta) data bytes: the delta lands in its own immutable segment
-    dir and the new version's manifest references the previous
-    version's segments plus it. Committed-version replays no-op."""
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
-
+    """Commit one micro-batch's delta as version ``version`` on top of
+    the newest committed version ``head`` (None for the first),
+    writing O(delta) data bytes: the delta lands in its own immutable
+    segment dir and the new version's manifest references ``head``'s
+    segments plus it."""
     if consolidate not in CONSOLIDATORS:
         raise ValueError(f"unknown consolidator {consolidate!r}")
-    committed = _versions(spark, view_dir)
-    if version in committed:
-        return
     seg_name = f"{version:010d}"
     delta_df.write.mode("overwrite").parquet(
         f"{view_dir}/{SEG_SUBDIR}/{seg_name}"
     )
     prev_segments: list[str] = []
-    if committed:
-        prev = read_manifest(spark, view_dir, committed[-1])
+    if head is not None:
+        prev = read_manifest(spark, view_dir, head)
         if prev is None:
             raise ValueError(
-                f"{view_dir} v={committed[-1]} is not a segmented commit; "
+                f"{view_dir} v={head} is not a segmented commit; "
                 "a view cannot mix whole-directory and segmented versions"
             )
         prev_segments = prev["segments"]
@@ -264,8 +271,6 @@ def compact_segments(
     committed AFTER chain off the compacted manifest. Old segments are
     reclaimed by ``vacuum_view`` once nothing references them.
     """
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
-
     committed = _versions(spark, view_dir)
     if not committed:
         return False
@@ -304,13 +309,13 @@ def compact_segments(
 def vacuum_view(
     spark: SparkSession, view_dir: str, keep_last: int
 ) -> tuple[list[int], list[str]]:
-    """Delete all but the newest ``keep_last`` committed versions, then
-    garbage-collect (a) stale manifest generations of the survivors
-    (readers use only the highest) and (b) segment dirs no surviving
-    manifest references. Returns (versions removed, segments removed).
-    Segment deletion is pure namespace work — no data is read."""
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
-
+    """Delete all but the newest ``keep_last`` committed versions of
+    either commit form, then garbage-collect (a) stale manifest
+    generations of the survivors (readers use only the highest) and
+    (b) segment dirs no surviving manifest references. Returns
+    (versions removed, segments removed); a whole-directory view has
+    no manifests and no segments, so its second list is empty.
+    Deletion is pure namespace work — no data is read."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (cannot vacuum the head)")
     vs = _versions(spark, view_dir)

@@ -9,9 +9,10 @@ the sketch a one-shot batch build would produce over the whole history
 reason a lake keeps sketches instead of raw keys: per-day sketch
 versions merge in O(D*W), never re-scanning the stream.
 
-Same MVCC ``v=<n>`` directory discipline and crash-replay guard as
-streaming.upsert / streaming.aggview: an already-committed version is a
-no-op, so checkpoint replays of a non-idempotent fold are safe.
+Every view here is a view of the ``streaming.views`` kernel, which
+owns the MVCC ``v=<n>`` commit and the crash-replay guard: an
+already-committed version is a no-op, so checkpoint replays of a
+non-idempotent fold are safe. A view here is only its fold.
 
 Scale: each refresh shuffles only the micro-batch's cell partials
 (map-side combined to <= D*W rows per task) and rewrites a D*W-row
@@ -20,15 +21,57 @@ view — constant work per batch regardless of stream volume.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from dynamodb_streaming_datalake_spark.operators.sketches import cms_build
-from dynamodb_streaming_datalake_spark.streaming.upsert import (
-    _versions,
-    current_snapshot,
+from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
+from dynamodb_streaming_datalake_spark.operators.analytics_ext import ohlc_bars
+from dynamodb_streaming_datalake_spark.operators.contamination import (
+    overlap_counts,
 )
+from dynamodb_streaming_datalake_spark.operators.dedup import (
+    minhash_signatures,
+)
+from dynamodb_streaming_datalake_spark.operators.probe import (
+    probe_features,
+    probe_gram,
+)
+from dynamodb_streaming_datalake_spark.operators.similarity import (
+    ivf_assign_lists,
+    ivfpq_encode,
+)
+from dynamodb_streaming_datalake_spark.operators.sketches import (
+    ams_sketch,
+    cms_build,
+    daily_hll_registers,
+    hll_registers,
+    kmv_sketch,
+)
+from dynamodb_streaming_datalake_spark.operators.state import (
+    fold_patch_state,
+    partial_update_feed,
+)
+from dynamodb_streaming_datalake_spark.sources.readers import read_table
+from dynamodb_streaming_datalake_spark.streaming.views import (
+    View,
+    advance_view,
+    current_view,
+    monoid,
+    segmented,
+)
+
+
+def _fold_halves(
+    spark: SparkSession, rows: DataFrame, build_dir: str, col: str, view: View
+) -> None:
+    """Commit ``rows`` to ``<build_dir>/view`` as two versions through
+    the real kernel: even ``col`` -> v=1, odd folded on top -> v=2 — so
+    the final version must equal a one-shot build over all rows."""
+    view_dir = os.path.join(build_dir, "view")
+    for v in (1, 2):
+        advance_view(spark, rows.where(F.col(col) % 2 == v - 1), view_dir, v, view)
 
 
 def merge_cms(prev: DataFrame, delta: DataFrame) -> DataFrame:
@@ -40,65 +83,15 @@ def merge_cms(prev: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def upsert_cms_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-    key: str = "user_id",
-) -> None:
-    """Fold one micro-batch into the sketch view as ``version``;
-    committed-version replays are no-ops (crash-replay guard)."""
-    if version in _versions(spark, view_dir):
-        return
-    delta = cms_build(batch_df, key)
-    prev = current_snapshot(spark, view_dir, live_only=False)
-    merged = delta if prev is None else merge_cms(prev, delta)
-    merged.write.mode("overwrite").parquet(f"{view_dir}/v={version}")
-
-
-def start_cms_maintenance(
-    events: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    key: str = "user_id",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink over a raw-events stream; each micro-batch
-    advances the sketch one version."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_cms_view(
-            batch_df.sparkSession, batch_df, view_dir, version=batch_id, key=key
-        )
-
-    writer = events.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def current_sketch_view(
-    spark: SparkSession, view_dir: str, version: int | None = None
-) -> DataFrame | None:
-    """The committed sketch rows, whatever their shape — CMS (d, w,
-    cnt) cells and HLL (bucket, m) registers both read through here
-    (optionally time-traveled)."""
-    return current_snapshot(spark, view_dir, live_only=False, version=version)
-
-
-#: backwards-compatible alias (pre-round-9 name; the reader was never
-#: CMS-specific — round-8 ADVICE asked for a sketch-neutral name)
-current_cms = current_sketch_view
+#: raw events -> D*W count cells of user_id
+CMS_VIEW = monoid(lambda batch: cms_build(batch, "user_id"), merge_cms)
 
 
 # ---------------------------------------------------------------------------
 # driver-gated lifecycle: the streaming twin of q_cms_heavy_hitters
 # ---------------------------------------------------------------------------
 
-_CMSVIEW_VERSION = "v1"
+_CMSVIEW_VERSION = "v2"
 
 
 def _ensure_cms_view(spark: SparkSession, sf_dir: str) -> str:
@@ -106,20 +99,10 @@ def _ensure_cms_view(spark: SparkSession, sf_dir: str) -> str:
     with the REAL fold kernel: v=1 folds the even event half, v=2
     folds the odd half on top — so the final sketch must cell-equal a
     one-shot build over all events."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         ev = read_table(spark, sf_dir, "events")
-        upsert_cms_view(
-            spark, ev.where(F.col("event_id") % 2 == 0), view, version=1
-        )
-        upsert_cms_view(
-            spark, ev.where(F.col("event_id") % 2 == 1), view, version=2
-        )
+        _fold_halves(spark, ev, build_dir, "event_id", CMS_VIEW)
 
     return ensure_cached_build("cmsview", _CMSVIEW_VERSION, sf_dir, build)
 
@@ -130,7 +113,6 @@ def _register() -> None:
         cms_estimate,
     )
     from dynamodb_streaming_datalake_spark.registry import query
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     # identical answer contract as the one-shot batch sketch: the oracle
     # recomputes the heavy-hitter estimates from the raw events —
@@ -150,10 +132,8 @@ def _register() -> None:
         tests/test_streaming.py.
 
         Scale: see module docstring — constant D*W work per refresh."""
-        import os
-
         path = _ensure_cms_view(spark, sf_dir)
-        sketch = current_sketch_view(spark, os.path.join(path, "view"))
+        sketch = current_view(spark, os.path.join(path, "view"))
         ev = read_table(spark, sf_dir, "events")
         exact = ev.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("exact_cnt")
@@ -181,76 +161,25 @@ def merge_hll(prev: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def upsert_hll_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-    key: str = "l_orderkey",
-) -> None:
-    """Fold one micro-batch into the register view as ``version``;
-    committed-version replays are no-ops."""
-    from dynamodb_streaming_datalake_spark.operators.sketches import (
-        hll_registers,
-    )
+#: lineitem rows -> HLL registers of l_orderkey
+HLL_VIEW = monoid(lambda batch: hll_registers(batch, "l_orderkey"), merge_hll)
 
-    if version in _versions(spark, view_dir):
-        return
-    delta = hll_registers(batch_df, key)
-    prev = current_snapshot(spark, view_dir, live_only=False)
-    merged = delta if prev is None else merge_hll(prev, delta)
-    merged.write.mode("overwrite").parquet(f"{view_dir}/v={version}")
-
-
-def start_hll_maintenance(
-    rows: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    key: str = "l_orderkey",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink advancing the register view per micro-batch."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_hll_view(
-            batch_df.sparkSession, batch_df, view_dir, version=batch_id, key=key
-        )
-
-    writer = rows.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-_HLLVIEW_VERSION = "v1"
+_HLLVIEW_VERSION = "v2"
 
 
 def _ensure_hll_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed register versions, built with the real fold: even
     orderkeys -> v=1, odd folded on top -> v=2."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         li = read_table(spark, sf_dir, "lineitem")
-        upsert_hll_view(
-            spark, li.where(F.col("l_orderkey") % 2 == 0), view, version=1
-        )
-        upsert_hll_view(
-            spark, li.where(F.col("l_orderkey") % 2 == 1), view, version=2
-        )
+        _fold_halves(spark, li, build_dir, "l_orderkey", HLL_VIEW)
 
     return ensure_cached_build("hllview", _HLLVIEW_VERSION, sf_dir, build)
 
 
 def _register_hll() -> None:
     from dynamodb_streaming_datalake_spark.registry import ORACLE, query
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     # identical answer contract as the one-shot q_hll_distinct build:
     # the oracle recomputes from the raw table, so hash-equality proves
@@ -266,12 +195,8 @@ def _register_hll() -> None:
         view also tolerates double-folds, pinned in tests.
 
         Scale: constant m-register work per refresh."""
-        import os
-
         path = _ensure_hll_view(spark, sf_dir)
-        # current_sketch_view is just the committed-version reader; the view
-        # schema here is (bucket, m) registers
-        reg = current_sketch_view(spark, os.path.join(path, "view"))
+        reg = current_view(spark, os.path.join(path, "view"))
         li = read_table(spark, sf_dir, "lineitem")
         ex = li.agg(F.countDistinct("l_orderkey").alias("exact_distinct"))
         from dynamodb_streaming_datalake_spark.operators.sketches import (
@@ -322,10 +247,6 @@ def _theta_delta(batch_df: DataFrame) -> DataFrame:
     finished orders' customers, 'b' = open orders' customers. Each
     side is an independent TakeOrderedAndProject top-k (bounded,
     distributed), unioned into <=2K (side, h) rows."""
-    from dynamodb_streaming_datalake_spark.operators.sketches import (
-        kmv_sketch,
-    )
-
     a = kmv_sketch(
         batch_df.where(F.col("o_orderstatus") == "F"), "o_custkey"
     ).select(F.lit("a").alias("side"), "h")
@@ -335,44 +256,10 @@ def _theta_delta(batch_df: DataFrame) -> DataFrame:
     return a.unionByName(b)
 
 
-def upsert_theta_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-) -> None:
-    """Fold one micro-batch of orders into the (side, h) sketch view as
-    ``version``; committed-version replays are no-ops."""
-    if version in _versions(spark, view_dir):
-        return
-    delta = _theta_delta(batch_df)
-    prev = current_snapshot(spark, view_dir, live_only=False)
-    merged = delta if prev is None else merge_theta(prev, delta)
-    merged.write.mode("overwrite").parquet(f"{view_dir}/v={version}")
+#: orders rows -> per-side KMV of o_custkey
+THETA_VIEW = monoid(_theta_delta, merge_theta)
 
-
-def start_theta_maintenance(
-    orders: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink advancing the audience sketch per micro-batch."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_theta_view(
-            batch_df.sparkSession, batch_df, view_dir, version=batch_id
-        )
-
-    writer = orders.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-_THETAVIEW_VERSION = "v1"
+_THETAVIEW_VERSION = "v2"
 
 
 def _ensure_theta_view(spark: SparkSession, sf_dir: str) -> str:
@@ -381,20 +268,10 @@ def _ensure_theta_view(spark: SparkSession, sf_dir: str) -> str:
     is exact (k smallest of a union), the final view EQUALS the
     one-shot batch sketch over all orders — which is why the batch
     oracle transfers verbatim."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         orders = read_table(spark, sf_dir, "orders")
-        upsert_theta_view(
-            spark, orders.where(F.col("o_orderkey") % 2 == 0), view, version=1
-        )
-        upsert_theta_view(
-            spark, orders.where(F.col("o_orderkey") % 2 == 1), view, version=2
-        )
+        _fold_halves(spark, orders, build_dir, "o_orderkey", THETA_VIEW)
 
     return ensure_cached_build("thetaview", _THETAVIEW_VERSION, sf_dir, build)
 
@@ -405,7 +282,6 @@ def _register_theta() -> None:
         theta_overlap,
     )
     from dynamodb_streaming_datalake_spark.registry import query
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     # identical answer contract as the one-shot q_theta_distinct build:
     # the oracle recomputes both sketches from raw orders, so
@@ -426,12 +302,10 @@ def _register_theta() -> None:
 
         Scale: <=2K-row view rewritten per refresh; each delta is a
         bounded distributed top-k of the micro-batch."""
-        import os
-
         from pyspark.sql import functions as SF
 
         path = _ensure_theta_view(spark, sf_dir)
-        view = current_sketch_view(spark, os.path.join(path, "view"))
+        view = current_view(spark, os.path.join(path, "view"))
         sa = view.where(SF.col("side") == "a").select("h")
         sb = view.where(SF.col("side") == "b").select("h")
         orders = read_table(spark, sf_dir, "orders")
@@ -474,68 +348,19 @@ def merge_daily_hll(prev: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def upsert_daily_hll_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-) -> None:
-    """Fold one micro-batch of raw events into the daily register view
-    as ``version``; committed-version replays are no-ops."""
-    from dynamodb_streaming_datalake_spark.operators.sketches import (
-        daily_hll_registers,
-    )
+#: raw events -> per-(day, register) HLL of user_id
+DAILY_HLL_VIEW = monoid(daily_hll_registers, merge_daily_hll)
 
-    if version in _versions(spark, view_dir):
-        return
-    delta = daily_hll_registers(batch_df)
-    prev = current_snapshot(spark, view_dir, live_only=False)
-    merged = delta if prev is None else merge_daily_hll(prev, delta)
-    merged.write.mode("overwrite").parquet(f"{view_dir}/v={version}")
-
-
-def start_daily_hll_maintenance(
-    events: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink advancing the daily register view per
-    micro-batch."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_daily_hll_view(
-            batch_df.sparkSession, batch_df, view_dir, version=batch_id
-        )
-
-    writer = events.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-_DAILYHLL_VERSION = "v1"
+_DAILYHLL_VERSION = "v2"
 
 
 def _ensure_daily_hll_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed daily-register versions built with the real fold:
     even event ids -> v=1, odd folded on top -> v=2."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         ev = read_table(spark, sf_dir, "events")
-        upsert_daily_hll_view(
-            spark, ev.where(F.col("event_id") % 2 == 0), view, version=1
-        )
-        upsert_daily_hll_view(
-            spark, ev.where(F.col("event_id") % 2 == 1), view, version=2
-        )
+        _fold_halves(spark, ev, build_dir, "event_id", DAILY_HLL_VIEW)
 
     return ensure_cached_build("dailyhllview", _DAILYHLL_VERSION, sf_dir, build)
 
@@ -546,7 +371,6 @@ def _register_daily_hll() -> None:
         hll_rolling_from_registers,
     )
     from dynamodb_streaming_datalake_spark.registry import query
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     @query("q_hll_rolling_stream", oracle=SQL_HLL_ROLLING)
     def q_hll_rolling_stream(spark, sf_dir):
@@ -567,15 +391,9 @@ def _register_daily_hll() -> None:
         partials and answers arrive without touching raw history (the
         exact eval column here rescans raw by design — it is the
         verification, not the serving path)."""
-        import os
-
-        from dynamodb_streaming_datalake_spark.sources.readers import (
-            read_table as rt,
-        )
-
         path = _ensure_daily_hll_view(spark, sf_dir)
-        reg = current_sketch_view(spark, os.path.join(path, "view"))
-        ev = rt(spark, sf_dir, "events")
+        reg = current_view(spark, os.path.join(path, "view"))
+        ev = read_table(spark, sf_dir, "events")
         return hll_rolling_from_registers(reg, ev)
 
 
@@ -601,77 +419,21 @@ def merge_ams(prev: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def upsert_ams_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-    key: str = "user_id",
-    group: str = "event_type",
-) -> None:
-    """Fold one micro-batch into the counter view as ``version``;
-    committed-version replays are no-ops (NOT idempotent per-row —
-    signed sums double-count — which is exactly why the guard must
-    hold and why the test replays a committed version)."""
-    from dynamodb_streaming_datalake_spark.operators.sketches import ams_sketch
+#: raw events -> signed AMS counters of user_id per event_type. The
+#: signed sums are NOT idempotent per row — a double-applied batch
+#: shifts Z — which is why the replay guard must hold here.
+AMS_VIEW = monoid(lambda batch: ams_sketch(batch, "user_id", "event_type"), merge_ams)
 
-    if version in _versions(spark, view_dir):
-        return
-    delta = ams_sketch(batch_df, key, group)
-    prev = current_snapshot(spark, view_dir, live_only=False)
-    merged = delta if prev is None else merge_ams(prev, delta)
-    merged.write.mode("overwrite").parquet(f"{view_dir}/v={version}")
-
-
-def start_ams_maintenance(
-    events: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    key: str = "user_id",
-    group: str = "event_type",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink advancing the signed-counter view per
-    micro-batch."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_ams_view(
-            batch_df.sparkSession,
-            batch_df,
-            view_dir,
-            version=batch_id,
-            key=key,
-            group=group,
-        )
-
-    writer = events.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-_AMSVIEW_VERSION = "v1"
+_AMSVIEW_VERSION = "v2"
 
 
 def _ensure_ams_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed counter versions built with the real fold: even
     event ids -> v=1, odd folded on top -> v=2."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         ev = read_table(spark, sf_dir, "events")
-        upsert_ams_view(
-            spark, ev.where(F.col("event_id") % 2 == 0), view, version=1
-        )
-        upsert_ams_view(
-            spark, ev.where(F.col("event_id") % 2 == 1), view, version=2
-        )
+        _fold_halves(spark, ev, build_dir, "event_id", AMS_VIEW)
 
     return ensure_cached_build("amsview", _AMSVIEW_VERSION, sf_dir, build)
 
@@ -682,7 +444,6 @@ def _register_ams() -> None:
         ams_estimate,
     )
     from dynamodb_streaming_datalake_spark.registry import query
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     @query("q_ams_stream", oracle=SQL_AMS_F2)
     def q_ams_stream(spark, sf_dir):
@@ -703,12 +464,10 @@ def _register_ams() -> None:
         stream volume; each refresh shuffles only the micro-batch's
         map-side-combined partials (the exact eval column rescans raw
         by design — verification, not the serving path)."""
-        import os
-
         from pyspark.sql import functions as SF
 
         path = _ensure_ams_view(spark, sf_dir)
-        sketch = current_sketch_view(spark, os.path.join(path, "view"))
+        sketch = current_view(spark, os.path.join(path, "view"))
         ev = read_table(spark, sf_dir, "events")
         est = ams_estimate(sketch, "event_type")
         exact = (
@@ -755,78 +514,24 @@ _register_ams()
 # capped band-bucket join as batch dedup.
 
 
-def upsert_minhash_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-) -> None:
-    """Fold one micro-batch of documents (doc_id, text) into the
-    signature view as ``version``; committed-version replays no-op.
+#: documents (doc_id, text) -> per-doc MinHash signatures. The table
+#: GROWS with the corpus, so each commit is a delta segment (O(batch)
+#: bytes written, round-14), not a view rewrite; the MIN monoid is
+#: applied at read via the ``minhash_min`` consolidator and
+#: materialized by compaction.
+MINHASH_VIEW = segmented(minhash_signatures, "minhash_min")
 
-    The signature table GROWS with the corpus, so the commit is a
-    delta segment (O(batch) bytes written, round-14), not a view
-    rewrite; the MIN monoid is applied at read via the manifest's
-    ``minhash_min`` consolidator and materialized by compaction."""
-    from dynamodb_streaming_datalake_spark.operators.dedup import (
-        minhash_signatures,
-    )
-    from dynamodb_streaming_datalake_spark.streaming.segments import (
-        commit_segment,
-    )
-
-    commit_segment(
-        spark,
-        view_dir,
-        minhash_signatures(batch_df),
-        version,
-        consolidate="minhash_min",
-    )
-
-
-def start_minhash_maintenance(
-    docs: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink over a document stream; each micro-batch
-    advances the signature view one version."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_minhash_view(
-            batch_df.sparkSession, batch_df, view_dir, version=batch_id
-        )
-
-    writer = docs.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-_MHVIEW_VERSION = "v2"
+_MHVIEW_VERSION = "v3"
 
 
 def _ensure_minhash_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed signature versions built with the real fold: even
     doc ids -> v=1, odd folded on top -> v=2 — so the final view must
     signature-equal a one-shot build over the whole corpus."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         d = read_table(spark, sf_dir, "documents")
-        upsert_minhash_view(
-            spark, d.where(F.col("doc_id") % 2 == 0), view, version=1
-        )
-        upsert_minhash_view(
-            spark, d.where(F.col("doc_id") % 2 == 1), view, version=2
-        )
+        _fold_halves(spark, d, build_dir, "doc_id", MINHASH_VIEW)
 
     return ensure_cached_build("mhview", _MHVIEW_VERSION, sf_dir, build)
 
@@ -837,7 +542,6 @@ def _register_minhash() -> None:
         lsh_pairs_from_signatures,
     )
     from dynamodb_streaming_datalake_spark.registry import query
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     @query("q_dedup_stream", oracle=_SQL_MINHASH_PAIRS)
     def q_dedup_stream(spark, sf_dir):
@@ -857,10 +561,8 @@ def _register_minhash() -> None:
         Scale: see section docstring — O(view + batch) per refresh;
         the serving join is the batch dedup's own capped band-bucket
         equi-join."""
-        import os
-
         path = _ensure_minhash_view(spark, sf_dir)
-        sigs = current_sketch_view(spark, os.path.join(path, "view"))
+        sigs = current_view(spark, os.path.join(path, "view"))
         docs = read_table(spark, sf_dir, "documents")
         return lsh_pairs_from_signatures(sigs, docs)
 
@@ -885,75 +587,24 @@ _register_minhash()
 # must behave at CDC scale: per-batch work is batch-sized, state is
 # key-sized, and no commit ever rewrites the accumulated state.
 
-PATCH_VIEW_VERSION = "v1"
+PATCH_VIEW_VERSION = "v2"
 
-
-def upsert_patch_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-) -> None:
-    """Fold one micro-batch of events into the patch-state view as
-    ``version`` — a delta segment of the batch's own per-key folded
-    states; committed-version replays no-op."""
-    from dynamodb_streaming_datalake_spark.operators.state import (
-        fold_patch_state,
-        partial_update_feed,
-    )
-    from dynamodb_streaming_datalake_spark.streaming.segments import (
-        commit_segment,
-    )
-
-    commit_segment(
-        spark,
-        view_dir,
-        fold_patch_state(partial_update_feed(batch_df)),
-        version,
-        consolidate="patch_last_nonnull",
-    )
-
-
-def start_patch_maintenance(
-    events: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink over an event stream; each micro-batch
-    advances the patch-state view one segment."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_patch_view(
-            batch_df.sparkSession, batch_df, view_dir, version=batch_id
-        )
-
-    writer = events.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+#: events -> the batch's own per-key folded patch states, one delta
+#: segment per micro-batch
+PATCH_VIEW = segmented(
+    lambda batch: fold_patch_state(partial_update_feed(batch)),
+    "patch_last_nonnull",
+)
 
 
 def _ensure_patch_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed patch segments built with the real fold: even
     event_ids -> v=1, odd folded on top -> v=2 — the consolidated
     read must equal the one-shot batch fold."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         e = read_table(spark, sf_dir, "events")
-        upsert_patch_view(
-            spark, e.where(F.col("event_id") % 2 == 0), view, version=1
-        )
-        upsert_patch_view(
-            spark, e.where(F.col("event_id") % 2 == 1), view, version=2
-        )
+        _fold_halves(spark, e, build_dir, "event_id", PATCH_VIEW)
 
     return ensure_cached_build("patchview", PATCH_VIEW_VERSION, sf_dir, build)
 
@@ -983,10 +634,8 @@ def _register_patch() -> None:
         rewrite); read-time consolidation is one groupBy over
         |segments| rows per key, and compaction folds it back to one
         row per key whenever segment count grows."""
-        import os
-
         path = _ensure_patch_view(spark, sf_dir)
-        state = current_sketch_view(spark, os.path.join(path, "view"))
+        state = current_view(spark, os.path.join(path, "view"))
         return serve_patch_state(state)
 
 
@@ -1007,9 +656,6 @@ _register_patch()
 # positions). The gate proof is result-invisibility: pruning with the
 # VIEW's bitmap and running the exact join must hash-match
 # q_bloom_prejoin's plain-join oracle verbatim.
-
-BLOOM_VIEW_VERSION = "v1"
-
 
 def merge_bloom(prev: DataFrame, delta: DataFrame) -> DataFrame:
     """Word-wise OR — the bloom monoid operation (idempotent)."""
@@ -1042,51 +688,10 @@ def _bloom_delta(batch_df: DataFrame, key_col: str, m_bits: int) -> DataFrame:
     )
 
 
-def upsert_bloom_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-    key_col: str,
-    m_bits: int,
-) -> None:
-    """Fold one micro-batch of dim keys into the word-table view as
-    ``version``; committed-version replays no-op, and the OR monoid
-    additionally makes stale re-folds harmless."""
-    if version in _versions(spark, view_dir):
-        return
-    delta = _bloom_delta(batch_df, key_col, m_bits)
-    prev = current_snapshot(spark, view_dir, live_only=False)
-    merged = delta if prev is None else merge_bloom(prev, delta)
-    merged.write.mode("overwrite").parquet(f"{view_dir}/v={version}")
-
-
-def start_bloom_maintenance(
-    keys: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    key_col: str,
-    m_bits: int,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink advancing the bloom word table per batch."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_bloom_view(
-            batch_df.sparkSession,
-            batch_df,
-            view_dir,
-            version=batch_id,
-            key_col=key_col,
-            m_bits=m_bits,
-        )
-
-    writer = keys.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def bloom_view(key_col: str, m_bits: int) -> View:
+    """Dim keys -> the ``m_bits``-wide bloom word table of ``key_col``;
+    the OR monoid additionally makes stale re-folds harmless."""
+    return monoid(lambda batch: _bloom_delta(batch, key_col, m_bits), merge_bloom)
 
 
 def bloom_bitmap_from_view(
@@ -1096,26 +701,21 @@ def bloom_bitmap_from_view(
     ``operators.bloom.bloom_prune`` consumes (bounded by construction:
     ≤ m/64 longs)."""
     bitmap = [0] * (m_bits // 64)
-    view = current_snapshot(spark, view_dir, live_only=False)
-    for r in view.collect():
+    for r in current_view(spark, view_dir).collect():
         bitmap[r["word"]] = r["bits"]
     return bitmap
 
 
-_BLOOMVIEW_VERSION = "v1"
+_BLOOMVIEW_VERSION = "v2"
 
 
 def _ensure_bloom_view(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Two committed word-table versions over the URGENT-orders key set
     (even keys -> v=1, odd folded on top -> v=2), width sized exactly
     as the batch build would size it."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
     from dynamodb_streaming_datalake_spark.operators.bloom import (
         bloom_m_bits,
     )
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     urgent = (
         read_table(spark, sf_dir, "orders")
@@ -1125,15 +725,8 @@ def _ensure_bloom_view(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     m_bits = bloom_m_bits(urgent.count())
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
-        upsert_bloom_view(
-            spark, urgent.where(F.col("o_orderkey") % 2 == 0), view,
-            version=1, key_col="o_orderkey", m_bits=m_bits,
-        )
-        upsert_bloom_view(
-            spark, urgent.where(F.col("o_orderkey") % 2 == 1), view,
-            version=2, key_col="o_orderkey", m_bits=m_bits,
-        )
+        view = bloom_view("o_orderkey", m_bits)
+        _fold_halves(spark, urgent, build_dir, "o_orderkey", view)
 
     return (
         ensure_cached_build("bloomview", _BLOOMVIEW_VERSION, sf_dir, build),
@@ -1147,7 +740,6 @@ def _register_bloom() -> None:
         dsum,
     )
     from dynamodb_streaming_datalake_spark.registry import ORACLE, query
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     @query("q_bloom_stream", oracle=None)
     def q_bloom_stream(spark, sf_dir):
@@ -1164,8 +756,6 @@ def _register_bloom() -> None:
 
         Scale: the view is ≤ m/64 rows; each refresh shuffles only
         the micro-batch's (word, mask) partials."""
-        import os
-
         path, m_bits = _ensure_bloom_view(spark, sf_dir)
         bitmap = bloom_bitmap_from_view(
             spark, os.path.join(path, "view"), m_bits
@@ -1218,84 +808,31 @@ _register_bloom()
 # hash-match q_ann_ivf's oracle VERBATIM — the same
 # result-invisibility bar as q_ann_serve's persisted index.
 
-IVF_VIEW_VERSION = "v2"
+IVF_VIEW_VERSION = "v3"
 
 
-def upsert_ivf_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    cents: DataFrame,
-    view_dir: str,
-    version: int,
-) -> None:
-    """Assign one micro-batch of vectors (vec_id, embedding) against
-    the frozen centroid table and fold into the list view as
-    ``version``; committed-version replays no-op (crash-replay
-    guard for the non-idempotent append).
-
-    The inverted lists GROW with the corpus, so the commit is a delta
-    segment (O(batch) bytes written, round-14) under a per-version
-    manifest — the append monoid needs no read-time fold
-    (``consolidate="none"``)."""
-    from dynamodb_streaming_datalake_spark.operators.similarity import (
-        ivf_assign_lists,
-    )
-    from dynamodb_streaming_datalake_spark.streaming.segments import (
-        commit_segment,
-    )
-
-    commit_segment(
-        spark, view_dir, ivf_assign_lists(batch_df, cents), version
-    )
-
-
-def start_ivf_maintenance(
-    vectors: DataFrame,
-    cents: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink over a vector ingest stream; each micro-batch
-    advances the inverted-list view one version. ``cents`` is the
-    frozen coarse quantizer (production: trained once, versioned with
-    the index, never derived from the stream)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_ivf_view(
-            batch_df.sparkSession, batch_df, cents, view_dir, version=batch_id
-        )
-
-    writer = vectors.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def ivf_view(cents: DataFrame) -> View:
+    """Vectors (vec_id, embedding) -> inverted-list rows assigned
+    against the frozen centroid table ``cents`` (production: trained
+    once, versioned with the index, never derived from the stream).
+    The lists GROW with the corpus, so each commit is a delta segment
+    (O(batch) bytes written, round-14) — the append monoid needs no
+    read-time fold."""
+    return segmented(lambda batch: ivf_assign_lists(batch, cents))
 
 
 def _ensure_ivf_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed list versions built with the real fold: even
     vec_ids -> v=1, odd folded on top -> v=2 — so the final view must
     row-equal a one-shot assignment of the whole corpus."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
     from dynamodb_streaming_datalake_spark.operators.similarity import (
         ivf_centroids,
     )
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         e = read_table(spark, sf_dir, "embeddings")
-        cents = ivf_centroids(e)
-        upsert_ivf_view(
-            spark, e.where(F.col("vec_id") % 2 == 0), cents, view, version=1
-        )
-        upsert_ivf_view(
-            spark, e.where(F.col("vec_id") % 2 == 1), cents, view, version=2
-        )
+        view = ivf_view(ivf_centroids(e))
+        _fold_halves(spark, e, build_dir, "vec_id", view)
 
     return ensure_cached_build("ivfview", IVF_VIEW_VERSION, sf_dir, build)
 
@@ -1307,7 +844,6 @@ def _register_ivf() -> None:
         ivf_serve,
     )
     from dynamodb_streaming_datalake_spark.registry import query
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     @query("q_ann_index_stream", oracle=SQL_IVF_SERVE)
     def q_ann_index_stream(spark, sf_dir):
@@ -1327,10 +863,8 @@ def _register_ivf() -> None:
         broadcast argmax) and appends; nothing corpus-sized is
         recomputed per batch. Serving is q_ann_serve's own
         probed-list-bounded join."""
-        import os
-
         path = _ensure_ivf_view(spark, sf_dir)
-        lists = current_sketch_view(spark, os.path.join(path, "view"))
+        lists = current_view(spark, os.path.join(path, "view"))
         e = read_table(spark, sf_dir, "embeddings")
         return ivf_serve(lists, ivf_centroids(e), e)
 
@@ -1359,94 +893,36 @@ _register_ivf()
 # the same build/serve result-invisibility bar as q_ann_serve_pq's
 # persisted index.
 
-PQCODES_VIEW_VERSION = "v2"
+PQCODES_VIEW_VERSION = "v3"
 
 
-def upsert_pq_codes_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    tcb: DataFrame,
-    cents: DataFrame,
-    view_dir: str,
-    version: int,
-) -> None:
-    """Encode one micro-batch of vectors (vec_id, embedding) against
-    the frozen codebook + coarse quantizer and append into the code
-    view as ``version``; committed-version replays no-op.
-
-    The code store GROWS with the corpus, so the commit is a delta
-    segment (O(batch) bytes written, round-14) under a per-version
-    manifest — append monoid, no read-time fold."""
-    from dynamodb_streaming_datalake_spark.operators.similarity import (
-        ivfpq_encode,
-    )
-    from dynamodb_streaming_datalake_spark.streaming.segments import (
-        commit_segment,
-    )
-
-    commit_segment(
-        spark, view_dir, ivfpq_encode(batch_df, tcb, cents), version
-    )
-
-
-def start_pq_codes_maintenance(
-    vectors: DataFrame,
-    tcb: DataFrame,
-    cents: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink over a vector ingest stream; each micro-batch
-    advances the PQ code view one version. ``tcb``/``cents`` are the
-    frozen codebook and coarse quantizer (production: trained once,
-    versioned with the index, never derived from the stream)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_pq_codes_view(
-            batch_df.sparkSession,
-            batch_df,
-            tcb,
-            cents,
-            view_dir,
-            version=batch_id,
-        )
-
-    writer = vectors.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def pq_codes_view(tcb: DataFrame, cents: DataFrame) -> View:
+    """Vectors (vec_id, embedding) -> 4-byte PQ codes encoded against
+    the frozen codebook ``tcb`` and coarse quantizer ``cents``
+    (production: trained once, versioned with the index, never
+    derived from the stream). The code store GROWS with the corpus,
+    so each commit is a delta segment (O(batch) bytes written,
+    round-14) — append monoid, no read-time fold."""
+    return segmented(lambda batch: ivfpq_encode(batch, tcb, cents))
 
 
 def _ensure_pq_codes_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed code versions built with the real fold: even
     vec_ids -> v=1, odd folded on top -> v=2 — so the final view must
     row-equal a one-shot encode of the whole corpus."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
     from dynamodb_streaming_datalake_spark.operators.similarity import (
         _pq_subvectors,
         _pq_trained_codebook,
         ivfpq_coarse_centroids,
     )
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         e = read_table(spark, sf_dir, "embeddings")
         # the frozen artifacts: full-corpus codebook + first-K coarse
         # quantizer, exactly what _ensure_ivfpq_index persists
         tcb = _pq_trained_codebook(_pq_subvectors(e), sf_dir=sf_dir)
-        cents = ivfpq_coarse_centroids(e)
-        upsert_pq_codes_view(
-            spark, e.where(F.col("vec_id") % 2 == 0), tcb, cents, view, version=1
-        )
-        upsert_pq_codes_view(
-            spark, e.where(F.col("vec_id") % 2 == 1), tcb, cents, view, version=2
-        )
+        view = pq_codes_view(tcb, ivfpq_coarse_centroids(e))
+        _fold_halves(spark, e, build_dir, "vec_id", view)
 
     return ensure_cached_build("pqcodesview", PQCODES_VIEW_VERSION, sf_dir, build)
 
@@ -1460,7 +936,6 @@ def _register_pq_codes() -> None:
         ivfpq_serve,
     )
     from dynamodb_streaming_datalake_spark.registry import query
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     @query("q_ann_codes_stream", oracle=SQL_IVFPQ_SERVE)
     def q_ann_codes_stream(spark, sf_dir):
@@ -1480,10 +955,8 @@ def _register_pq_codes() -> None:
         broadcast argmins, map-only) and appends 4-byte codes; nothing
         corpus-sized is recomputed per batch. Serving is
         q_ann_serve_pq's own probed-list-bounded ADC join."""
-        import os
-
         path = _ensure_pq_codes_view(spark, sf_dir)
-        codes = current_sketch_view(spark, os.path.join(path, "view"))
+        codes = current_view(spark, os.path.join(path, "view"))
         e = read_table(spark, sf_dir, "embeddings")
         tcb = _pq_trained_codebook(_pq_subvectors(e), sf_dir=sf_dir)
         return ivfpq_serve(codes, ivfpq_coarse_centroids(e), tcb, e)
@@ -1509,72 +982,23 @@ _register_pq_codes()
 # committed-version guard makes checkpoint replays no-ops, as for
 # every sketch view.
 
-DECONTAM_VIEW_VERSION = "v2"
+DECONTAM_VIEW_VERSION = "v3"
 
 
-def upsert_decontam_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    eval_hashes: DataFrame,
-    view_dir: str,
-    version: int,
-) -> None:
-    """Screen one micro-batch of documents (doc_id, text) against the
-    frozen banned-shingle hash set and append the contaminated rows'
-    overlap counts into the view as ``version``; committed-version
-    replays no-op.
-
-    The contaminated-row log GROWS with the corpus, so the commit is
-    a delta segment (O(batch) bytes written, round-14) under a
-    per-version manifest — append monoid, no read-time fold."""
-    from dynamodb_streaming_datalake_spark.operators.contamination import (
-        overlap_counts,
-    )
-    from dynamodb_streaming_datalake_spark.streaming.segments import (
-        commit_segment,
-    )
-
-    commit_segment(
-        spark, view_dir, overlap_counts(batch_df, eval_hashes), version
-    )
-
-
-def start_decontam_maintenance(
-    docs: DataFrame,
-    eval_hashes: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink over a document ingest stream; each
-    micro-batch appends its contaminated-doc rows. ``eval_hashes`` is
-    the frozen banned set (production: built once from the benchmark
-    suite, versioned with it, never derived from the stream)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_decontam_view(
-            batch_df.sparkSession,
-            batch_df,
-            eval_hashes,
-            view_dir,
-            version=batch_id,
-        )
-
-    writer = docs.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def decontam_view(eval_hashes: DataFrame) -> View:
+    """Documents (doc_id, text) -> overlap counts of the contaminated
+    rows against the frozen banned-shingle hash set ``eval_hashes``
+    (production: built once from the benchmark suite, versioned with
+    it, never derived from the stream). The log GROWS with the corpus,
+    so each commit is a delta segment (O(batch) bytes written,
+    round-14) — append monoid, no read-time fold."""
+    return segmented(lambda batch: overlap_counts(batch, eval_hashes))
 
 
 def _ensure_decontam_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed screen versions built with the real fold: even
     train doc_ids -> v=1, odd folded on top -> v=2 — so the final view
     must row-equal the one-shot batch screen."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
     from dynamodb_streaming_datalake_spark.operators.contamination import (
         EVAL_RATE,
         eval_shingle_set,
@@ -1583,21 +1007,14 @@ def _ensure_decontam_view(spark: SparkSession, sf_dir: str) -> str:
         DENOM,
         hash_bucket,
     )
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         d = read_table(spark, sf_dir, "documents")
         cut = int(EVAL_RATE * DENOM)
         bucket = hash_bucket(F.col("doc_id"))
-        banned = eval_shingle_set(d.where(bucket < cut))
+        view = decontam_view(eval_shingle_set(d.where(bucket < cut)))
         train = d.where(bucket >= cut)
-        upsert_decontam_view(
-            spark, train.where(F.col("doc_id") % 2 == 0), banned, view, version=1
-        )
-        upsert_decontam_view(
-            spark, train.where(F.col("doc_id") % 2 == 1), banned, view, version=2
-        )
+        _fold_halves(spark, train, build_dir, "doc_id", view)
 
     return ensure_cached_build(
         "decontamview", DECONTAM_VIEW_VERSION, sf_dir, build
@@ -1627,10 +1044,8 @@ def _register_decontam() -> None:
         and appends; the eval set's distinct hashes broadcast by
         construction. Contamination screening moves from a
         corpus-sized nightly batch to an ingest-time increment."""
-        import os
-
         path = _ensure_decontam_view(spark, sf_dir)
-        return current_sketch_view(spark, os.path.join(path, "view")).select(
+        return current_view(spark, os.path.join(path, "view")).select(
             "doc_id", "n_overlap"
         )
 
@@ -1658,7 +1073,7 @@ _register_decontam()
 # duplicated, or mis-folded a single signature row changes candidate
 # pairs and fails the hash.
 
-COMPACT_VIEW_VERSION = "v1"
+COMPACT_VIEW_VERSION = "v2"
 
 
 def _ensure_compacted_minhash_view(spark: SparkSession, sf_dir: str) -> str:
@@ -1666,10 +1081,6 @@ def _ensure_compacted_minhash_view(spark: SparkSession, sf_dir: str) -> str:
     versions, so consolidation must actually fold across segments),
     then compaction to a single consolidated segment — asserted, so a
     cache hit is always the compacted layout."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
     from dynamodb_streaming_datalake_spark.streaming.segments import (
         compact_segments,
         read_manifest,
@@ -1682,7 +1093,7 @@ def _ensure_compacted_minhash_view(spark: SparkSession, sf_dir: str) -> str:
             batch = d.where(
                 (F.col("doc_id") % 4).isin((v - 1) % 4, v % 4)
             )
-            upsert_minhash_view(spark, batch, view, version=v)
+            advance_view(spark, batch, view, v, MINHASH_VIEW)
         assert compact_segments(spark, view, max_segments=2)
         m = read_manifest(spark, view, 8)
         assert len(m["segments"]) == 1 and m["consolidated"], m
@@ -1698,7 +1109,6 @@ def _register_compaction() -> None:
         lsh_pairs_from_signatures,
     )
     from dynamodb_streaming_datalake_spark.registry import query
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     @query("q_view_compaction", oracle=_SQL_MINHASH_PAIRS)
     def q_view_compaction(spark, sf_dir):
@@ -1718,10 +1128,8 @@ def _register_compaction() -> None:
         triggered by segment count (max_segments); serving afterwards
         scans ONE right-sized segment with a no-op consolidator
         instead of K small files plus a read-time groupBy."""
-        import os
-
         path = _ensure_compacted_minhash_view(spark, sf_dir)
-        sigs = current_sketch_view(spark, os.path.join(path, "view"))
+        sigs = current_view(spark, os.path.join(path, "view"))
         docs = read_table(spark, sf_dir, "documents")
         return lsh_pairs_from_signatures(sigs, docs)
 
@@ -1744,7 +1152,7 @@ _register_compaction()
 # Online model refresh without a training job: the filter's weights
 # are a SELECT away at any moment of ingest.
 
-PROBE_VIEW_VERSION = "v1"
+PROBE_VIEW_VERSION = "v2"
 
 
 def merge_probe_gram(prev: DataFrame, delta: DataFrame) -> DataFrame:
@@ -1757,67 +1165,18 @@ def merge_probe_gram(prev: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def upsert_probe_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-) -> None:
-    """Fold one micro-batch of documents into the Gram view as
-    ``version``; committed-version replays no-op (the sums are
-    non-idempotent — the crash guard is the safety)."""
-    from dynamodb_streaming_datalake_spark.operators.probe import (
-        probe_features,
-        probe_gram,
-    )
-
-    if version in _versions(spark, view_dir):
-        return
-    delta = probe_gram(probe_features(batch_df))
-    prev = current_snapshot(spark, view_dir, live_only=False)
-    merged = delta if prev is None else merge_probe_gram(prev, delta)
-    merged.write.mode("overwrite").parquet(f"{view_dir}/v={version}")
-
-
-def start_probe_maintenance(
-    docs: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink over a document ingest stream; each
-    micro-batch advances the 9-number Gram state one version."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_probe_view(
-            batch_df.sparkSession, batch_df, view_dir, version=batch_id
-        )
-
-    writer = docs.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+#: documents -> the 9-integer Gram/moment row; the sums are
+#: non-idempotent, so the replay guard is the safety
+PROBE_VIEW = monoid(lambda batch: probe_gram(probe_features(batch)), merge_probe_gram)
 
 
 def _ensure_probe_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed Gram versions built with the real fold: even
     doc_ids -> v=1, odd folded on top -> v=2."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         d = read_table(spark, sf_dir, "documents")
-        upsert_probe_view(
-            spark, d.where(F.col("doc_id") % 2 == 0), view, version=1
-        )
-        upsert_probe_view(
-            spark, d.where(F.col("doc_id") % 2 == 1), view, version=2
-        )
+        _fold_halves(spark, d, build_dir, "doc_id", PROBE_VIEW)
 
     return ensure_cached_build("probeview", PROBE_VIEW_VERSION, sf_dir, build)
 
@@ -1825,12 +1184,10 @@ def _ensure_probe_view(spark: SparkSession, sf_dir: str) -> str:
 def _register_probe() -> None:
     from dynamodb_streaming_datalake_spark.operators.probe import (
         SQL_LINEAR_PROBE,
-        probe_features,
         probe_report,
         probe_solve,
     )
     from dynamodb_streaming_datalake_spark.registry import query
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     @query("q_probe_stream", oracle=SQL_LINEAR_PROBE)
     def q_probe_stream(spark, sf_dir):
@@ -1850,10 +1207,8 @@ def _register_probe() -> None:
         quality filter retrains 'for free' on every micro-batch, which
         is exactly how an ingest-time quality gate keeps its
         coefficients from going stale."""
-        import os
-
         path = _ensure_probe_view(spark, sf_dir)
-        gram = current_sketch_view(spark, os.path.join(path, "view"))
+        gram = current_view(spark, os.path.join(path, "view"))
         feats = probe_features(read_table(spark, sf_dir, "documents"))
         return probe_report(feats, probe_solve(gram))
 
@@ -1874,7 +1229,7 @@ _register_probe()
 # committed-version guard is what makes checkpoint replays safe, the
 # CMS precedent.
 
-OHLC_VIEW_VERSION = "v1"
+OHLC_VIEW_VERSION = "v2"
 
 _OHLC_KEYS = ("event_type", "hour_bucket")
 
@@ -1896,77 +1251,27 @@ def merge_ohlc(prev: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def upsert_ohlc_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-) -> None:
-    """Fold one micro-batch of raw events into the bar view as
-    ``version``; committed-version replays no-op (crash-replay guard
-    for the non-idempotent sums)."""
-    from dynamodb_streaming_datalake_spark.operators.analytics_ext import (
-        ohlc_bars,
-    )
-
-    if version in _versions(spark, view_dir):
-        return
-    delta = ohlc_bars(batch_df)
-    prev = current_snapshot(spark, view_dir, live_only=False)
-    merged = delta if prev is None else merge_ohlc(prev, delta)
-    merged.write.mode("overwrite").parquet(f"{view_dir}/v={version}")
-
-
-def start_ohlc_maintenance(
-    events: DataFrame,
-    view_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """foreachBatch sink over a raw-events stream; each micro-batch
-    advances the bar view one version."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_ohlc_view(
-            batch_df.sparkSession, batch_df, view_dir, version=batch_id
-        )
-
-    writer = events.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+#: raw events -> hourly OHLC/VWAP bars; the sums are non-idempotent,
+#: so the replay guard is what makes checkpoint replays safe
+OHLC_VIEW = monoid(ohlc_bars, merge_ohlc)
 
 
 def _ensure_ohlc_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed bar versions built with the real fold: even
     event ids -> v=1, odd folded on top -> v=2 — so the final view
     must bar-equal a one-shot build over the whole table."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         ev = read_table(spark, sf_dir, "events")
-        upsert_ohlc_view(
-            spark, ev.where(F.col("event_id") % 2 == 0), view, version=1
-        )
-        upsert_ohlc_view(
-            spark, ev.where(F.col("event_id") % 2 == 1), view, version=2
-        )
+        _fold_halves(spark, ev, build_dir, "event_id", OHLC_VIEW)
 
     return ensure_cached_build("ohlcview", OHLC_VIEW_VERSION, sf_dir, build)
 
 
 def _register_ohlc() -> None:
-    # ensure the batch twin is registered before aliasing its oracle:
-    # registry.load_all() orders analytics_ext first, but a standalone
-    # `import streaming.sketchview` (tests import modules directly)
-    # must not depend on that ordering
-    import dynamodb_streaming_datalake_spark.operators.analytics_ext  # noqa: F401
+    # the module-level ohlc_bars import has registered the batch twin,
+    # so its oracle is there to alias even when a test imports this
+    # module on its own
     from dynamodb_streaming_datalake_spark.registry import ORACLE, query
 
     @query("q_ohlc_stream", oracle=None)
@@ -1985,10 +1290,8 @@ def _register_ohlc() -> None:
         map-side-combined groupBy) and merges bar-wise against a view
         whose size is bounded by live (series x hour) buckets —
         nothing event-sized is ever rescanned."""
-        import os
-
         path = _ensure_ohlc_view(spark, sf_dir)
-        bars = current_sketch_view(spark, os.path.join(path, "view"))
+        bars = current_view(spark, os.path.join(path, "view"))
         return bars.select(
             "event_type",
             F.col("hour_bucket").cast("bigint").alias("hour_bucket"),
@@ -2020,7 +1323,7 @@ _register_ohlc()
 # whole history. Non-idempotent sums -> the MVCC committed-version
 # guard, the CMS precedent.
 
-SPRT_VIEW_VERSION = "v1"
+SPRT_VIEW_VERSION = "v2"
 
 
 def _sprt_delta(batch_df: DataFrame) -> DataFrame:
@@ -2038,35 +1341,14 @@ def merge_sprt(prev: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def upsert_sprt_view(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    view_dir: str,
-    version: int,
-) -> None:
-    if version in _versions(spark, view_dir):
-        return
-    delta = _sprt_delta(batch_df)
-    prev = current_snapshot(spark, view_dir, live_only=False)
-    merged = delta if prev is None else merge_sprt(prev, delta)
-    merged.write.mode("overwrite").parquet(f"{view_dir}/v={version}")
+#: raw events -> the (n, k) test state
+SPRT_VIEW = monoid(_sprt_delta, merge_sprt)
 
 
 def _ensure_sprt_view(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
-
     def build(build_dir: str) -> None:
-        view = os.path.join(build_dir, "view")
         ev = read_table(spark, sf_dir, "events")
-        upsert_sprt_view(
-            spark, ev.where(F.col("event_id") % 2 == 0), view, version=1
-        )
-        upsert_sprt_view(
-            spark, ev.where(F.col("event_id") % 2 == 1), view, version=2
-        )
+        _fold_halves(spark, ev, build_dir, "event_id", SPRT_VIEW)
 
     return ensure_cached_build("sprtview", SPRT_VIEW_VERSION, sf_dir, build)
 
@@ -2112,10 +1394,8 @@ def _register_sprt() -> None:
 
         Scale: state is two integers; each refresh aggregates only
         the micro-batch."""
-        import os
-
         path = _ensure_sprt_view(spark, sf_dir)
-        st = current_sketch_view(spark, os.path.join(path, "view"))
+        st = current_view(spark, os.path.join(path, "view"))
         llr = F.col("k") * F.lit(SPRT_L1) + (
             F.col("n") - F.col("k")
         ) * F.lit(SPRT_L0)

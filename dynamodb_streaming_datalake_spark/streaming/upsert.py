@@ -8,8 +8,10 @@ micro-batch's newest-per-key rows into a versioned Parquet snapshot.
 Plain Parquet has no ACID upsert, so versions are MVCC directories —
 ``<dir>/v=<n>`` written whole, readers resolve the max committed
 version (the write is atomic at directory granularity because a version
-is never read until its ``_SUCCESS`` exists). In production you would
-swap the inner merge for Delta/Iceberg ``MERGE INTO`` and keep the
+is never read until its ``_SUCCESS`` exists). The snapshot is one
+whole-directory view of the ``streaming.views`` kernel, which owns the
+sink, the replay guard and the commit. In production you would swap
+the inner merge for Delta/Iceberg ``MERGE INTO`` and keep the
 surrounding plumbing; the interface is format-agnostic on purpose.
 
 Scale: each upsert shuffles (previous snapshot ∪ batch) once on the
@@ -30,39 +32,32 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from dynamodb_streaming_datalake_spark.cache import memo
 from dynamodb_streaming_datalake_spark.operators.state import latest_state
-from dynamodb_streaming_datalake_spark.sources.readers import _table_schema
+from dynamodb_streaming_datalake_spark.streaming.views import (
+    View,
+    advance_view,
+    current_view,
+    start_view,
+)
 
 
-def _versions(spark: SparkSession, snapshot_dir: str) -> list[int]:
-    """Committed versions, ascending: one glob for the ``_SUCCESS``
-    markers, so the cost does not grow a namenode call per version."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    marker = jvm.org.apache.hadoop.fs.Path(f"{snapshot_dir}/v=*/_SUCCESS")
-    found = marker.getFileSystem(conf).globStatus(marker) or []
-    return sorted(int(s.getPath().getParent().getName()[2:]) for s in found)
+def snapshot_view(keys: Sequence[str], order_by: Sequence[str]) -> View:
+    """The snapshot as a whole-directory view: one ``latest_state``
+    over (previous snapshot ∪ batch), so the commit is a single
+    shuffle. Every row of a key competes on the same order key, so
+    re-merging the same rows produces the same snapshot."""
 
-
-def _as_nullable(dt: T.DataType) -> T.DataType:
-    """``dt`` with every field, element and map value nullable — the
-    schema Spark reports for a Parquet file it reads back."""
-    if isinstance(dt, T.StructType):
-        return T.StructType(
-            [
-                T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
-                for f in dt.fields
-            ]
+    def fold(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        rows = (
+            batch
+            if prev is None
+            else prev.unionByName(batch, allowMissingColumns=True)
         )
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_as_nullable(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
-    return dt
+        return latest_state(rows, keys, order_by)
+
+    return View(fold)
 
 
 def current_snapshot(
@@ -78,68 +73,10 @@ def current_snapshot(
     ``live_only=False`` exposes them for merge/debug. ``version`` time-
     travels to an older committed version (MVCC dirs are immutable once
     committed, so every past state stays readable until vacuumed)."""
-    vs = _versions(spark, snapshot_dir)
-    if not vs:
-        return None
-    if version is None:
-        version = vs[-1]
-    elif version not in vs:
-        raise ValueError(f"version {version} not committed; have {vs}")
-    # Growing views (round 14) commit versions as delta-segment
-    # manifests instead of whole directories; the read contract (time
-    # travel, _SUCCESS gating) is identical either way.
-    from dynamodb_streaming_datalake_spark.streaming.segments import (
-        read_manifest,
-        read_segmented,
-    )
-
-    manifest = read_manifest(spark, snapshot_dir, version)
-    if manifest is not None:
-        df = read_segmented(spark, snapshot_dir, manifest)
-    else:
-        path = f"{snapshot_dir}/v={version}"
-        df = spark.read.schema(_table_schema(spark, path)).parquet(path)
-    return df.where(F.col(event_col) != delete_event) if live_only else df
-
-
-def upsert_snapshot(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    snapshot_dir: str,
-    keys: Sequence[str],
-    order_by: Sequence[str],
-    version: int,
-) -> None:
-    """Merge one micro-batch into the snapshot, writing version ``version``.
-
-    One ``latest_state`` over (previous snapshot ∪ batch): partial
-    aggregation reduces the batch per key map-side, so the commit is a
-    single shuffle. Every row of a key competes on the same order key,
-    so replayed batches (checkpoint recovery re-running foreachBatch)
-    are idempotent: re-merging the same rows produces the same snapshot.
-    Once the write returns, the version's schema is stored in the
-    ``table_schema`` memo, so reading it back infers nothing.
-
-    Replay of an ALREADY-COMMITTED version is a no-op: if ``v=<version>``
-    has a _SUCCESS marker the batch's merge result is durably on disk,
-    and re-running would make ``current_snapshot`` read ``v=<version>``
-    while overwriting the same directory (Spark rejects overwriting a
-    path being read from — the stream would fail permanently on every
-    restart). This happens when a crash lands between the snapshot
-    commit and the checkpoint commit.
-    """
-    if version in _versions(spark, snapshot_dir):
-        return
-    prev = current_snapshot(spark, snapshot_dir, live_only=False)
-    rows = (
-        batch_df
-        if prev is None
-        else prev.unionByName(batch_df, allowMissingColumns=True)
-    )
-    merged = latest_state(rows, keys, order_by)
-    path = f"{snapshot_dir}/v={version}"
-    merged.write.mode("overwrite").parquet(path)
-    memo("table_schema", (path,), lambda: _as_nullable(merged.schema))
+    df = current_view(spark, snapshot_dir, version)
+    if df is None or not live_only:
+        return df
+    return df.where(F.col(event_col) != delete_event)
 
 
 def start_snapshot_maintenance(
@@ -148,7 +85,6 @@ def start_snapshot_maintenance(
     checkpoint_dir: str,
     keys: Sequence[str] = ("id", "name"),
     order_by: Sequence[str] = ("event_time", "eventID"),
-    available_now: bool = True,
 ) -> StreamingQuery:
     """foreachBatch sink: continuously-maintained current-table-state.
 
@@ -157,72 +93,62 @@ def start_snapshot_maintenance(
     always serves the last committed version (readers never see a
     half-written merge).
     """
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_snapshot(
-            batch_df.sparkSession,
-            batch_df,
-            snapshot_dir,
-            keys,
-            order_by,
-            version=batch_id,
-        )
-
-    writer = ok_rows.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return start_view(
+        ok_rows, snapshot_dir, checkpoint_dir, snapshot_view(keys, order_by)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
 # driver-gated MVCC lifecycle (round 5)
 # ---------------------------------------------------------------------------
 
-_MVCC_VERSION = "v2"
+_MVCC_VERSION = "v3"
+
+#: the MVCC fixtures' snapshot: events keyed (id, name), newest
+#: (event_time_s, eventID) wins
+_MVCC_VIEW = snapshot_view(("id", "name"), ("event_time_s", "eventID"))
+
+
+def _mvcc_days(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    """The events shaped as CDC rows (every 10th a REMOVE), split into
+    day 1, day 2 and the rest — one micro-batch each."""
+    from dynamodb_streaming_datalake_spark.sources.readers import read_table
+
+    ev = read_table(spark, sf_dir, "events")
+    shaped = ev.select(
+        F.col("user_id").cast("string").alias("id"),
+        F.col("event_type").alias("name"),
+        F.col("value"),
+        F.when(F.col("event_id") % 10 == 0, F.lit("REMOVE"))
+        .when(F.col("event_id") % 2 == 0, F.lit("INSERT"))
+        .otherwise(F.lit("MODIFY"))
+        .alias("Event"),
+        F.unix_timestamp(F.col("ts").cast("timestamp")).alias("event_time_s"),
+        F.format_string("ev-%010d", F.col("event_id")).alias("eventID"),
+    )
+    t = F.col("event_time_s")
+    day2 = F.unix_timestamp(F.lit("2024-01-02 00:00:00").cast("timestamp"))
+    day3 = F.unix_timestamp(F.lit("2024-01-03 00:00:00").cast("timestamp"))
+    return [
+        shaped.where(t < day2),
+        shaped.where((t >= day2) & (t < day3)),
+        shaped.where(t >= day3),
+    ]
 
 
 def _ensure_mvcc_snapshots(spark: SparkSession, sf_dir: str) -> str:
     """Two committed snapshot versions built once per (version, sf_dir):
     v=1 upserts day-1 CDC rows, v=2 upserts day-2 on top — the exact
-    foreachBatch kernel (`upsert_snapshot`), driven as two batches.
+    foreachBatch kernel (``advance_view``), driven as two batches.
     Shared cache discipline (`cache.ensure_cached_build`)."""
     import os
 
     from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     def build(build_dir: str) -> None:
         snap = os.path.join(build_dir, "snapshot")
-        ev = read_table(spark, sf_dir, "events")
-        shaped = ev.select(
-            F.col("user_id").cast("string").alias("id"),
-            F.col("event_type").alias("name"),
-            F.col("value"),
-            F.when(F.col("event_id") % 10 == 0, F.lit("REMOVE"))
-            .when(F.col("event_id") % 2 == 0, F.lit("INSERT"))
-            .otherwise(F.lit("MODIFY"))
-            .alias("Event"),
-            F.unix_timestamp(F.col("ts").cast("timestamp")).alias(
-                "event_time_s"
-            ),
-            F.format_string("ev-%010d", F.col("event_id")).alias("eventID"),
-        )
-        day2_start = F.unix_timestamp(
-            F.lit("2024-01-02 00:00:00").cast("timestamp")
-        )
-        day3_start = F.unix_timestamp(
-            F.lit("2024-01-03 00:00:00").cast("timestamp")
-        )
-        day1 = shaped.where(F.col("event_time_s") < day2_start)
-        day2 = shaped.where(
-            (F.col("event_time_s") >= day2_start)
-            & (F.col("event_time_s") < day3_start)
-        )
-        keys, order = ["id", "name"], ["event_time_s", "eventID"]
-        upsert_snapshot(spark, day1, snap, keys, order, version=1)
-        upsert_snapshot(spark, day2, snap, keys, order, version=2)
+        for v, day in enumerate(_mvcc_days(spark, sf_dir)[:2], start=1):
+            advance_view(spark, day, snap, v, _MVCC_VIEW)
 
     return ensure_cached_build("mvcc", _MVCC_VERSION, sf_dir, build)
 
@@ -308,31 +234,14 @@ _register()
 # Committed versions are immutable and keep every past state readable —
 # and therefore grow without bound. VACUUM is the retention half of the
 # MVCC contract: delete all but the newest ``keep_last`` committed
-# versions. Readers of surviving versions are untouched (versions are
-# whole immutable directories, so deletion is per-version atomic from
-# a reader's perspective: a version is either fully there or gone);
-# time travel to a vacuumed version fails loudly.
+# versions (``segments.vacuum_view``, the one vacuum for every view).
+# Readers of surviving versions are untouched (versions are whole
+# immutable directories, so deletion is per-version atomic from a
+# reader's perspective: a version is either fully there or gone); time
+# travel to a vacuumed version fails loudly.
 
 
-def vacuum_snapshots(
-    spark: SparkSession, snapshot_dir: str, keep_last: int
-) -> list[int]:
-    """Delete all but the newest ``keep_last`` committed versions;
-    returns the version numbers removed. ``keep_last`` must be >= 1 —
-    the current version is never vacuumable."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1 (cannot vacuum the head)")
-    vs = _versions(spark, snapshot_dir)
-    doomed = vs[:-keep_last] if len(vs) > keep_last else []
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    for v in doomed:
-        path = jvm.org.apache.hadoop.fs.Path(f"{snapshot_dir}/v={v}")
-        path.getFileSystem(conf).delete(path, True)
-    return doomed
-
-
-_VACUUM_VERSION = "v2"
+_VACUUM_VERSION = "v3"
 
 
 def _ensure_vacuumed_snapshots(spark: SparkSession, sf_dir: str) -> str:
@@ -343,43 +252,15 @@ def _ensure_vacuumed_snapshots(spark: SparkSession, sf_dir: str) -> str:
     import os
 
     from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-    from dynamodb_streaming_datalake_spark.sources.readers import read_table
+    from dynamodb_streaming_datalake_spark.streaming.segments import (
+        vacuum_view,
+    )
 
     def build(build_dir: str) -> None:
         snap = os.path.join(build_dir, "snapshot")
-        ev = read_table(spark, sf_dir, "events")
-        shaped = ev.select(
-            F.col("user_id").cast("string").alias("id"),
-            F.col("event_type").alias("name"),
-            F.col("value"),
-            F.when(F.col("event_id") % 10 == 0, F.lit("REMOVE"))
-            .when(F.col("event_id") % 2 == 0, F.lit("INSERT"))
-            .otherwise(F.lit("MODIFY"))
-            .alias("Event"),
-            F.unix_timestamp(F.col("ts").cast("timestamp")).alias(
-                "event_time_s"
-            ),
-            F.format_string("ev-%010d", F.col("event_id")).alias("eventID"),
-        )
-        day2 = F.unix_timestamp(F.lit("2024-01-02 00:00:00").cast("timestamp"))
-        day3 = F.unix_timestamp(F.lit("2024-01-03 00:00:00").cast("timestamp"))
-        keys, order = ["id", "name"], ["event_time_s", "eventID"]
-        upsert_snapshot(
-            spark, shaped.where(F.col("event_time_s") < day2), snap,
-            keys, order, version=1,
-        )
-        upsert_snapshot(
-            spark,
-            shaped.where(
-                (F.col("event_time_s") >= day2) & (F.col("event_time_s") < day3)
-            ),
-            snap, keys, order, version=2,
-        )
-        upsert_snapshot(
-            spark, shaped.where(F.col("event_time_s") >= day3), snap,
-            keys, order, version=3,
-        )
-        deleted = vacuum_snapshots(spark, snap, keep_last=2)
+        for v, day in enumerate(_mvcc_days(spark, sf_dir), start=1):
+            advance_view(spark, day, snap, v, _MVCC_VIEW)
+        deleted = vacuum_view(spark, snap, keep_last=2)[0]
         assert deleted == [1], deleted
 
     return ensure_cached_build("mvccvac", _VACUUM_VERSION, sf_dir, build)

@@ -20,16 +20,24 @@ from pyspark.sql import functions as F
 
 from dynamodb_streaming_datalake_spark.sources.readers import read_table
 from dynamodb_streaming_datalake_spark.streaming.segments import (
-    commit_segment,
+    _versions,
     compact_segments,
     read_manifest,
     segment_bytes,
     vacuum_view,
 )
-from dynamodb_streaming_datalake_spark.streaming.upsert import (
-    _versions,
-    current_snapshot,
+from dynamodb_streaming_datalake_spark.streaming.upsert import current_snapshot
+from dynamodb_streaming_datalake_spark.streaming.views import (
+    advance_view,
+    current_view,
+    monoid,
+    segmented,
 )
+
+#: segmented views committing each batch as given: precomputed MinHash
+#: signatures (folded at read by column-wise MIN), and plain appends
+MINHASH_SEGMENTS = segmented(lambda batch: batch, "minhash_min")
+APPEND = segmented(lambda batch: batch)
 
 
 def _docs(spark, sf_smoke):
@@ -54,8 +62,8 @@ def test_commit_writes_o_delta_bytes(spark, tmp_path, sf_smoke):
     view = str(tmp_path / "view")
     bulk = minhash_signatures(d.where(F.col("doc_id") % 50 != 0)).coalesce(1)
     delta = minhash_signatures(d.where(F.col("doc_id") % 50 == 0)).coalesce(1)
-    commit_segment(spark, view, bulk, version=1, consolidate="minhash_min")
-    commit_segment(spark, view, delta, version=2, consolidate="minhash_min")
+    advance_view(spark, bulk, view, 1, MINHASH_SEGMENTS)
+    advance_view(spark, delta, view, 2, MINHASH_SEGMENTS)
 
     b1 = segment_bytes(spark, view, f"{1:010d}")
     b2 = segment_bytes(spark, view, f"{2:010d}")
@@ -92,12 +100,10 @@ def test_commit_replay_is_noop_and_uncommitted_rewrite_is_clean(
 
     sigs = minhash_signatures(d)
     view = str(tmp_path / "view")
-    commit_segment(spark, view, sigs, 1, consolidate="minhash_min")
+    advance_view(spark, sigs, view, 1, MINHASH_SEGMENTS)
     before = _rows(current_snapshot(spark, view, live_only=False))
     # committed replay: different delta under the same version must no-op
-    commit_segment(
-        spark, view, sigs.limit(5), 1, consolidate="minhash_min"
-    )
+    advance_view(spark, sigs.limit(5), view, 1, MINHASH_SEGMENTS)
     assert _rows(current_snapshot(spark, view, live_only=False)) == before
 
     # simulate a crash: segment for v=2 exists but no manifest/_SUCCESS
@@ -106,10 +112,44 @@ def test_commit_replay_is_noop_and_uncommitted_rewrite_is_clean(
     assert _versions(spark, view) == [1]
     # foreachBatch redelivers batch 2: the commit overwrites the same
     # segment path and completes
-    commit_segment(spark, view, half, 2, consolidate="minhash_min")
+    advance_view(spark, half, view, 2, MINHASH_SEGMENTS)
     assert _versions(spark, view) == [1, 2]
     got = {r["doc_id"] for r in current_snapshot(spark, view, live_only=False).collect()}
     assert got == {r["doc_id"] for r in half.collect()}
+
+
+@pytest.mark.parametrize("form", ["whole", "segment"])
+def test_kernel_replay_is_noop_and_crash_before_commit_recommits(
+    spark, tmp_path, sf_smoke, form
+):
+    """The one replay guard, for both commit forms of an append view
+    (non-idempotent, so a double application would show): replaying a
+    committed version with other rows changes nothing, and a crash
+    after the data write but before the ``_SUCCESS`` marker leaves the
+    version uncommitted until its replay re-commits the same rows."""
+    import os
+
+    view = {
+        "whole": monoid(lambda batch: batch, lambda prev, d: prev.unionByName(d)),
+        "segment": APPEND,
+    }[form]
+    d = _docs(spark, sf_smoke)
+    view_dir = str(tmp_path / "view")
+    even, odd = d.where(F.col("doc_id") % 2 == 0), d.where(F.col("doc_id") % 2 == 1)
+    advance_view(spark, even, view_dir, 1, view)
+    v1 = _rows(current_view(spark, view_dir))
+    assert v1 == _rows(even)
+    advance_view(spark, d.limit(5), view_dir, 1, view)
+    assert _rows(current_view(spark, view_dir)) == v1
+
+    advance_view(spark, odd, view_dir, 2, view)
+    os.remove(f"{view_dir}/v=2/_SUCCESS")  # the crash: data written, no commit
+    assert _versions(spark, view_dir) == [1]
+    assert _rows(current_view(spark, view_dir)) == v1
+    advance_view(spark, odd, view_dir, 2, view)  # foreachBatch redelivers batch 2
+    assert _versions(spark, view_dir) == [1, 2]
+    assert _rows(current_view(spark, view_dir)) == _rows(d)
+    assert _rows(current_view(spark, view_dir, version=1)) == v1
 
 
 def test_compaction_preserves_rows_and_future_commits_chain(
@@ -130,10 +170,7 @@ def test_compaction_preserves_rows_and_future_commits_chain(
     for v in range(1, 11):
         # overlapping slices: doc ids appear in two versions each
         batch = d.where((F.col("doc_id") % 5).isin((v - 1) % 5, v % 5))
-        commit_segment(
-            spark, view, minhash_signatures(batch), v,
-            consolidate="minhash_min",
-        )
+        advance_view(spark, minhash_signatures(batch), view, v, MINHASH_SEGMENTS)
     before = _rows(current_snapshot(spark, view, live_only=False))
     assert before == _rows(minhash_signatures(d))  # monoid sanity
 
@@ -151,13 +188,7 @@ def test_compaction_preserves_rows_and_future_commits_chain(
     assert len(m9["segments"]) == 9
 
     # the next commit chains off the compacted head
-    commit_segment(
-        spark,
-        view,
-        minhash_signatures(d.limit(7)),
-        11,
-        consolidate="minhash_min",
-    )
+    advance_view(spark, minhash_signatures(d.limit(7)), view, 11, MINHASH_SEGMENTS)
     m11 = read_manifest(spark, view, 11)
     assert len(m11["segments"]) == 2
     assert _rows(current_snapshot(spark, view, live_only=False)) == before
@@ -179,8 +210,8 @@ def test_vacuum_reclaims_versions_and_unreferenced_segments(
     banned = eval_shingle_set(d.where(F.col("doc_id") % 97 == 0))
     view = str(tmp_path / "view")
     for v in range(1, 7):
-        commit_segment(
-            spark, view, overlap_counts(d.where(F.col("doc_id") % 6 == v - 1), banned), v
+        advance_view(
+            spark, overlap_counts(d.where(F.col("doc_id") % 6 == v - 1), banned), view, v, APPEND
         )
     head_before = _rows(current_snapshot(spark, view, live_only=False))
     assert compact_segments(spark, view, max_segments=2) is True
@@ -215,13 +246,13 @@ def test_mixed_layout_is_refused(spark, tmp_path, sf_smoke):
     view = str(tmp_path / "view")
     d.write.parquet(f"{view}/v=1")
     with pytest.raises(ValueError, match="not a segmented commit"):
-        commit_segment(spark, view, d, 2)
+        advance_view(spark, d, view, 2, APPEND)
 
 
 def test_segment_lifecycle_soak_16_batches(spark, tmp_path, sf_smoke):
     """r14 verdict item 4 / r15 item 5 — the segment lifecycle soak:
     >=16 micro-batches drained through the REAL streaming fold
-    (upsert_minhash_view inside foreachBatch), with compaction
+    (the MinHash view's advance_view inside foreachBatch), with compaction
     attempted after every commit as the mid-stream maintenance hook.
     Pins, per batch:
 
@@ -243,7 +274,7 @@ def test_segment_lifecycle_soak_16_batches(spark, tmp_path, sf_smoke):
         SEG_SUBDIR,
     )
     from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        upsert_minhash_view,
+        MINHASH_VIEW,
     )
 
     n_batches, max_segments = 16, 6
@@ -260,7 +291,7 @@ def test_segment_lifecycle_soak_16_batches(spark, tmp_path, sf_smoke):
 
     def handle(bdf, bid):
         s = bdf.sparkSession
-        upsert_minhash_view(s, bdf, view, version=bid)
+        advance_view(s, bdf, view, bid, MINHASH_VIEW)
         compacted = compact_segments(s, view, max_segments=max_segments)
         head = _versions(s, view)[-1]
         man = read_manifest(s, view, head)

@@ -218,7 +218,8 @@ def test_snapshot_maintenance_matches_batch(spark, tmp_path):
     assert stored.count() == got.count() + n_removed_keys
 
     # late replay of an OLD event for a removed key must not resurrect it
-    from dynamodb_streaming_datalake_spark.streaming.upsert import upsert_snapshot
+    from dynamodb_streaming_datalake_spark.streaming.upsert import snapshot_view
+    from dynamodb_streaming_datalake_spark.streaming.views import advance_view
 
     removed = stored.where(F.col("Event") == "REMOVE").first()
     if removed is not None:
@@ -228,9 +229,9 @@ def test_snapshot_maintenance_matches_batch(spark, tmp_path):
             & (F.col("Event") != "REMOVE")
         ).limit(1)
         if late.count():
-            upsert_snapshot(
-                spark, late, snap_dir, ["id", "name"], ["event_time", "eventID"],
-                version=9999,
+            advance_view(
+                spark, late, snap_dir, 9999,
+                snapshot_view(["id", "name"], ["event_time", "eventID"]),
             )
             still = current_snapshot(spark, snap_dir).where(
                 (F.col("id") == removed["id"]) & (F.col("name") == removed["name"])
@@ -268,8 +269,9 @@ def test_snapshot_time_travel(spark, tmp_path):
     state even after later upserts rewrote the current view."""
     from dynamodb_streaming_datalake_spark.streaming.upsert import (
         current_snapshot,
-        upsert_snapshot,
+        snapshot_view,
     )
+    from dynamodb_streaming_datalake_spark.streaming.views import advance_view
     import pytest as _pytest
 
     fx = generate_fixture(n_keys=20, n_events=120, unknown_rate=0.0)
@@ -278,9 +280,9 @@ def test_snapshot_time_travel(spark, tmp_path):
     half = ok.where(F.col("eventID") < "ev-160")
     snap = str(tmp_path / "snap")
     keys, order = ["id", "name"], ["event_time", "eventID"]
-    upsert_snapshot(spark, half, snap, keys, order, version=0)
+    advance_view(spark, half, snap, 0, snapshot_view(keys, order))
     v0_rows = current_snapshot(spark, snap).count()
-    upsert_snapshot(spark, ok, snap, keys, order, version=1)
+    advance_view(spark, ok, snap, 1, snapshot_view(keys, order))
     assert current_snapshot(spark, snap, version=0).count() == v0_rows
     assert current_snapshot(spark, snap).count() >= v0_rows - ok.where(
         F.col("Event") == "REMOVE"
@@ -310,11 +312,12 @@ def test_kinesis_swap_point_config_and_stub(spark):
 
 
 def test_snapshot_vacuum_keeps_recent_versions(spark, tmp_path):
+    from dynamodb_streaming_datalake_spark.streaming.segments import vacuum_view
     from dynamodb_streaming_datalake_spark.streaming.upsert import (
         current_snapshot,
-        upsert_snapshot,
-        vacuum_snapshots,
+        snapshot_view,
     )
+    from dynamodb_streaming_datalake_spark.streaming.views import advance_view
 
     fx = generate_fixture(n_keys=10, n_events=60, unknown_rate=0.0)
     raw = spark.createDataFrame([(l,) for l in fx.json_lines()], "json string")
@@ -322,10 +325,10 @@ def test_snapshot_vacuum_keeps_recent_versions(spark, tmp_path):
     snap = str(tmp_path / "snap")
     keys, order = ["id", "name"], ["event_time", "eventID"]
     for v in range(4):
-        upsert_snapshot(spark, ok, snap, keys, order, version=v)
+        advance_view(spark, ok, snap, v, snapshot_view(keys, order))
     final_rows = current_snapshot(spark, snap).count()
 
-    removed = vacuum_snapshots(spark, snap, keep_last=2)
+    removed = vacuum_view(spark, snap, keep_last=2)[0]
     assert removed == [0, 1]
     assert current_snapshot(spark, snap).count() == final_rows  # current intact
     assert current_snapshot(spark, snap, version=2).count() == final_rows
@@ -365,18 +368,19 @@ def test_upsert_replay_of_committed_version_is_noop(spark, tmp_path):
     rejects, wedging the stream permanently."""
     from dynamodb_streaming_datalake_spark.streaming.upsert import (
         current_snapshot,
-        upsert_snapshot,
+        snapshot_view,
     )
+    from dynamodb_streaming_datalake_spark.streaming.views import advance_view
 
     fx = generate_fixture(n_keys=15, n_events=90, unknown_rate=0.0)
     raw = spark.createDataFrame([(l,) for l in fx.json_lines()], "json string")
     ok, _ = cdc_transform(raw, attributes=ATTRS, ingestion_ts=EVENT_TS())
     snap = str(tmp_path / "snap")
     keys, order = ["id", "name"], ["event_time", "eventID"]
-    upsert_snapshot(spark, ok, snap, keys, order, version=0)
+    advance_view(spark, ok, snap, 0, snapshot_view(keys, order))
     want = sorted(map(tuple, current_snapshot(spark, snap, live_only=False).collect()))
     # replay the same batch at the same version: must not raise, must not change
-    upsert_snapshot(spark, ok, snap, keys, order, version=0)
+    advance_view(spark, ok, snap, 0, snapshot_view(keys, order))
     got = sorted(map(tuple, current_snapshot(spark, snap, live_only=False).collect()))
     assert got == want
 
@@ -429,18 +433,18 @@ def test_snapshot_commit_is_one_shuffle_and_reads_infer_nothing(spark, tmp_path)
     from dynamodb_streaming_datalake_spark import cache
     from dynamodb_streaming_datalake_spark.streaming.upsert import (
         current_snapshot,
-        upsert_snapshot,
+        snapshot_view,
     )
+    from dynamodb_streaming_datalake_spark.streaming.views import advance_view
 
     fx = generate_fixture(n_keys=40, n_events=300, unknown_rate=0.0)
     ok = _ok_rows(spark, fx.json_lines())
     snap = str(tmp_path / "snap")
     keys, order = ["id", "name"], ["event_time", "eventID"]
-    upsert_snapshot(
-        spark, ok.where(F.col("eventID") < "ev-250"), snap, keys, order, version=0
-    )
+    view = snapshot_view(keys, order)
+    advance_view(spark, ok.where(F.col("eventID") < "ev-250"), snap, 0, view)
     _, jobs, stages = _in_job_group(
-        spark, "commit", lambda: upsert_snapshot(spark, ok, snap, keys, order, version=1)
+        spark, "commit", lambda: advance_view(spark, ok, snap, 1, view)
     )
     assert jobs >= 1 and stages <= 3, (jobs, stages)
 
@@ -470,8 +474,9 @@ def test_snapshot_versions_replay_late_events_and_tombstones(spark, tmp_path, sc
 
     from dynamodb_streaming_datalake_spark.streaming.upsert import (
         current_snapshot,
-        upsert_snapshot,
+        snapshot_view,
     )
+    from dynamodb_streaming_datalake_spark.streaming.views import advance_view
 
     lines = generate_fixture(n_keys=25, n_events=240, unknown_rate=0.0, seed=11).json_lines()
     random.Random(11).shuffle(lines)
@@ -480,7 +485,9 @@ def test_snapshot_versions_replay_late_events_and_tombstones(spark, tmp_path, sc
     keys, order = ["id", "name"], ["event_time", "eventID"]
     prefixes = []
     for v, batch in enumerate(batches):
-        upsert_snapshot(spark, _ok_rows(spark, batch, schemaless), snap, keys, order, version=v)
+        advance_view(
+            spark, _ok_rows(spark, batch, schemaless), snap, v, snapshot_view(keys, order)
+        )
         seen = [l for b in batches[: v + 1] for l in b]
         want = reconstruct_table(_ok_rows(spark, seen, schemaless), keys, order)
         prefixes.append((want.columns, _canon(want.collect())))
@@ -499,10 +506,9 @@ def test_snapshot_schema_memo_does_not_outlive_vacuumed_versions(spark, tmp_path
     import os
 
     from dynamodb_streaming_datalake_spark import cache
-    from dynamodb_streaming_datalake_spark.streaming.upsert import (
-        upsert_snapshot,
-        vacuum_snapshots,
-    )
+    from dynamodb_streaming_datalake_spark.streaming.segments import vacuum_view
+    from dynamodb_streaming_datalake_spark.streaming.upsert import snapshot_view
+    from dynamodb_streaming_datalake_spark.streaming.views import advance_view
 
     fx = generate_fixture(n_keys=10, n_events=60, unknown_rate=0.0)
     ok = _ok_rows(spark, fx.json_lines())
@@ -518,11 +524,73 @@ def test_snapshot_schema_memo_does_not_outlive_vacuumed_versions(spark, tmp_path
         )
 
     for v in range(4):
-        upsert_snapshot(spark, ok, snap, keys, order, version=v)
+        advance_view(spark, ok, snap, v, snapshot_view(keys, order))
     assert memo_versions() == ["v=0", "v=1", "v=2", "v=3"]
-    assert vacuum_snapshots(spark, snap, keep_last=2) == [0, 1]
-    upsert_snapshot(spark, ok, snap, keys, order, version=4)
+    assert vacuum_view(spark, snap, keep_last=2)[0] == [0, 1]
+    advance_view(spark, ok, snap, 4, snapshot_view(keys, order))
     assert memo_versions() == ["v=2", "v=3", "v=4"]
+
+
+@pytest.mark.parametrize(
+    "family",
+    ["snapshot", "snapshot_attrs_map", "agg", "bandit", "cms", "hll", "theta",
+     "daily_hll", "ams", "bloom", "probe", "ohlc", "sprt"],
+)
+def test_whole_views_seed_the_schema_spark_reads_back(spark, tmp_path, sf_smoke, family):
+    """Every whole-directory view family: each commit seeds its version's
+    schema in the ``table_schema`` memo, that seed is exactly the schema
+    Spark reads back from the files (nested structs, maps and decimals
+    included), and building the serve read runs no job."""
+    from dynamodb_streaming_datalake_spark import cache
+    from dynamodb_streaming_datalake_spark.operators.bloom import bloom_m_bits
+    from dynamodb_streaming_datalake_spark.streaming import sketchview as sv
+    from dynamodb_streaming_datalake_spark.streaming.aggview import AGG_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.banditview import BANDIT_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.upsert import snapshot_view
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+    )
+
+    def table(name, col):
+        return read_table(spark, sf_smoke, name), F.col(col)
+
+    def snapshot(schemaless):
+        lines = generate_fixture(n_keys=40, n_events=300, unknown_rate=0.0).json_lines()
+        view = snapshot_view(["id", "name"], ["event_time", "eventID"])
+        return view, _ok_rows(spark, lines, schemaless), F.crc32("eventID")
+
+    def bloom():
+        keys, split = table("orders", "o_orderkey")
+        keys = keys.where(F.col("o_orderpriority") == "1-URGENT").select("o_orderkey")
+        return sv.bloom_view("o_orderkey", bloom_m_bits(keys.count())), keys, split
+
+    cases = {
+        "snapshot": lambda: snapshot(False),
+        "snapshot_attrs_map": lambda: snapshot(True),
+        "agg": lambda: (AGG_VIEW, *table("events", "event_id")),
+        "bandit": lambda: (BANDIT_VIEW, *table("events", "event_id")),
+        "cms": lambda: (sv.CMS_VIEW, *table("events", "event_id")),
+        "hll": lambda: (sv.HLL_VIEW, *table("lineitem", "l_orderkey")),
+        "theta": lambda: (sv.THETA_VIEW, *table("orders", "o_orderkey")),
+        "daily_hll": lambda: (sv.DAILY_HLL_VIEW, *table("events", "event_id")),
+        "ams": lambda: (sv.AMS_VIEW, *table("events", "event_id")),
+        "bloom": bloom,
+        "probe": lambda: (sv.PROBE_VIEW, *table("documents", "doc_id")),
+        "ohlc": lambda: (sv.OHLC_VIEW, *table("events", "event_id")),
+        "sprt": lambda: (sv.SPRT_VIEW, *table("events", "event_id")),
+    }
+    view, rows, split = cases[family]()
+    view_dir = str(tmp_path / "view")
+    for v in (0, 1):
+        advance_view(spark, rows.where(split % 2 == v), view_dir, v, view)
+        path = f"{view_dir}/v={v}"
+        seeded = cache.memo(
+            "table_schema", (path,), lambda: pytest.fail(f"v={v} schema not seeded")
+        )
+        assert seeded == spark.read.parquet(path).schema, f"v={v}"
+    _, jobs, _ = _in_job_group(spark, "serve", lambda: current_view(spark, view_dir))
+    assert jobs == 0
 
 
 def test_processing_time_trigger_drains_continuously(spark, tmp_path):
@@ -607,10 +675,11 @@ def test_agg_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         agg_event_partials,
         finalize_agg_view,
     )
-    from dynamodb_streaming_datalake_spark.streaming.aggview import (
-        current_agg_view,
-        start_agg_view_maintenance,
-        upsert_agg_view,
+    from dynamodb_streaming_datalake_spark.streaming.aggview import AGG_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
 
     ev = read_table(spark, sf_smoke, "events")
@@ -623,10 +692,10 @@ def test_agg_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_agg_view_maintenance(stream, view_dir, str(tmp_path / "ck"))
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), AGG_VIEW)
     q.awaitTermination(120)
 
-    got = finalize_agg_view(current_agg_view(spark, view_dir))
+    got = finalize_agg_view(current_view(spark, view_dir))
     want = finalize_agg_view(agg_event_partials(ev))
     key = ["user_id", "event_type", "n_events", "sum_value"]
     assert sorted(map(tuple, got.select(*key).collect())) == sorted(
@@ -634,12 +703,12 @@ def test_agg_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
     )
 
     # replaying the last committed version must not double-count
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     last = _versions(spark, view_dir)[-1]
     before = sorted(map(tuple, got.select(*key).collect()))
-    upsert_agg_view(spark, ev.limit(50), view_dir, version=last)
-    after = finalize_agg_view(current_agg_view(spark, view_dir))
+    advance_view(spark, ev.limit(50), view_dir, last, AGG_VIEW)
+    after = finalize_agg_view(current_view(spark, view_dir))
     assert sorted(map(tuple, after.select(*key).collect())) == before
 
 
@@ -650,10 +719,11 @@ def test_cms_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
     (exact mergeability, not approximate convergence) — and replaying
     a committed version must be a no-op."""
     from dynamodb_streaming_datalake_spark.operators.sketches import cms_build
-    from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        current_sketch_view,
-        start_cms_maintenance,
-        upsert_cms_view,
+    from dynamodb_streaming_datalake_spark.streaming.sketchview import CMS_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
 
     ev = read_table(spark, sf_smoke, "events")
@@ -665,21 +735,21 @@ def test_cms_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_cms_maintenance(stream, view_dir, str(tmp_path / "ck"))
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), CMS_VIEW)
     q.awaitTermination(120)
 
     def cells(df):
         return {(r["depth"], r["col"]): r["cnt"] for r in df.collect()}
 
-    got = cells(current_sketch_view(spark, view_dir))
+    got = cells(current_view(spark, view_dir))
     assert got == cells(cms_build(ev, "user_id"))
 
     # replaying the last committed version must not double-count
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     last = _versions(spark, view_dir)[-1]
-    upsert_cms_view(spark, ev.limit(50), view_dir, version=last)
-    assert cells(current_sketch_view(spark, view_dir)) == got
+    advance_view(spark, ev.limit(50), view_dir, last, CMS_VIEW)
+    assert cells(current_view(spark, view_dir)) == got
 
 
 def test_hll_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
@@ -690,10 +760,11 @@ def test_hll_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
     from dynamodb_streaming_datalake_spark.operators.sketches import (
         hll_registers,
     )
-    from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        current_sketch_view,
-        start_hll_maintenance,
-        upsert_hll_view,
+    from dynamodb_streaming_datalake_spark.streaming.sketchview import HLL_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
 
     li = read_table(spark, sf_smoke, "lineitem")
@@ -705,23 +776,23 @@ def test_hll_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_hll_maintenance(stream, view_dir, str(tmp_path / "ck"))
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), HLL_VIEW)
     q.awaitTermination(120)
 
     def cells(df):
         return {r["bucket"]: r["m"] for r in df.collect()}
 
-    got = cells(current_sketch_view(spark, view_dir))
+    got = cells(current_view(spark, view_dir))
     assert got == cells(hll_registers(li, "l_orderkey"))
 
     # idempotence: folding the WHOLE table again as a new version is a
     # no-op on the registers (MAX monoid) — stronger than the replay
     # guard, which merely skips committed versions
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     last = _versions(spark, view_dir)[-1]
-    upsert_hll_view(spark, li, view_dir, version=last + 1)
-    assert cells(current_sketch_view(spark, view_dir)) == got
+    advance_view(spark, li, view_dir, last + 1, HLL_VIEW)
+    assert cells(current_view(spark, view_dir)) == got
 
 
 def test_vacuum_deletes_old_versions_and_guards_time_travel(
@@ -733,12 +804,15 @@ def test_vacuum_deletes_old_versions_and_guards_time_travel(
     < 1 (vacuuming the head) is refused."""
     import pytest as _pytest
 
-    from dynamodb_streaming_datalake_spark.streaming.upsert import (
+    from dynamodb_streaming_datalake_spark.streaming.segments import (
         _versions,
-        current_snapshot,
-        upsert_snapshot,
-        vacuum_snapshots,
+        vacuum_view,
     )
+    from dynamodb_streaming_datalake_spark.streaming.upsert import (
+        current_snapshot,
+        snapshot_view,
+    )
+    from dynamodb_streaming_datalake_spark.streaming.views import advance_view
 
     ev = read_table(spark, sf_smoke, "events")
     shaped = ev.select(
@@ -752,12 +826,12 @@ def test_vacuum_deletes_old_versions_and_guards_time_travel(
     snap = str(tmp_path / "snap")
     keys, order = ["id", "name"], ["event_time_s", "eventID"]
     for v in (1, 2, 3, 4):
-        upsert_snapshot(
-            spark, shaped.where(F.col("event_id") % 4 == v - 1), snap,
-            keys, order, version=v,
+        advance_view(
+            spark, shaped.where(F.col("event_id") % 4 == v - 1), snap, v,
+            snapshot_view(keys, order),
         )
     before = sorted(map(tuple, current_snapshot(spark, snap).collect()))
-    assert vacuum_snapshots(spark, snap, keep_last=2) == [1, 2]
+    assert vacuum_view(spark, snap, keep_last=2)[0] == [1, 2]
     assert _versions(spark, snap) == [3, 4]
     # survivors unchanged; vacuumed versions raise; head protected
     assert sorted(map(tuple, current_snapshot(spark, snap).collect())) == before
@@ -765,9 +839,9 @@ def test_vacuum_deletes_old_versions_and_guards_time_travel(
     with _pytest.raises(ValueError, match="not committed"):
         current_snapshot(spark, snap, version=1)
     with _pytest.raises(ValueError, match="keep_last"):
-        vacuum_snapshots(spark, snap, keep_last=0)
+        vacuum_view(spark, snap, keep_last=0)[0]
     # idempotent: vacuuming again removes nothing
-    assert vacuum_snapshots(spark, snap, keep_last=2) == []
+    assert vacuum_view(spark, snap, keep_last=2)[0] == []
 
 
 def test_theta_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
@@ -782,10 +856,11 @@ def test_theta_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
     from dynamodb_streaming_datalake_spark.operators.sketches import (
         kmv_sketch,
     )
-    from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        current_sketch_view,
-        start_theta_maintenance,
-        upsert_theta_view,
+    from dynamodb_streaming_datalake_spark.streaming.sketchview import THETA_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
 
     orders = read_table(spark, sf_smoke, "orders")
@@ -797,13 +872,13 @@ def test_theta_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_theta_maintenance(stream, view_dir, str(tmp_path / "ck"))
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), THETA_VIEW)
     q.awaitTermination(120)
 
     def rows(df):
         return {(r["side"], r["h"]) for r in df.collect()}
 
-    got = rows(current_sketch_view(spark, view_dir))
+    got = rows(current_view(spark, view_dir))
     want = rows(
         kmv_sketch(
             orders.where(F.col("o_orderstatus") == "F"), "o_custkey"
@@ -819,11 +894,11 @@ def test_theta_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
 
     # idempotence: folding the WHOLE table again as a new version is a
     # no-op (k smallest of a union monoid)
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     last = _versions(spark, view_dir)[-1]
-    upsert_theta_view(spark, orders, view_dir, version=last + 1)
-    assert rows(current_sketch_view(spark, view_dir)) == got
+    advance_view(spark, orders, view_dir, last + 1, THETA_VIEW)
+    assert rows(current_view(spark, view_dir)) == got
 
 
 def test_daily_hll_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
@@ -835,10 +910,11 @@ def test_daily_hll_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
     from dynamodb_streaming_datalake_spark.operators.sketches import (
         daily_hll_registers,
     )
-    from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        current_sketch_view,
-        start_daily_hll_maintenance,
-        upsert_daily_hll_view,
+    from dynamodb_streaming_datalake_spark.streaming.sketchview import DAILY_HLL_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
 
     ev = read_table(spark, sf_smoke, "events")
@@ -850,20 +926,20 @@ def test_daily_hll_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_daily_hll_maintenance(stream, view_dir, str(tmp_path / "ck"))
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), DAILY_HLL_VIEW)
     q.awaitTermination(120)
 
     def cells(df):
         return {(r["day_i"], r["bucket"]): r["m"] for r in df.collect()}
 
-    got = cells(current_sketch_view(spark, view_dir))
+    got = cells(current_view(spark, view_dir))
     assert got == cells(daily_hll_registers(ev))
 
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     last = _versions(spark, view_dir)[-1]
-    upsert_daily_hll_view(spark, ev, view_dir, version=last + 1)
-    assert cells(current_sketch_view(spark, view_dir)) == got
+    advance_view(spark, ev, view_dir, last + 1, DAILY_HLL_VIEW)
+    assert cells(current_view(spark, view_dir)) == got
 
 
 def test_ams_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
@@ -877,10 +953,11 @@ def test_ams_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
     from dynamodb_streaming_datalake_spark.operators.sketches import (
         ams_sketch,
     )
-    from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        current_sketch_view,
-        start_ams_maintenance,
-        upsert_ams_view,
+    from dynamodb_streaming_datalake_spark.streaming.sketchview import AMS_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
 
     ev = read_table(spark, sf_smoke, "events")
@@ -892,20 +969,20 @@ def test_ams_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_ams_maintenance(stream, view_dir, str(tmp_path / "ck"))
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), AMS_VIEW)
     q.awaitTermination(120)
 
     def rows(df):
         return {(r["event_type"], r["r"]): r["z"] for r in df.collect()}
 
-    got = rows(current_sketch_view(spark, view_dir))
+    got = rows(current_view(spark, view_dir))
     assert got == rows(ams_sketch(ev, "user_id", "event_type"))
 
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     last = _versions(spark, view_dir)[-1]
-    upsert_ams_view(spark, ev.limit(50), view_dir, version=last)
-    assert rows(current_sketch_view(spark, view_dir)) == got
+    advance_view(spark, ev.limit(50), view_dir, last, AMS_VIEW)
+    assert rows(current_view(spark, view_dir)) == got
 
 
 def test_stream_stream_outer_join_matches_batch(spark, sf_smoke, tmp_path):
@@ -1002,10 +1079,11 @@ def test_minhash_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
     from dynamodb_streaming_datalake_spark.operators.dedup import (
         minhash_signatures,
     )
-    from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        current_sketch_view,
-        start_minhash_maintenance,
-        upsert_minhash_view,
+    from dynamodb_streaming_datalake_spark.streaming.sketchview import MINHASH_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
 
     docs = read_table(spark, sf_smoke, "documents").select("doc_id", "text")
@@ -1017,24 +1095,24 @@ def test_minhash_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_minhash_maintenance(stream, view_dir, str(tmp_path / "ck"))
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), MINHASH_VIEW)
     q.awaitTermination(120)
 
     def rows(df):
         return {r["doc_id"]: tuple(r[f"m{s}"] for s in range(16)) for r in df.collect()}
 
-    got = rows(current_sketch_view(spark, view_dir))
+    got = rows(current_view(spark, view_dir))
     assert got == rows(minhash_signatures(docs))
 
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     last = _versions(spark, view_dir)[-1]
     # committed-version replay: a no-op by the crash guard
-    upsert_minhash_view(spark, docs.limit(20), view_dir, version=last)
-    assert rows(current_sketch_view(spark, view_dir)) == got
+    advance_view(spark, docs.limit(20), view_dir, last, MINHASH_VIEW)
+    assert rows(current_view(spark, view_dir)) == got
     # idempotence: re-folding seen docs under a NEW version changes nothing
-    upsert_minhash_view(spark, docs.limit(20), view_dir, version=last + 1)
-    assert rows(current_sketch_view(spark, view_dir)) == got
+    advance_view(spark, docs.limit(20), view_dir, last + 1, MINHASH_VIEW)
+    assert rows(current_view(spark, view_dir)) == got
 
 
 def test_ivf_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
@@ -1051,12 +1129,13 @@ def test_ivf_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         ivf_serve,
     )
     from dynamodb_streaming_datalake_spark.registry import all_queries
-    from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        current_sketch_view,
-        start_ivf_maintenance,
-        upsert_ivf_view,
+    from dynamodb_streaming_datalake_spark.streaming.sketchview import ivf_view
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     e = read_table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
     cents = ivf_centroids(e)
@@ -1068,7 +1147,7 @@ def test_ivf_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_ivf_maintenance(stream, cents, view_dir, str(tmp_path / "ck"))
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), ivf_view(cents))
     q.awaitTermination(120)
 
     def rows(df):
@@ -1076,19 +1155,19 @@ def test_ivf_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
             (r["cid"], r["vec_id"], tuple(r["embedding"])) for r in df.collect()
         )
 
-    got = rows(current_sketch_view(spark, view_dir))
+    got = rows(current_view(spark, view_dir))
     assert got == rows(ivf_assign_lists(e, cents))
 
     # committed-version replay: a no-op by the crash guard (the append
     # fold is non-idempotent, so this is the property that matters)
     last = _versions(spark, view_dir)[-1]
-    upsert_ivf_view(spark, e.limit(20), cents, view_dir, version=last)
-    assert rows(current_sketch_view(spark, view_dir)) == got
+    advance_view(spark, e.limit(20), view_dir, last, ivf_view(cents))
+    assert rows(current_view(spark, view_dir)) == got
 
     served = sorted(
         map(
             tuple,
-            ivf_serve(current_sketch_view(spark, view_dir), cents, e).collect(),
+            ivf_serve(current_view(spark, view_dir), cents, e).collect(),
         )
     )
     want = sorted(
@@ -1114,12 +1193,13 @@ def test_pq_codes_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         ivfpq_serve,
     )
     from dynamodb_streaming_datalake_spark.registry import all_queries
-    from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        current_sketch_view,
-        start_pq_codes_maintenance,
-        upsert_pq_codes_view,
+    from dynamodb_streaming_datalake_spark.streaming.sketchview import pq_codes_view
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     e = read_table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
     tcb = _pq_trained_codebook(_pq_subvectors(e), sf_dir=sf_smoke)
@@ -1132,9 +1212,7 @@ def test_pq_codes_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_pq_codes_maintenance(
-        stream, tcb, cents, view_dir, str(tmp_path / "ck")
-    )
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), pq_codes_view(tcb, cents))
     q.awaitTermination(120)
 
     def rows(df):
@@ -1142,20 +1220,20 @@ def test_pq_codes_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
             (r["cid"], r["vec_id"], r["s"], r["code"]) for r in df.collect()
         )
 
-    got = rows(current_sketch_view(spark, view_dir))
+    got = rows(current_view(spark, view_dir))
     assert got == rows(ivfpq_encode(e, tcb, cents))
 
     # committed-version replay: a no-op by the crash guard (the append
     # fold is non-idempotent, so this is the property that matters)
     last = _versions(spark, view_dir)[-1]
-    upsert_pq_codes_view(spark, e.limit(20), tcb, cents, view_dir, version=last)
-    assert rows(current_sketch_view(spark, view_dir)) == got
+    advance_view(spark, e.limit(20), view_dir, last, pq_codes_view(tcb, cents))
+    assert rows(current_view(spark, view_dir)) == got
 
     served = sorted(
         map(
             tuple,
             ivfpq_serve(
-                current_sketch_view(spark, view_dir), cents, tcb, e
+                current_view(spark, view_dir), cents, tcb, e
             ).collect(),
         )
     )
@@ -1181,12 +1259,13 @@ def test_decontam_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         DENOM,
         hash_bucket,
     )
-    from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        current_sketch_view,
-        start_decontam_maintenance,
-        upsert_decontam_view,
+    from dynamodb_streaming_datalake_spark.streaming.sketchview import decontam_view
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     d = read_table(spark, sf_smoke, "documents").select("doc_id", "text")
     cut = int(EVAL_RATE * DENOM)
@@ -1201,22 +1280,20 @@ def test_decontam_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_decontam_maintenance(
-        stream, banned, view_dir, str(tmp_path / "ck")
-    )
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), decontam_view(banned))
     q.awaitTermination(120)
 
     def rows(df):
         return sorted((r["doc_id"], r["n_overlap"]) for r in df.collect())
 
-    got = rows(current_sketch_view(spark, view_dir))
+    got = rows(current_view(spark, view_dir))
     assert got == rows(overlap_counts(train, banned))
     assert got  # the 5% carve really contaminates some training docs
 
     # committed-version replay: a no-op by the crash guard
     last = _versions(spark, view_dir)[-1]
-    upsert_decontam_view(spark, train.limit(20), banned, view_dir, version=last)
-    assert rows(current_sketch_view(spark, view_dir)) == got
+    advance_view(spark, train.limit(20), view_dir, last, decontam_view(banned))
+    assert rows(current_view(spark, view_dir)) == got
 
 
 def test_probe_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
@@ -1233,12 +1310,13 @@ def test_probe_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         probe_solve,
     )
     from dynamodb_streaming_datalake_spark.registry import all_queries
-    from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        current_sketch_view,
-        start_probe_maintenance,
-        upsert_probe_view,
+    from dynamodb_streaming_datalake_spark.streaming.sketchview import PROBE_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     d = read_table(spark, sf_smoke, "documents")
     src = str(tmp_path / "doc_src")
@@ -1249,26 +1327,26 @@ def test_probe_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_probe_maintenance(stream, view_dir, str(tmp_path / "ck"))
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), PROBE_VIEW)
     q.awaitTermination(120)
 
     def gram_row(df):
         return sorted(df.collect()[0].asDict().items())
 
-    got = gram_row(current_sketch_view(spark, view_dir))
+    got = gram_row(current_view(spark, view_dir))
     assert got == gram_row(probe_gram(probe_features(d)))
 
     # committed-version replay: a no-op by the crash guard
     last = _versions(spark, view_dir)[-1]
-    upsert_probe_view(spark, d.limit(20), view_dir, version=last)
-    assert gram_row(current_sketch_view(spark, view_dir)) == got
+    advance_view(spark, d.limit(20), view_dir, last, PROBE_VIEW)
+    assert gram_row(current_view(spark, view_dir)) == got
 
     served = sorted(
         map(
             tuple,
             probe_report(
                 probe_features(d),
-                probe_solve(current_sketch_view(spark, view_dir)),
+                probe_solve(current_view(spark, view_dir)),
             ).collect(),
         )
     )
@@ -1288,12 +1366,13 @@ def test_ohlc_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
     from dynamodb_streaming_datalake_spark.operators.analytics_ext import (
         ohlc_bars,
     )
-    from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        current_sketch_view,
-        start_ohlc_maintenance,
-        upsert_ohlc_view,
+    from dynamodb_streaming_datalake_spark.streaming.sketchview import OHLC_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     ev = read_table(spark, sf_smoke, "events").select(
         "ts", "event_id", "event_type", "value"
@@ -1306,7 +1385,7 @@ def test_ohlc_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_ohlc_maintenance(stream, view_dir, str(tmp_path / "ck"))
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), OHLC_VIEW)
     q.awaitTermination(120)
 
     def rows(df):
@@ -1324,12 +1403,12 @@ def test_ohlc_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
             for r in df.collect()
         )
 
-    got = rows(current_sketch_view(spark, view_dir))
+    got = rows(current_view(spark, view_dir))
     assert got == rows(ohlc_bars(spark.read.parquet(src)))
 
     last = _versions(spark, view_dir)[-1]
-    upsert_ohlc_view(spark, ev.limit(50), view_dir, version=last)
-    assert rows(current_sketch_view(spark, view_dir)) == got
+    advance_view(spark, ev.limit(50), view_dir, last, OHLC_VIEW)
+    assert rows(current_view(spark, view_dir)) == got
 
 
 def test_dual_lake_delivery_reconstructs_identical_state(spark, tmp_path):
@@ -1534,8 +1613,11 @@ def test_bloom_view_maintenance_is_result_invisible(spark, tmp_path, sf_smoke):
     )
     from dynamodb_streaming_datalake_spark.streaming.sketchview import (
         bloom_bitmap_from_view,
-        start_bloom_maintenance,
-        upsert_bloom_view,
+        bloom_view,
+    )
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        start_view,
     )
 
     urgent = (
@@ -1552,19 +1634,19 @@ def test_bloom_view_maintenance_is_result_invisible(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_bloom_maintenance(
-        stream, view_dir, str(tmp_path / "ck"), "o_orderkey", m_bits
+    q = start_view(
+        stream, view_dir, str(tmp_path / "ck"), bloom_view("o_orderkey", m_bits)
     )
     q.awaitTermination(120)
 
     got = bloom_bitmap_from_view(spark, view_dir, m_bits)
     assert got == bloom_build(urgent, "o_orderkey")
 
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     last = _versions(spark, view_dir)[-1]
-    upsert_bloom_view(
-        spark, urgent.limit(30), view_dir, last + 1, "o_orderkey", m_bits
+    advance_view(
+        spark, urgent.limit(30), view_dir, last + 1, bloom_view("o_orderkey", m_bits)
     )
     assert bloom_bitmap_from_view(spark, view_dir, m_bits) == got
 
@@ -1619,12 +1701,13 @@ def test_patch_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         compact_segments,
         read_manifest,
     )
-    from dynamodb_streaming_datalake_spark.streaming.sketchview import (
-        current_sketch_view,
-        start_patch_maintenance,
-        upsert_patch_view,
+    from dynamodb_streaming_datalake_spark.streaming.sketchview import PATCH_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.views import (
+        advance_view,
+        current_view,
+        start_view,
     )
-    from dynamodb_streaming_datalake_spark.streaming.upsert import _versions
+    from dynamodb_streaming_datalake_spark.streaming.segments import _versions
 
     events = read_table(spark, sf_smoke, "events").select(
         "user_id", "event_id", "event_type", "value"
@@ -1637,21 +1720,21 @@ def test_patch_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
         .parquet(src)
     )
     view_dir = str(tmp_path / "view")
-    q = start_patch_maintenance(stream, view_dir, str(tmp_path / "ck"))
+    q = start_view(stream, view_dir, str(tmp_path / "ck"), PATCH_VIEW)
     q.awaitTermination(120)
 
     def rows(df):
         return {r["user_id"]: tuple(r) for r in df.collect()}
 
     want = rows(serve_patch_state(fold_patch_state(partial_update_feed(events))))
-    got = rows(serve_patch_state(current_sketch_view(spark, view_dir)))
+    got = rows(serve_patch_state(current_view(spark, view_dir)))
     assert got == want
 
     last = _versions(spark, view_dir)[-1]
     # committed-version replay: a no-op by the crash guard
-    upsert_patch_view(spark, events.limit(50), view_dir, version=last)
+    advance_view(spark, events.limit(50), view_dir, last, PATCH_VIEW)
     assert rows(
-        serve_patch_state(current_sketch_view(spark, view_dir))
+        serve_patch_state(current_view(spark, view_dir))
     ) == want
     # compaction: segments collapse, served state unchanged
     n_before = len(read_manifest(spark, view_dir, last)["segments"])
@@ -1659,7 +1742,7 @@ def test_patch_view_maintenance_matches_batch(spark, tmp_path, sf_smoke):
     assert compact_segments(spark, view_dir, last, max_segments=1)
     assert len(read_manifest(spark, view_dir, last)["segments"]) == 1
     assert rows(
-        serve_patch_state(current_sketch_view(spark, view_dir))
+        serve_patch_state(current_view(spark, view_dir))
     ) == want
 
 
@@ -1676,17 +1759,14 @@ def test_bandit_view_stream_drain_matches_batch(spark, tmp_path):
         read_table,
         read_table_stream,
     )
-    from dynamodb_streaming_datalake_spark.streaming.banditview import (
-        start_bandit_view_maintenance,
-    )
-    from dynamodb_streaming_datalake_spark.streaming.upsert import (
-        current_snapshot,
-    )
+    from dynamodb_streaming_datalake_spark.streaming.banditview import BANDIT_VIEW
+    from dynamodb_streaming_datalake_spark.streaming.upsert import current_snapshot
+    from dynamodb_streaming_datalake_spark.streaming.views import start_view
 
     sf = "/root/testdata/sf0.001"
     stream = read_table_stream(spark, sf, "events")
     view = str(tmp_path / "bview")
-    q = start_bandit_view_maintenance(stream, view, str(tmp_path / "ck"))
+    q = start_view(stream, view, str(tmp_path / "ck"), BANDIT_VIEW)
     q.awaitTermination(120)
 
     got_arms = {
