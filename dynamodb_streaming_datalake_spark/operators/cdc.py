@@ -4,9 +4,17 @@ This is the Spark-first rebuild of the reference's Firehose Lambda
 (``/root/reference/resources/firehose_transformation.py:5-39``): every
 step is a pure function returning JVM-side column expressions — no
 Python row loop, no UDF — and the pipeline composes them into one
-filter and one select per output, so one code path serves both
-``spark.read`` (batch backfill) and ``spark.readStream`` (live CDC), and
-whole-stage codegen keeps the hot path compiled.
+parse, then one filter and one select per output, so one code path
+serves both ``spark.read`` (batch backfill) and ``spark.readStream``
+(live CDC), and whole-stage codegen keeps the hot path compiled.
+
+The parse sits behind an optimizer barrier (``_parse_and_route``): the
+envelope comes out of a one-element ``explode``, a Generate node, which
+filter pushdown does not cross. Parsed into a plain Project instead,
+Catalyst inlines ``env`` into the pushed-down ok/error predicate, and
+each output's plan evaluates ``from_json`` four times per row (the full
+schema twice, plus ``eventName`` and ``dynamodb`` once each); behind
+the barrier every output's physical plan holds exactly one.
 
 Observable contract preserved from the reference:
 
@@ -148,8 +156,13 @@ def route_errors(image: Column, env_col: str = "env") -> tuple[Column, Column]:
 def _parse_and_route(raw: DataFrame, json_col: str) -> tuple[DataFrame, Column, DataFrame]:
     """(ok rows still to be projected, their image, error rows). The
     envelope is parsed once into ``env`` next to ``raw``'s own columns,
-    which a caller's ``ingestion_ts`` may read."""
-    env = raw.withColumn("env", parse_envelope(json_col))
+    which a caller's ``ingestion_ts`` may read. ``explode`` of a
+    one-element array yields exactly one row per input row; it is there
+    as the Generate node that keeps the routing predicates from being
+    pushed below the parse and re-parsing (see the module docstring).
+    This is the only parse site: ``scripts/preflight.sh quick`` fails on
+    a ``parse_envelope(`` call anywhere else."""
+    env = raw.select("*", F.explode(F.array(parse_envelope(json_col))).alias("env"))
     image = select_image()
     is_ok, result = route_errors(image)
     err = env.where(~is_ok).select(

@@ -149,7 +149,7 @@ def read_day_state(spark: SparkSession, path: str) -> DataFrame:
 
 #: zone layout version — bump to invalidate previously cached zones when
 #: the synthesis/write code changes (e.g. the decimal(18,2) widening)
-_ZONE_VERSION = "v3"
+_ZONE_VERSION = "v4"
 
 
 def ensure_cdc_zone(spark: SparkSession, sf_dir: str) -> str:
@@ -426,7 +426,7 @@ def q_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # small-file compaction under the driver's oracle gate (round 5)
 # ---------------------------------------------------------------------------
 
-_COMPACT_VERSION = "v2"
+_COMPACT_VERSION = "v3"
 
 
 def ensure_compacted_zone(spark: SparkSession, sf_dir: str) -> str:

@@ -1995,7 +1995,10 @@ def q_ann_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key ends the shared subtree at an Exchange, so the scoring pass
     # runs ONCE and the second consumer picks it up as a ReusedExchange
     # (AQE runtime stage reuse — the r17 q_source_overlap precedent);
-    # without it the whole cand->scored->explode subtree planned twice
+    # without it the whole cand->scored->explode subtree planned twice.
+    # The saving relies on AQE (spark.sql.adaptive.enabled, on in
+    # session.ENGINE_DEFAULTS): with AQE off the `levels` subtree is
+    # still planned twice and also pays this extra exchange
     levels = (
         scored.withColumn(
             "nprobe",

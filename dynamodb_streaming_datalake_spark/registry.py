@@ -31,7 +31,7 @@ ORACLE: dict[str, str] = {}
 # PRIORITY derived by scripts/rotate_window.py from
 # CORRECTNESS_r*.json (latest: r17).  Do not hand-order;
 # regenerate after each driver round.  Derivation: the
-# 56 never-driver-proven names lead, then proofs
+# 58 never-driver-proven names lead, then proofs
 # ascending by round (stable tie-break: prior order).
 PRIORITY: tuple[str, ...] = (
     # -- never driver-proven --
@@ -91,6 +91,8 @@ PRIORITY: tuple[str, ...] = (
     "q_theta_stream",
     "q_hll_rolling_stream",
     "q_ams_stream",
+    "q_cdc_zone_roundtrip",
+    "q_compact_scan",
     # -- proven r11 --
     "q_media_jpeg",
     "q_media_gif",
@@ -113,7 +115,6 @@ PRIORITY: tuple[str, ...] = (
     "q_merge_snapshot_cdc",
     "q_scd2_intervals",
     "q_bloom_prejoin",
-    "q_cdc_zone_roundtrip",
     "q_grouping_sets",
     "q_window_time_range",
     "q_user_value_deciles",
@@ -291,7 +292,6 @@ PRIORITY: tuple[str, ...] = (
     "q_snapshot_diff",
     "q_bigram_lm",
     "q_data_quality_report",
-    "q_compact_scan",
     "q_ewma_user_value",
     "q_order_baskets",
     "q_linreg_train",

@@ -126,15 +126,16 @@ def _versions(spark: SparkSession, view_dir: str) -> list[int]:
     return sorted(int(s.getPath().getParent().getName()[2:]) for s in found)
 
 
-def _manifest_files(jvm, fs, vdir_path) -> list[tuple[int, object]]:
-    """(generation, hadoop Path) pairs, ascending generation."""
-    if not fs.exists(vdir_path):
-        return []
+def _manifest_files(jvm, fs, vdir: str) -> list[tuple[int, object]]:
+    """(generation, hadoop Path) pairs, ascending generation: one glob,
+    which matches nothing in a missing or whole-directory version."""
+    pattern = jvm.org.apache.hadoop.fs.Path(f"{vdir}/manifest-*.json")
     out = []
-    for s in fs.listStatus(vdir_path):
-        m = _MANIFEST_RE.fullmatch(s.getPath().getName())
-        if m and s.isFile():
-            out.append((int(m.group(1)), s.getPath()))
+    for s in fs.globStatus(pattern) or []:
+        path = s.getPath()
+        m = _MANIFEST_RE.fullmatch(path.getName())
+        if m:
+            out.append((int(m.group(1)), path))
     return sorted(out, key=lambda t: t[0])
 
 
@@ -176,8 +177,7 @@ def read_manifest(
     version is not a segmented commit — callers fall back to the plain
     whole-directory layout)."""
     jvm, fs = _fs(spark, view_dir)
-    vdir = jvm.org.apache.hadoop.fs.Path(_version_dir(view_dir, version))
-    manifests = _manifest_files(jvm, fs, vdir)
+    manifests = _manifest_files(jvm, fs, _version_dir(view_dir, version))
     if not manifests:
         return None
     gen, path = manifests[-1]
@@ -328,8 +328,7 @@ def vacuum_view(
     for v in vs:
         if v in doomed:
             continue
-        vdir = jvm.org.apache.hadoop.fs.Path(_version_dir(view_dir, v))
-        manifests = _manifest_files(jvm, fs, vdir)
+        manifests = _manifest_files(jvm, fs, _version_dir(view_dir, v))
         for gen, mpath in manifests[:-1]:
             fs.delete(mpath, False)
         if manifests:

@@ -142,6 +142,40 @@ if bad:
 print("view kernel guard OK")
 EOF
 
+# one CDC parse site: parse_envelope( is called only inside
+# operators/cdc.py's _parse_and_route, behind the Generate barrier that
+# keeps Catalyst from copying the parse into the routing predicates; a
+# call anywhere else in the repo's .py files fails
+python - <<'EOF'
+import ast, os, sys
+
+SITE = (os.path.join(".", "dynamodb_streaming_datalake_spark", "operators", "cdc.py"), "_parse_and_route")
+
+
+def calls(node, owner):
+    """(owner function, line) of each parse_envelope(...) call under node."""
+    for child in ast.iter_child_nodes(node):
+        inner = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else owner
+        if isinstance(child, ast.Call):
+            f = child.func
+            if getattr(f, "id", None) == "parse_envelope" or getattr(f, "attr", None) == "parse_envelope":
+                yield owner, child.lineno
+        yield from calls(child, inner)
+
+
+bad = []
+for root, dirs, files in os.walk("."):
+    dirs[:] = sorted(d for d in dirs if not d.startswith((".", "__")))
+    for f in sorted(files):
+        if f.endswith(".py"):
+            p = os.path.join(root, f)
+            tree = ast.parse(open(p, encoding="utf-8").read(), p)
+            bad += [f"{p}:{line} in {owner}" for owner, line in calls(tree, None) if (p, owner) != SITE]
+if bad:
+    sys.exit("parse_envelope( outside cdc._parse_and_route:\n" + "\n".join(bad))
+print("one-parse-site guard OK")
+EOF
+
 if [ "${1:-}" = "quick" ]; then
     echo "preflight (quick) PASSED"
     exit 0

@@ -4,6 +4,7 @@ contract + the pure-Python fold oracle (SURVEY §5 test pyramid 1 & 4)."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from dynamodb_streaming_datalake_spark.operators.cdc import cdc_transform
@@ -158,6 +159,42 @@ def test_ingestion_ts_may_read_raw_columns(spark):
         assert got and got <= want
         assert ok.count() + err.count() == len(lines)
         assert err.where(F.col("result") == "MalformedRecord").count() == 1
+
+
+@pytest.mark.parametrize("stream", [False, True], ids=["batch", "stream"])
+def test_each_output_parses_the_envelope_once(spark, tmp_path, stream):
+    """Each ok and error output of ``cdc_transform`` (attributes and
+    schemaless) and ``cdc_transform_typed`` runs exactly one envelope
+    ``from_json`` in its physical plan, on a batch and on a streaming
+    DataFrame: the parse is behind a Generate barrier, so filter
+    pushdown cannot copy it into the routing predicate. (The envelope
+    parse is the ``from_json`` whose schema is a struct; the typed
+    decode's own ``L``/``M`` parses are arrays and maps.)"""
+    import re
+
+    from dynamodb_streaming_datalake_spark.operators.cdc import cdc_transform_typed
+    from dynamodb_streaming_datalake_spark.plans.explain import explain_str
+    from dynamodb_streaming_datalake_spark.streaming.pipeline import read_cdc_lines
+
+    fx = generate_fixture(n_keys=5, n_events=30, unknown_rate=0.1)
+    if stream:
+        (tmp_path / "w0.json").write_text("\n".join(fx.json_lines()) + "\n")
+        raw = read_cdc_lines(spark, str(tmp_path))
+    else:
+        raw = _raw_df(spark, fx)
+    outputs = {
+        "attributes": cdc_transform(raw, attributes=ATTRS, ingestion_ts=EVENT_TS()),
+        "schemaless": cdc_transform(raw, ingestion_ts=EVENT_TS()),
+        "typed": cdc_transform_typed(
+            raw, {"salary": "N", "tags": "L", "address": "M"}, ingestion_ts=EVENT_TS()
+        ),
+    }
+    parses = {
+        (form, side): len(re.findall(r"from_json\(StructField\(", explain_str(df)))
+        for form, pair in outputs.items()
+        for side, df in zip(("ok", "err"), pair)
+    }
+    assert parses == {k: 1 for k in parses}
 
 
 def test_typed_decode(spark):

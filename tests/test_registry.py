@@ -265,6 +265,42 @@ def test_apply_engine_conf_memoized_per_session(spark):
     assert spark.conf.get(probe) == ENGINE_DEFAULTS[probe]
 
 
+def test_local_session_checkpoints_without_filecontext(spark, tmp_path):
+    """A local-master session commits streaming checkpoints through
+    Spark's FileSystem checkpoint manager (rename(2), no shell forks);
+    the setting is for local masters only, and ``apply_engine_conf``
+    gives it to a local session built without it."""
+    from dynamodb_streaming_datalake_spark.session import (
+        LOCAL_DEFAULTS,
+        apply_engine_conf,
+        engine_conf,
+    )
+
+    jvm = spark.sparkContext._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    path = jvm.org.apache.hadoop.fs.Path(f"file:{tmp_path}")
+
+    def created() -> str:
+        hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+        return manager.create(path, hadoop_conf).getClass().getSimpleName()
+
+    assert created() == "FileSystemBasedCheckpointFileManager"
+    (key,) = LOCAL_DEFAULTS
+    for master in ("local", "local[2]", "local[*]"):
+        assert key in engine_conf(master)
+    for master in ("spark://host:7077", "yarn", "k8s://https://host:443",
+                   "local-cluster[2,1,1024]", ""):
+        assert key not in engine_conf(master)
+    try:
+        spark.conf.unset(key)
+        assert created() == "FileContextBasedCheckpointFileManager"
+        spark._engine_conf_applied = False
+        apply_engine_conf(spark)
+        assert created() == "FileSystemBasedCheckpointFileManager"
+    finally:
+        spark.conf.set(key, LOCAL_DEFAULTS[key])
+
+
 def test_reprove_first_names_derive_as_unproven(tmp_path):
     """Round 18: names in the manifest's reprove_first list must sort
     as unproven (they lead the window) even when a CORRECTNESS artifact
