@@ -45,6 +45,7 @@ from dynamodb_streaming_datalake_spark.functions.texthash import (
     sql_portable_hash60,
 )
 from dynamodb_streaming_datalake_spark.operators.dedup import EMBED_NEAR_DUP_COS
+from dynamodb_streaming_datalake_spark.operators.quantize import first_k, nearest
 from dynamodb_streaming_datalake_spark.registry import format_doc as _fmt
 from dynamodb_streaming_datalake_spark.registry import query
 from dynamodb_streaming_datalake_spark.sources.readers import fan_out, read_table
@@ -332,18 +333,9 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cluster members, candidate volume, duplicate pairs, drops,
     and the drop fraction the corpus would shrink by."""
     e = read_table(spark, sf_dir, "embeddings")
-    cents = e.where(F.col("vec_id") < SEM_K).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
     # corpus-side parallelism floor for the |e| x K assignment cosines
-    scored = fan_out(e, "vec_id").crossJoin(F.broadcast(cents)).select(
-        "vec_id", "cid", cosine(F.col("embedding"), F.col("ce")).alias("cs")
-    )
-    wa = Window.partitionBy("vec_id").orderBy(F.col("cs").desc(), F.col("cid"))
-    assign = (
-        scored.withColumn("r", F.row_number().over(wa))
-        .where(F.col("r") == 1)
-        .select("vec_id", "cid", "cs")
+    assign = nearest(fan_out(e, "vec_id"), first_k(e, SEM_K), "cosine").select(
+        "vec_id", "cid", F.col("score").alias("cs")
     )
     wr = Window.partitionBy("cid").orderBy(F.col("cs").desc(), F.col("vec_id"))
     ranked = assign.withColumn("rk", F.row_number().over(wr)).select(

@@ -50,6 +50,10 @@ from dynamodb_streaming_datalake_spark.functions.texthash import (
     sql_word_shingles,
     word_shingles,
 )
+from dynamodb_streaming_datalake_spark.operators.quantize import (
+    centroid_means,
+    first_k,
+)
 from dynamodb_streaming_datalake_spark.registry import format_doc as _fmt
 from dynamodb_streaming_datalake_spark.registry import query
 from dynamodb_streaming_datalake_spark.sources.readers import (
@@ -843,21 +847,19 @@ EMB_IVF_CENTROIDS = 16
 EMB_IVF_NPROBE = 2
 
 
-def ivf_n_centroids(
-    n_vectors: int, floor_k: int = EMB_IVF_CENTROIDS
-) -> int:
+def ivf_n_centroids(n_vectors: int) -> int:
     """~sqrt(N) coarse-quantizer sizing with a floor — derived, not
     fixed, so the codebook grows with the corpus. Mirrored in the
     oracle SQL as a scalar subquery (GREATEST(floor, floor(sqrt(n)))),
     and isqrt == floor(sqrt) for any count below 2^52."""
-    return max(floor_k, math.isqrt(max(n_vectors, 0)))
+    return max(EMB_IVF_CENTROIDS, math.isqrt(max(n_vectors, 0)))
 
 
-def ivf_nprobe(k: int, floor_p: int = EMB_IVF_NPROBE) -> int:
+def ivf_nprobe(k: int) -> int:
     """Probe count scaled with the codebook: ~1/8 of the lists (the
     fraction the fixed 2-of-16 default probed), floored at 2 —
     growing K without growing nprobe silently trades recall away."""
-    return max(floor_p, -(-k // 8))
+    return max(EMB_IVF_NPROBE, -(-k // 8))
 
 
 #: oracle twins of :func:`ivf_n_centroids` / :func:`ivf_nprobe` over
@@ -904,51 +906,35 @@ _SQL_EMB_PAIRS_IVF = f"""
 """
 
 
-def embedding_pairs_ivf(
-    emb: DataFrame,
-    threshold: float,
-    n_centroids: int | None = None,
-    nprobe: int | None = None,
-) -> DataFrame:
+def embedding_pairs_ivf(emb: DataFrame, threshold: float) -> DataFrame:
     """Near-dup pairs via an IVF (inverted-file) coarse quantizer — the
     100 TB path: exact cosine is computed for CANDIDATES only, never
     all pairs.
 
-    Shape (FAISS-IVF on DataFrames): broadcast the ``n_centroids``
-    coarse centroids (deterministically the first ``n_centroids``
-    vec_ids, as in ``q_ann_ivf``); every vector joins its home list
-    (rank-1 centroid) and probes its ``nprobe`` nearest lists; a
-    candidate pair is (prober, list member) sharing a list id — an
-    equi-join on cid — then exact cosine verifies candidates against
-    ``threshold``. Both orientations are generated (a probing b's list
-    and b probing a's), so same-home-list pairs are always candidates.
+    Shape (FAISS-IVF on DataFrames): broadcast the coarse centroids
+    (deterministically the first ``ivf_n_centroids(N)`` vec_ids, as in
+    ``q_ann_ivf``); every vector joins its home list (rank-1 centroid)
+    and probes its ``ivf_nprobe(K)`` nearest lists; a candidate pair is
+    (prober, list member) sharing a list id — an equi-join on cid —
+    then exact cosine verifies candidates against ``threshold``. Both
+    orientations are generated (a probing b's list and b probing a's),
+    so same-home-list pairs are always candidates.
 
     Recall is the standard IVF trade: a true pair split across
-    non-probed lists is missed. Compute is |emb| x n_centroids coarse
-    scores (one vectorized float64 GEMM per Arrow batch — map-only; the
-    centroid matrix is driver-collected like any broadcast dim) +
-    per-list pair verification; at real corpus sizes ``n_centroids``
-    grows ~sqrt(N), keeping lists near-constant. Candidate VERIFY uses
-    the engine-bit-identical HOF ``cosine`` (the oracle-checked value);
-    numpy only picks which lists to probe, where a summation-order
-    near-tie flip would need two coarse scores within ~1 ulp. The exact
-    blocked-GEMM twin (``embedding_pairs_blocked``) stays the recall
-    oracle in tests.
+    non-probed lists is missed. Compute is |emb| x K coarse scores (the
+    Arrow GEMM kernel ``gemm_nearest`` — map-only; the centroid matrix
+    is driver-collected like any broadcast dim) + per-list pair
+    verification; at real corpus sizes K grows ~sqrt(N), keeping lists
+    near-constant. Candidate VERIFY uses float64 numpy with the
+    round(6) contract the oracle checks; the GEMM only picks which
+    lists to probe, where a summation-order near-tie flip would need
+    two coarse scores within ~1 ulp. The exact blocked-GEMM twin
+    (``embedding_pairs_blocked``) stays the recall oracle in tests.
     """
-    if n_centroids is None:
-        # one count-star (parquet metadata-cheap) sizes the codebook
-        n_centroids = ivf_n_centroids(scan_row_count(emb))
-    if nprobe is None:
-        nprobe = ivf_nprobe(n_centroids)
-    # bounded collect: n_centroids rows == collecting a broadcast dim
-    cents = sorted(
-        emb.where(F.col("vec_id") < n_centroids)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
+    # one count-star (parquet metadata-cheap) sizes the codebook
+    k = ivf_n_centroids(scan_row_count(emb))
     return _ivf_pairs_from_centroids(
-        emb, [(r["vec_id"], r["embedding"]) for r in cents], threshold, nprobe
+        emb, _codebook_rows(first_k(emb, k)), threshold, ivf_nprobe(k)
     )
 
 
@@ -960,38 +946,83 @@ def embedding_pairs_ivf(
 IVF_MAX_DRIVER_CODEBOOK = 65_536
 
 
-def _ivf_assign_driver(emb: DataFrame, cent_rows: list, k: int) -> DataFrame:
-    """Coarse assignment with a driver-resident codebook: one float64
-    GEMM per Arrow batch against the broadcast centroid matrix. The
-    right path whenever K x dim fits comfortably per executor."""
+def _codebook_rows(cents: DataFrame) -> list:
+    """[(cid, ce), ...] of a (cid, ce) centroid frame in cid order — a
+    bounded collect, K rows, like any broadcast dim."""
+    return sorted((r["cid"], r["ce"]) for r in cents.collect())
+
+
+def _unit(m):
+    """The rows of matrix ``m`` scaled to unit L2 norm (a zero row
+    becomes NaN): the GEMM engine's one normalisation, of vectors and
+    centroids alike."""
+    import numpy as np
+
+    return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+
+def gemm_nearest(
+    rows: DataFrame,
+    vec: str,
+    cents: list,
+    k: int,
+    keep: tuple[str, ...],
+    out: str = "cid",
+) -> DataFrame:
+    """(*keep, out, r): the Arrow GEMM nearest-centroid kernel, dedup's
+    engine — it trades the DataFrame kernel's bit-exactness
+    (``operators.quantize``) for BLAS, accepting ulp-level differences.
+    ``cents`` = [(id, vector), ...] rides the closure like any broadcast
+    dim; per Arrow batch the rows' ``vec`` and the centroids are
+    unit-normalised (``_unit``) and scored with ONE float64 GEMM, and
+    each row is emitted for each of its ``k`` nearest centroids (id in
+    ``out``, 1-based rank ``r``).
+
+    Picks (``tests/test_quantize.py`` pins them): k == 1 is
+    ``np.argmax`` — ties to the earlier centroid, and the NaN score of a
+    zero-norm centroid WINS (the DataFrame kernel ranks its NULL last);
+    k > 1 is a stable ``argsort(-S)`` — ties to the earlier centroid,
+    NaN last. A zero-norm row (NaN everywhere) gets the first
+    centroid(s) either way. These are the picks each caller made before
+    sharing the kernel: ``trained_coarse_centroids`` and the
+    centroid-to-super-list step take k = 1; the driver assignment and
+    the vector-to-super-lists probe take nprobe and ``super_probe``,
+    > 1 at every call site unless the codebook holds one list, where
+    both picks coincide."""
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    C = np.array([v for _, v in cent_rows], dtype=np.float64)
-    cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    ids = np.array([c for c, _ in cents], dtype=np.int64)
+    Cn = _unit(np.array([v for _, v in cents], dtype=np.float64))
 
-    def coarse_assign(batches):
+    def assign(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            En = E / np.linalg.norm(E, axis=1, keepdims=True)
-            S = En @ Cn.T
-            # rank lists by score desc; stable sort keeps cid asc on ties
-            idx = np.argsort(-S, axis=1, kind="stable")[:, :k]
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
+            S = _unit(np.array(pdf[vec].tolist(), dtype=np.float64)) @ Cn.T
+            if k == 1:
+                idx = np.argmax(S, axis=1)[:, None]
+            else:
+                idx = np.argsort(-S, axis=1, kind="stable")[:, :k]
+            n = idx.shape[1]
+            at = np.repeat(np.arange(len(pdf)), n)
             yield pd.DataFrame(
                 {
-                    "vec_id": np.repeat(vid, k),
-                    "cid": cids[idx].ravel(),
-                    "r": np.tile(np.arange(1, k + 1), len(vid)),
+                    **{c: pdf[c].to_numpy()[at] for c in keep},
+                    out: ids[idx].ravel(),
+                    "r": np.tile(np.arange(1, n + 1, dtype=np.int32), len(pdf)),
                 }
             )
 
-    return emb.select("vec_id", "embedding").mapInPandas(
-        coarse_assign, schema="vec_id long, cid long, r int"
+    schema = StructType(
+        [
+            *rows.select(*keep).schema.fields,
+            StructField(out, LongType()),
+            StructField("r", IntegerType()),
+        ]
     )
+    return rows.select(*dict.fromkeys((*keep, vec))).mapInPandas(assign, schema)
 
 
 def _ivf_assign_distributed(
@@ -1003,9 +1034,9 @@ def _ivf_assign_distributed(
     """Two-level coarse assignment for codebooks past the driver/GEMM
     limit: quantize the CENTROIDS under a ~sqrt(K)-entry super-codebook,
     have each vector probe its ``super_probe`` nearest super-lists
-    (map-only GEMM against the SMALL level-0 codebook), then rank the
-    ~super_probe * sqrt(K) candidate centroids per vector with an
-    equi-join on super-list id + one window — never an N x K product
+    (both ``gemm_nearest`` against the SMALL level-0 codebook), then
+    rank the ~super_probe * sqrt(K) candidate centroids per vector with
+    an equi-join on super-list id + one window — never an N x K product
     and never a >sqrt(K)-row driver matrix.
 
     Same recall trade as IVF itself, one level up: a vector whose true
@@ -1013,68 +1044,26 @@ def _ivf_assign_distributed(
     PROBED centroid. ``super_probe >= len(super codebook)`` makes the
     candidate set complete and the assignment identical to the driver
     path (the equivalence the planted test pins)."""
-    import math as _math
-
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql import Window
-
-    spark = emb.sparkSession
-    K = len(cent_rows)
-    stride = max(1, _math.isqrt(K))
     # level-0 codebook: every stride-th centroid — sqrt(K) rows, spread
-    # across cid space (cent_rows is sorted by cid)
-    sup = cent_rows[::stride]
-    S0 = np.array([v for _, v in sup], dtype=np.float64)
-    S0n = S0 / np.linalg.norm(S0, axis=1, keepdims=True)
-    sp = min(super_probe, len(sup))
+    # across cid space (cent_rows is sorted by cid); its ids are the
+    # super-list ids
+    stride = max(1, math.isqrt(len(cent_rows)))
+    sup = list(enumerate(v for _, v in cent_rows[::stride]))
 
     # centroids live in a DataFrame (at real extreme-N they never touch
     # the driver; here they arrive as rows and parallelize back out)
-    cent_df = spark.createDataFrame(
+    cent_df = emb.sparkSession.createDataFrame(
         [(int(c), [float(x) for x in v]) for c, v in cent_rows],
         "cid long, ce array<double>",
     )
-
-    def home_super(batches):  # centroid -> its ONE nearest super-list
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.array(pdf["ce"].tolist(), dtype=np.float64)
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {
-                    "cid": pdf["cid"].to_numpy(dtype=np.int64),
-                    "ce": pdf["ce"],
-                    "sid": np.argmax(Cn @ S0n.T, axis=1).astype(np.int64),
-                }
-            )
-
-    cent_sid = cent_df.mapInPandas(
-        home_super, schema="cid long, ce array<double>, sid long"
-    )
-
-    def probe_supers(batches):  # vector -> its super_probe nearest super-lists
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            En = E / np.linalg.norm(E, axis=1, keepdims=True)
-            idx = np.argsort(-(En @ S0n.T), axis=1, kind="stable")[:, :sp]
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(vid, sp),
-                    "embedding": pdf["embedding"].iloc[
-                        np.repeat(np.arange(len(pdf)), sp)
-                    ].to_numpy(),
-                    "sid": idx.ravel().astype(np.int64),
-                }
-            )
-
-    vec_probes = emb.select("vec_id", "embedding").mapInPandas(
-        probe_supers, schema="vec_id long, embedding array<float>, sid long"
+    # centroid -> its ONE nearest super-list; vector -> its super_probe
+    # nearest ones
+    cent_sid = gemm_nearest(cent_df, "ce", sup, 1, ("cid", "ce"), out="sid")
+    vec_probes = gemm_nearest(
+        emb, "embedding", sup, super_probe, ("vec_id", "embedding"), out="sid"
     )
 
     def exact_cos(batches):  # score candidate (vector, centroid) rows
@@ -1084,21 +1073,20 @@ def _ivf_assign_distributed(
             # Normalize-then-dot, the same formula as the driver path's
             # En @ Cn.T — NOT dot/(|e||c|), whose different op order can
             # flip near-tie centroid rankings by a ulp vs the driver.
-            E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            C = np.array(pdf["ce"].tolist(), dtype=np.float64)
-            En = E / np.linalg.norm(E, axis=1, keepdims=True)
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            cs = np.einsum("ij,ij->i", En, Cn)
+            En = _unit(np.array(pdf["embedding"].tolist(), dtype=np.float64))
+            Cn = _unit(np.array(pdf["ce"].tolist(), dtype=np.float64))
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
                     "cid": pdf["cid"].to_numpy(dtype=np.int64),
-                    "cos": cs,
+                    "cos": np.einsum("ij,ij->i", En, Cn),
                 }
             )
 
-    scored = vec_probes.join(cent_sid, "sid").mapInPandas(
-        exact_cos, schema="vec_id long, cid long, cos double"
+    scored = (
+        vec_probes.drop("r")
+        .join(cent_sid.drop("r"), "sid")
+        .mapInPandas(exact_cos, schema="vec_id long, cid long, cos double")
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.col("cid"))
     return (
@@ -1123,7 +1111,7 @@ def _ivf_pairs_from_centroids(
 
     Codebook-size guard: up to ``max_driver_codebook`` centroids the
     codebook rides the driver like a broadcast dim and assignment is a
-    per-batch GEMM (`_ivf_assign_driver`); past it — K ~ 64k, i.e.
+    per-batch GEMM (`gemm_nearest`); past it — K ~ 64k, i.e.
     N ~ 4e9 at sqrt-N sizing, where the K x dim matrix stops fitting a
     sane broadcast — assignment cuts over to the distributed two-level
     quantizer (`_ivf_assign_distributed`). Downstream candidate
@@ -1133,7 +1121,7 @@ def _ivf_pairs_from_centroids(
 
     k = min(nprobe, len(cent_rows))
     if len(cent_rows) <= max_driver_codebook:
-        assign = _ivf_assign_driver(emb, cent_rows, k)
+        assign = gemm_nearest(emb, "embedding", cent_rows, k, ("vec_id",))
     else:
         assign = _ivf_assign_distributed(
             emb, cent_rows, k, super_probe=super_probe
@@ -1211,109 +1199,44 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 EMB_DIM = 64
 
 
-def trained_coarse_centroids(
-    emb: DataFrame, k: int | None = None
-) -> DataFrame:
-    """One exact-decimal Lloyd iteration from the deterministic first-k
-    init — the trained coarse quantizer the fixed-init IVF's docstring
-    promises at real corpus sizes (where ``k`` scales ~sqrt(N) and the
-    first-k codebook stops covering the space).
+def trained_coarse_centroids(emb: DataFrame, k: int) -> DataFrame:
+    """(cid, ce): one exact-decimal Lloyd iteration from the
+    deterministic first-k init — the trained coarse quantizer the
+    fixed-init IVF's docstring promises at real corpus sizes (where
+    ``k`` scales ~sqrt(N) and the first-k codebook stops covering the
+    space).
 
-    Assignment is a vectorized Arrow-batch GEMM argmax (numpy picks the
-    nearest init centroid, first-index ties = lowest cid — matching the
-    oracle's ``ORDER BY cos DESC, cid``); the per-cluster per-dimension
-    MEANS are exact ``decimal(38,6)`` sums in ONE map-side-combining
-    hash aggregate, so the DuckDB oracle re-derives bit-identical
+    Assignment is the Arrow GEMM kernel (``gemm_nearest``, k = 1: the
+    first-index argmax keeps the lowest cid on ties, matching the
+    oracle's ``ORDER BY cos DESC, cid``; a flip needs two coarse scores
+    within ~1 ulp, the same accepted contract as IVF probe selection).
+    The update is the DataFrame kernel's exact-decimal
+    ``centroid_means``, so the DuckDB oracle re-derives bit-identical
     centroid doubles from the same assignment. (``q_kmeans`` keeps the
-    fully-HOF bit-exact assignment as the declarative twin; here the
-    GEMM carries the same accepted ulp contract as IVF probe
-    selection.)
+    fully-HOF bit-exact assignment as the declarative twin.) The batch
+    carries each member's embedding out with its cid, so the means need
+    no join back to the corpus: the ONLY shuffle is the map-side-
+    combined K x 64 decimal sums.
 
     Scale: one map-only assignment pass + one shuffle (the K x 64
     decimal sums). More Lloyd rounds = repeat the pair of stages; the
     codebook itself never exceeds K rows.
     """
-    import numpy as np
-    import pandas as pd
-
-    if k is None:
-        k = ivf_n_centroids(scan_row_count(emb))
-    # init codebook: bounded collect, like any broadcast dim
-    init = sorted(
-        emb.where(F.col("vec_id") < k)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    C = np.array([r["embedding"] for r in init], dtype=np.float64)
-    cids = np.array([r["vec_id"] for r in init], dtype=np.int64)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-
-    # vectorized argmax assignment (one float64 GEMM per Arrow batch;
-    # stable argsort keeps the cid-asc tie-break) — same accepted ulp
-    # contract as the IVF probe selection: a flip needs two coarse
-    # scores within ~1 ulp. The centroid MEANS downstream stay exact
-    # decimal, so the oracle replays them bit-identically. The batch
-    # carries the embedding back out with its cid (round 18): the mean
-    # aggregate needs only (cid, embedding), so returning both removes
-    # the join-back — the old a1.join(emb, "vec_id") shuffled the
-    # whole vector column by vec_id just to reattach what the Python
-    # worker already held; now the ONLY shuffle is the map-side-
-    # combined K x 64 decimal sums (guide §2.3/§2.4).
-    def argmax_assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            E = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            En = E / np.linalg.norm(E, axis=1, keepdims=True)
-            best = np.argmax(En @ Cn.T, axis=1)
-            yield pd.DataFrame(
-                {
-                    "cid": cids[best],
-                    "embedding": pdf["embedding"],
-                }
-            )
-
-    a1 = emb.select("vec_id", "embedding").mapInPandas(
-        argmax_assign, schema="cid long, embedding array<float>"
-    )
-    dims = [
-        (
-            F.sum(
-                F.col("embedding")[d].cast("double").cast("decimal(38,6)")
-            ).cast("double")
-            / F.count(F.lit(1))
-        ).alias(f"d{d}")
-        for d in range(EMB_DIM)
-    ]
-    return (
-        a1.groupBy("cid")
-        .agg(*dims)
-        .select(
-            "cid",
-            F.array(*[F.col(f"d{d}") for d in range(EMB_DIM)]).alias("ce"),
-        )
-    )
+    init = _codebook_rows(first_k(emb, k))
+    a1 = gemm_nearest(emb, "embedding", init, 1, ("embedding",))
+    return centroid_means(a1, ("cid",), "embedding", EMB_DIM)
 
 
-def embedding_pairs_ivf_trained(
-    emb: DataFrame,
-    threshold: float,
-    k: int | None = None,
-    nprobe: int | None = None,
-) -> DataFrame:
+def embedding_pairs_ivf_trained(emb: DataFrame, threshold: float) -> DataFrame:
     """IVF near-dup pairs over a Lloyd-trained coarse codebook: train
     (`trained_coarse_centroids`), collect the K-row codebook (bounded,
     broadcast-analogous), then reuse the shared candidate machinery."""
-    if k is None:
-        k = ivf_n_centroids(scan_row_count(emb))
-    if nprobe is None:
-        nprobe = ivf_nprobe(k)
-    cents = sorted(
-        trained_coarse_centroids(emb, k).collect(), key=lambda r: r["cid"]
-    )
+    k = ivf_n_centroids(scan_row_count(emb))
     return _ivf_pairs_from_centroids(
-        emb, [(r["cid"], r["ce"]) for r in cents], threshold, nprobe
+        emb,
+        _codebook_rows(trained_coarse_centroids(emb, k)),
+        threshold,
+        ivf_nprobe(k),
     )
 
 

@@ -33,7 +33,13 @@ from dynamodb_streaming_datalake_spark.functions.texthash import (
     sql_cosine,
     sql_portable_hash60,
 )
-from dynamodb_streaming_datalake_spark.cache import memo
+from dynamodb_streaming_datalake_spark.cache import ensure_cached_build, memo
+from dynamodb_streaming_datalake_spark.operators.quantize import (
+    centroid_means,
+    first_k,
+    l2sq,
+    nearest,
+)
 from dynamodb_streaming_datalake_spark.registry import format_doc as _fmt
 from dynamodb_streaming_datalake_spark.registry import query
 from dynamodb_streaming_datalake_spark.sources.readers import fan_out, read_table
@@ -274,42 +280,6 @@ _SQL_IVF = f"""
 """
 
 
-def _ivf_candidates(e: DataFrame) -> DataFrame:
-    """The IVF candidate set (query_id, neighbor_id) — assignment,
-    probe, list join, self-pair drop, distinct. Factored out of
-    ``q_ann_ivf`` so ``scripts/ann_probe.py`` can count candidates
-    independently of ranking (the round-8 sf1 discrepancy probe)."""
-    cents = e.where(F.col("vec_id") < IVF_CENTROIDS).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    scored_assign = fan_out(e, "vec_id").join(F.broadcast(cents)).select(
-        "vec_id",
-        "cid",
-        cosine(F.col("embedding"), F.col("ce")).alias("ac"),
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.col("ac").desc(), F.col("cid")
-    )
-    ranked_assign = scored_assign.withColumn(
-        "r", F.row_number().over(w_assign)
-    )
-    lists = ranked_assign.where(F.col("r") == 1).select("vec_id", "cid")
-    probes = ranked_assign.where(
-        (F.col("r") <= IVF_NPROBE) & (F.col("vec_id") < IVF_QUERIES)
-    ).select(F.col("vec_id").alias("query_id"), "cid")
-    # probes is bounded by the query's CONSTANTS (IVF_QUERIES x
-    # IVF_NPROBE rows at any corpus size) — broadcast it explicitly so
-    # the corpus-sized lists side never shuffles (guide §3.1; the
-    # planner's size estimate for a window-filtered subtree is too
-    # coarse to pick this on its own)
-    return (
-        F.broadcast(probes).join(lists, "cid")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .distinct()
-    )
-
-
 @query(
     "q_ann_ivf",
     oracle=f"""
@@ -332,35 +302,20 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector); the candidate join is equi on cluster id, bounded by list
     sizes (~N/K per list); exact cosine touches only candidates. This
     is the layout FAISS-style IVF uses, expressed as DataFrame ops.
+    It is the serving path over a one-shot build
+    (``ivf_serve(ivf_assign_lists(...))``): q_ann_serve and
+    q_ann_index_stream run the same serve over a persisted and a
+    stream-maintained list source.
     """
     e = read_table(spark, sf_dir, "embeddings")
-    cand = _ivf_candidates(e)
-    scored = (
-        cand.join(
-            e.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")),
-            "query_id",
-        )
-        .join(
-            e.select(
-                F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne")
-            ),
-            "neighbor_id",
-        )
-        .select("query_id", "neighbor_id", cosine(F.col("qe"), F.col("ne")).alias("cs"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cs").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= IVF_TOP_K)
-        .select("query_id", "neighbor_id", "rank", F.round("cs", 6).alias("cos_sim"))
-    )
+    cents = ivf_centroids(e)
+    return ivf_serve(ivf_assign_lists(e, cents), cents, e)
 
 
 # --------------------------------------------------------------------------
 # Iterative k-means (Lloyd's, 2 rounds) — fully declarative, SQL oracle
 # --------------------------------------------------------------------------
 KM_K = 8
-KM_DEC = "decimal(38,6)"
 
 _SQL_KM_ASSIGN = """
     {out} AS (
@@ -420,15 +375,18 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     does the same loop) kept fully declarative so the DuckDB oracle can
     replay it exactly.
 
-    Per iteration:
-    * assign — broadcast the K centroids, score cosine per (vector,
-      centroid), argmax via partial-aggregating MAX(struct(cs, -cid)):
-      the 8x fan-out collapses map-side, so the shuffle carries one row
-      per vector, not K.
-    * update — per-cluster centroid = per-dimension mean, computed as
-      64 exact decimal(38,6) SUMs in ONE hash aggregate (map-side
-      partial): the shuffle carries K x 64 decimal sums per partition.
-      No explode: dimension access is a row-local projection.
+    Per iteration, the DataFrame nearest-centroid kernel
+    (``operators.quantize``):
+    * assign — ``nearest``: broadcast the K centroids, score cosine per
+      (vector, centroid), argmax via partial-aggregating
+      MAX(struct(cs, -cid, …)): the 8x fan-out collapses map-side, so
+      the shuffle carries one row per vector, not K.
+    * update — ``centroid_means``: per-cluster centroid = per-dimension
+      mean, computed as 64 exact decimal(38,6) SUMs in ONE hash
+      aggregate (map-side partial): the shuffle carries K x 64 decimal
+      sums per partition. The assignment carries each member's vector
+      in its argmax struct, so the update needs no join back to the
+      corpus.
 
     Determinism: cosine uses the fixed-shape fold (bit-identical to
     DuckDB's list_dot_product); means are exact-decimal; the argmax
@@ -442,81 +400,24 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages, embeddings scanned once per assignment.
     """
     e = read_table(spark, sf_dir, "embeddings")
-    # round 18: each side's norm sum is hoisted to ONE fold per row
-    # before the K-way broadcast cross (inside the pair expression the
-    # vector-side fold ran once per centroid and the centroid-side once
-    # per vector) — the r17 eval-panel pattern, bit-identical doubles
-    ef = fan_out(e, "vec_id").select(
-        "vec_id", "embedding", sq_sum(F.col("embedding")).alias("en")
+    ef = fan_out(e, "vec_id")
+    a1 = nearest(ef, first_k(e, KM_K), "cosine", carry=("embedding",))
+    cents1 = centroid_means(a1, ("cid",), "embedding", DIM)
+    # assignment 2 carries the winning centroid's norm (sqrt of the
+    # same sq_sum fold the kernel hoists — bit-identical doubles), so
+    # cents1 has exactly ONE consumer: no checkpoint, no join-back
+    a2 = nearest(
+        ef,
+        cents1.select("*", F.sqrt(sq_sum(F.col("ce"))).alias("cnorm")),
+        "cosine",
+        carry=("cnorm",),
     )
-
-    def assign(
-        cents: DataFrame, out_cs: str = "cs", carry_norm: bool = False
-    ) -> DataFrame:
-        cn = cents.select("cid", "ce", sq_sum(F.col("ce")).alias("cn"))
-        norm_cols = (
-            [F.sqrt(F.col("cn")).alias("cnorm")] if carry_norm else []
-        )
-        scored = ef.join(F.broadcast(cn)).select(
-            "vec_id",
-            "cid",
-            cosine_hoisted(
-                F.col("embedding"), F.col("ce"), F.col("en"), F.col("cn")
-            ).alias("cs"),
-            *norm_cols,
-        )
-        # carry_norm rides the argmax struct BEHIND the (cs, ncid)
-        # tie-break (ncid is unique per group, so cnorm never decides
-        # the max) — it lets the caller read the winning centroid's
-        # norm without a second consumer of the centroid frame
-        struct_cols = [F.col("cs"), (-F.col("cid")).alias("ncid")]
-        if carry_norm:
-            struct_cols.append(F.col("cnorm"))
-        win = (
-            scored.groupBy("vec_id")
-            .agg(F.max(F.struct(*struct_cols)).alias("best"))
-            .select(
-                "vec_id",
-                (-F.col("best.ncid")).alias("cid"),
-                F.col("best.cs").alias(out_cs),
-                *(
-                    [F.col("best.cnorm").alias("cnorm")]
-                    if carry_norm
-                    else []
-                ),
-            )
-        )
-        return win
-
-    cents0 = e.where(F.col("vec_id") < KM_K).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    a1 = assign(cents0)
-    dims = [
-        (
-            F.sum(F.col("embedding")[d].cast("double").cast(KM_DEC)).cast("double")
-            / F.count(F.lit(1))
-        ).alias(f"d{d}")
-        for d in range(DIM)
-    ]
-    # round 18: assignment 2 carries the winning centroid's norm
-    # (sqrt of the SAME sq_sum fold the old norm projection computed —
-    # bit-identical doubles), so cents1 has exactly ONE consumer: no
-    # lazy checkpoint (whose physical planning pre-executed shuffle
-    # stages at construction), no join-back of the norms, one lineage
-    cents1 = (
-        a1.join(e, "vec_id")
-        .groupBy("cid")
-        .agg(*dims)
-        .select("cid", F.array(*[F.col(f"d{d}") for d in range(DIM)]).alias("ce"))
-    )
-    a2 = assign(cents1, carry_norm=True)
     return (
         a2.groupBy("cid")
         .agg(
             F.count(F.lit(1)).alias("n"),
             (
-                F.sum(F.col("cs").cast("decimal(18,6)")).cast("double")
+                F.sum(F.col("score").cast("decimal(18,6)")).cast("double")
                 / F.count(F.lit(1))
             ).alias("mean_cos"),
             F.max("cnorm").alias("centroid_norm"),
@@ -709,16 +610,6 @@ PQ_SUBDIM = 8
 PQ_K = 16  #: codes per subspace -> 8 x 4 bits = 4 bytes/vector
 
 
-def l2sq(a, b) -> F.Column:
-    """Squared L2 distance as the fixed sequential fold — the same
-    bit-identical-to-DuckDB evaluation shape as :func:`cosine`."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-
-
 def _sql_l2sq(a: str, b: str) -> str:
     return (
         f"list_aggregate(list_transform(list_zip({a}, {b}),"
@@ -745,21 +636,17 @@ def _pq_subvectors(e: DataFrame) -> DataFrame:
 
 
 def _pq_assign(sub: DataFrame, codebook: DataFrame) -> DataFrame:
-    """Nearest code per (vector, subspace): broadcast the M x K
-    codebook, argmin via partial-aggregating MIN(struct(dist, code))
-    so the K-way fan-out collapses map-side."""
-    scored = sub.join(F.broadcast(codebook), "s").select(
-        "vec_id", "s", "code", l2sq(F.col("v"), F.col("c")).alias("dist")
-    )
-    return (
-        scored.groupBy("vec_id", "s")
-        .agg(F.min(F.struct("dist", "code")).alias("best"))
-        .select(
-            "vec_id",
-            "s",
-            F.col("best.code").alias("code"),
-            F.col("best.dist").alias("dist"),
-        )
+    """(vec_id, s, code, dist): nearest code per (vector, subspace) —
+    the kernel's ``nearest`` keyed on ``s`` against the broadcast
+    M x K codebook."""
+    return nearest(
+        sub,
+        codebook.select("s", F.col("code").alias("cid"), F.col("c").alias("ce")),
+        "l2sq",
+        key="s",
+        vec="v",
+    ).select(
+        "vec_id", "s", F.col("cid").alias("code"), F.col("score").alias("dist")
     )
 
 
@@ -787,41 +674,12 @@ def _pq_trained_codebook(sub: DataFrame, sf_dir: str | None = None) -> DataFrame
         return sub.sparkSession.createDataFrame(
             rows, "s int, code long, c array<double>"
         )
-    icb = sub.where(F.col("vec_id") < PQ_K).select(
-        "s", F.col("vec_id").alias("code"), F.col("v").alias("c")
-    )
-    # round 18: the argmin carries v alongside (v is constant across a
-    # (vec_id, s) group — F.first picks the one value), so the means
-    # aggregate below reads it directly instead of joining a1 back to
-    # sub on (vec_id, s) — the same join-back removal as the coarse
-    # IVF trainer (guide §2.4): one exchange of (s, code, v) partials
-    # replaces a full re-shuffle of the subvector frame.
-    scored = sub.join(F.broadcast(icb), "s").select(
-        "vec_id", "s", "code", "v", l2sq(F.col("v"), F.col("c")).alias("dist")
-    )
-    a1v = (
-        scored.groupBy("vec_id", "s")
-        .agg(
-            F.min(F.struct("dist", "code")).alias("best"),
-            F.first("v").alias("v"),
-        )
-        .select("s", F.col("best.code").alias("code"), "v")
-    )
-    dims = [
-        (
-            F.sum(F.col("v")[d].cast(KM_DEC)).cast("double")
-            / F.count(F.lit(1))
-        ).alias(f"d{d}")
-        for d in range(PQ_SUBDIM)
-    ]
-    return (
-        a1v.groupBy("s", "code")
-        .agg(*dims)
-        .select(
-            "s",
-            "code",
-            F.array(*[F.col(f"d{d}") for d in range(PQ_SUBDIM)]).alias("c"),
-        )
+    # the argmin carries v, so the means read it without a join back
+    # to sub on (vec_id, s)
+    icb = first_k(sub, PQ_K, vec="v", key="s")
+    a1 = nearest(sub, icb, "l2sq", key="s", carry=("v",), vec="v")
+    return centroid_means(a1, ("s", "cid"), "v", PQ_SUBDIM).select(
+        "s", F.col("cid").alias("code"), F.col("ce").alias("c")
     )
 
 
@@ -880,9 +738,10 @@ def q_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully declarative — no UDF, no collect: subvectors are row-local
     slices over an exploded subspace index; distances are the fixed
     sequential HOF fold (bit-identical to the oracle's list fold);
-    argmin is the partial-aggregating MIN(struct(dist, code)) (the
-    q_kmeans pattern — the K-way fan-out collapses map-side); trained
-    means are decimal(38,6) sums in one hash aggregate. The DuckDB
+    argmin and update are the kernel's ``nearest`` (partial-aggregating
+    MIN(struct(dist, code)) — the K-way fan-out collapses map-side)
+    and ``centroid_means`` (decimal(38,6) sums in one hash
+    aggregate), keyed on the subspace. The DuckDB
     oracle replays train + encode end to end, so every codebook double
     and every assignment must match bit-for-bit.
 
@@ -1236,44 +1095,6 @@ _SQL_IVFPQ_LISTS = f"""
     )"""
 
 
-def _ivfpq_candidates(e: DataFrame) -> DataFrame:
-    """(query_id, neighbor_id): the IVF-pruned candidate pairs — each
-    query meets ONLY the members of its ``IVFPQ_NPROBE`` nearest
-    inverted lists, never the whole corpus (the pruning the plan test
-    pins by counting).
-
-    Coarse assignment is map-only: broadcast the K full-vector
-    centroids, per-vector argmin via the partial-aggregating
-    MIN(struct(dist, cid)) — no window over the corpus, the K-way
-    fan-out collapses map-side. The probe side windows only the Q query
-    rows. The candidate join is equi on cluster id, bounded by list
-    sizes (~N/K per list)."""
-    ad = F.col("embedding").cast("array<double>")
-    cents = e.where(F.col("vec_id") < IVFPQ_CENTROIDS).select(
-        F.col("vec_id").alias("cid"), ad.alias("ce")
-    )
-    scored = e.select("vec_id", ad.alias("ev")).join(F.broadcast(cents)).select(
-        "vec_id", "cid", l2sq(F.col("ev"), F.col("ce")).alias("cdist")
-    )
-    lists = (
-        scored.groupBy("vec_id")
-        .agg(F.min(F.struct("cdist", "cid")).alias("best"))
-        .select("vec_id", F.col("best.cid").alias("cid"))
-    )
-    wq = Window.partitionBy("vec_id").orderBy(F.col("cdist").asc(), F.col("cid"))
-    probes = (
-        scored.where(F.col("vec_id") < PQ_NQ)
-        .withColumn("r", F.row_number().over(wq))
-        .where(F.col("r") <= IVFPQ_NPROBE)
-        .select(F.col("vec_id").alias("query_id"), "cid")
-    )
-    return (
-        probes.join(lists, "cid")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-
-
 @query(
     "q_ann_ivfpq",
     oracle=f"""
@@ -1323,27 +1144,14 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches |cand| x M LUT rows instead of |corpus| x M x Q — at
     nprobe/K = 1/8 that is an 8x reduction at Q=1 and the ratio the
     operator sustains at any N. The DuckDB oracle replays
-    train + assign + probe + ADC + rank end to end."""
+    train + assign + probe + ADC + rank end to end. This is the serving
+    path over a one-shot encode (``ivfpq_serve(ivfpq_encode(...))``):
+    q_ann_serve_pq and q_ann_codes_stream run the same serve over
+    persisted and stream-maintained codes."""
     e = read_table(spark, sf_dir, "embeddings")
-    sub = _pq_subvectors(e)
-    tcb = _pq_trained_codebook(sub, sf_dir=sf_dir)
-    enc = _pq_assign(sub, tcb).select("vec_id", "s", "code")
-    cand = _ivfpq_candidates(e)
-    lut = _pq_lut(sub, tcb)
-    pairs = (
-        enc.join(cand.withColumnRenamed("neighbor_id", "vec_id"), "vec_id")
-        .join(F.broadcast(lut), ["query_id", "s", "code"])
-    )
-    return (
-        _adc_fold_and_rank(pairs, pool=PQ_TOPK)
-        .where(F.col("rank") <= PQ_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.round("adist", 6).alias("approx_dist"),
-        )
-    )
+    tcb = _pq_trained_codebook(_pq_subvectors(e), sf_dir=sf_dir)
+    cents = ivfpq_coarse_centroids(e)
+    return ivfpq_serve(ivfpq_encode(e, tcb, cents), cents, tcb, e)
 
 
 # --------------------------------------------------------------------------
@@ -1639,6 +1447,52 @@ for _q in (q_pq_quantize, q_ann_pq, q_ann_pq_rerank, q_ann_ivfpq):
 # itself a first-class, oracle-checked operator.
 
 
+def _ivf_truth(e: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, t_rank): the brute-force top-IVF_TOP_K
+    of the IVF_QUERIES-query panel that q_retrieval_eval and
+    q_ann_tuning grade the IVF path against. Ranked on round(cos, 6)
+    desc, neighbor_id — the cross-engine libm-ulp guard of
+    q_hybrid_search's dense list (round-7 ADVICE): an ulp difference
+    between Spark's and DuckDB's cosine must not flip a truth rank.
+
+    The |panel| x |corpus| cosines run on every core (the one-split
+    corpus scan fans out), with each side's norm sum hoisted to one fold
+    per row (bit-identical to ``cosine``). The kernel stays the JVM
+    expression: an Arrow/pandas kernel was A/B'd at 1x and 10x pair
+    volume and lost both (0.22 vs 0.55 s, 0.6 vs 0.73 s) — shipping
+    both 64-dim arrays across the Python boundary costs more than the
+    interpreted fold saves (guide §4.1)."""
+    q = e.where(F.col("vec_id") < IVF_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qe"),
+        sq_sum(F.col("embedding")).alias("qn"),
+    )
+    scored = (
+        F.broadcast(q)
+        .join(
+            fan_out(e, "vec_id").select(
+                "vec_id", "embedding", sq_sum(F.col("embedding")).alias("nn")
+            ),
+            F.col("vec_id") != F.col("query_id"),
+        )
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            cosine_hoisted(
+                F.col("qe"), F.col("embedding"), F.col("qn"), F.col("nn")
+            ).alias("c"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.round(F.col("c"), 6).desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("t_rank", F.row_number().over(w))
+        .where(F.col("t_rank") <= IVF_TOP_K)
+        .select("query_id", "neighbor_id", "t_rank")
+    )
+
+
 @query(
     "q_retrieval_eval",
     oracle=f"""
@@ -1699,65 +1553,7 @@ def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index serves the full corpus; the comparison joins are
     equi-joins on (query, neighbor) over k-bounded lists."""
     e = read_table(spark, sf_dir, "embeddings")
-
-    # round 17: norm sums hoisted to one fold per ROW per side (inside
-    # the pair expression the corpus-side fold re-ran once per panel
-    # query — |panel|x redundant). Same fold exprs as cosine(), same
-    # dot/(sqrt*sqrt) division shape — bit-identical doubles.
-    def _sq(col: str):
-        return F.aggregate(
-            F.transform(
-                F.col(col).cast("array<double>"), lambda x: x * x
-            ),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-
-    q = e.where(F.col("vec_id") < IVF_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        _sq("embedding").alias("qn"),
-    )
-    # brute-force truth = |panel| x |corpus| cosines: fan the one-split
-    # corpus scan out to the session's cores so the fold runs on every
-    # core. The kernel stays the JVM expression: an Arrow/pandas kernel
-    # was A/B'd at 1x and 10x pair volume and lost both (0.22 vs 0.55 s,
-    # 0.6 vs 0.73 s) — shipping both 64-dim arrays across the Python
-    # boundary costs more than the interpreted fold saves (guide §4.1).
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("qe").cast("array<double>"),
-            F.col("embedding").cast("array<double>"),
-            lambda x, y: x * y,
-        ),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-    scored = (
-        F.broadcast(q)
-        .join(
-            fan_out(e, "vec_id").select(
-                "vec_id", "embedding", _sq("embedding").alias("nn")
-            ),
-            F.col("vec_id") != F.col("query_id"),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot / (F.sqrt(F.col("qn")) * F.sqrt(F.col("nn")))).alias("c"),
-        )
-    )
-    # rank truth on round(c, 6) — same cross-engine libm-ulp guard as
-    # q_hybrid_search's dense list (round-7 ADVICE): an ulp difference
-    # between Spark's and DuckDB's cosine must not flip a truth rank.
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("c"), 6).desc(), F.col("neighbor_id")
-    )
-    truth = (
-        scored.withColumn("t_rank", F.row_number().over(w))
-        .where(F.col("t_rank") <= IVF_TOP_K)
-        .select("query_id", "neighbor_id", "t_rank")
-    )
+    truth = _ivf_truth(e)
     sys = q_ann_ivf(spark, sf_dir).select("query_id", "neighbor_id", "rank")
     joined = truth.join(
         sys,
@@ -1912,83 +1708,24 @@ def q_ann_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     result-invisible). The truth cross is bounded by the
     {IVF_QUERIES}-query panel exactly as in q_retrieval_eval."""
     e = read_table(spark, sf_dir, "embeddings")
-    cents = e.where(F.col("vec_id") < IVF_CENTROIDS).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.col("ac").desc(), F.col("cid")
-    )
-    ranked_assign = (
-        fan_out(e, "vec_id").join(F.broadcast(cents))
-        .select(
-            "vec_id", "cid", cosine(F.col("embedding"), F.col("ce")).alias("ac")
-        )
-        .withColumn("r", F.row_number().over(w_assign))
-    )
-    lists = ranked_assign.where(F.col("r") == 1).select("vec_id", "cid")
-    # ulp-guarded truth (round(c,6) before ranking, as q_retrieval_eval)
-    qs = e.where(F.col("vec_id") < IVF_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    w_t = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("c"), 6).desc(), F.col("neighbor_id")
-    )
-    truth = (
-        qs.crossJoin(
-            e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-        )
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qe"), F.col("embedding")).alias("c"),
-        )
-        .withColumn("t_rank", F.row_number().over(w_t))
-        .where(F.col("t_rank") <= IVF_TOP_K)
-        .select("query_id", "neighbor_id", "t_rank")
-    )
+    truth = _ivf_truth(e)
     # One shared pass (round 14): the nprobe levels are NESTED
     # (probes at 1 are a subset of 2 of 4), so candidates are generated
-    # and cosine-scored ONCE at the widest level, each pair tagged with
-    # the probe rank that found it; a bounded explode assigns every
-    # pair to the levels that include it, and one window + one
-    # aggregate produce the whole curve. Same outputs as the per-level
-    # branches the oracle still runs — 1/3 the scoring joins.
-    max_np = max(ANN_TUNE_NPROBES)
-    probes = ranked_assign.where(
-        (F.col("r") <= max_np) & (F.col("vec_id") < IVF_QUERIES)
-    ).select(F.col("vec_id").alias("query_id"), "cid", "r")
-    # a neighbor lives in exactly one list, so (query, neighbor) pairs
-    # are unique by construction and `r` IS the first-probe rank.
-    # probes is IVF_QUERIES x max_np rows — a constant — so broadcast
-    # it and leave the corpus-sized lists unshuffled (guide §3.1)
-    cand = (
-        F.broadcast(probes).join(lists, "cid")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"),
-            F.col("r").alias("fpr"),
-        )
-    )
-    scored = (
-        cand.join(
-            e.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("qe"),
-            ),
-            "query_id",
-        )
-        .join(
-            e.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("ne"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id", "neighbor_id", "fpr",
-            cosine(F.col("qe"), F.col("ne")).alias("cs"),
-        )
+    # and cosine-scored ONCE at the widest level by the serve path's own
+    # probe join, each pair tagged with the probe rank `r` that found it
+    # (a neighbor lives in exactly one list, so `r` IS the first-probe
+    # rank); a bounded explode assigns every pair to the levels that
+    # include it, and one window + one aggregate produce the whole
+    # curve. Same outputs as the per-level branches the oracle still
+    # runs — 1/3 the scoring joins.
+    cents = ivf_centroids(e)
+    scored = ivf_probe_join(
+        ivf_assign_lists(e, cents), cents, e, nprobe=max(ANN_TUNE_NPROBES)
+    ).select(
+        "query_id",
+        "neighbor_id",
+        F.col("r").alias("fpr"),
+        cosine(F.col("qe"), F.col("embedding")).alias("cs"),
     )
     # two consumers (the per-level top-k window and the candidate-volume
     # aggregate) read `levels`: an explicit shuffle on the window's own
@@ -3188,82 +2925,77 @@ _fmt(
 # ---------------------------------------------------------------------------
 # persisted IVF index: the build/serve lifecycle split (round 11)
 # ---------------------------------------------------------------------------
-# q_ann_ivf assigns the WHOLE corpus to centroids inside every query —
-# correct for a one-shot batch, wrong as a serving architecture: a
-# production index is built once, persisted, and each query touches
-# only its probed lists. q_ann_serve is that split made real: the inverted
-# file (cid, vec_id, embedding — the IVFFlat layout) lands on disk
-# PARTITIONED BY cid, and the serving query joins a broadcast probe
-# set against it, so Spark's dynamic partition pruning reads ONLY the
-# probed lists' files. The answer must equal the inline build
-# (deterministic quantizer), so q_ann_ivf's oracle transfers verbatim
-# — build/serve is result-invisible by construction, and the pruning
+# q_ann_ivf builds the inverted lists inside every query — correct for
+# a one-shot batch, wrong as a serving architecture: a production index
+# is built once, persisted, and each query touches only its probed
+# lists. q_ann_serve is that split made real: the inverted file (cid,
+# vec_id, embedding — the IVFFlat layout) lands on disk PARTITIONED BY
+# cid, and the same serve (ivf_serve) joins a broadcast probe set
+# against it, so Spark's dynamic partition pruning reads ONLY the probed
+# lists' files. q_ann_ivf's oracle transfers verbatim, and the pruning
 # is pinned in tests/test_plans_ext.py.
 
-_IVF_INDEX_VERSION = "v1"
+_IVF_INDEX_VERSION = "v2"
 
 
 def ivf_centroids(e: DataFrame) -> DataFrame:
     """(cid, ce): the frozen coarse quantizer — deterministic first-K
     init, the same table every IVF path in this module trains from."""
-    return e.where(F.col("vec_id") < IVF_CENTROIDS).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
+    return first_k(e, IVF_CENTROIDS)
 
 
 def ivf_assign_lists(e: DataFrame, cents: DataFrame) -> DataFrame:
     """(cid, vec_id, embedding): nearest-centroid (max cosine, ties to
-    the smaller cid) inverted-list rows. Per-row deterministic given
+    the smaller cid) inverted-list rows — the kernel's ``nearest``,
+    carrying each vector into its list. Per-row deterministic given
     the frozen centroid table, so assignment commutes with any
     batching of the corpus — the property the streaming index view
-    (streaming.sketchview) relies on. Broadcast centroids, map-only
-    but for the per-vector argmax window."""
-    scored = fan_out(e, "vec_id").join(F.broadcast(cents)).select(
-        "vec_id",
-        "embedding",
-        "cid",
-        cosine(F.col("embedding"), F.col("ce")).alias("ac"),
+    (streaming.sketchview) relies on."""
+    return nearest(
+        fan_out(e, "vec_id"), cents, "cosine", carry=("embedding",)
+    ).select("cid", "vec_id", "embedding")
+
+
+def ivf_probe_join(
+    lists: DataFrame, cents: DataFrame, e: DataFrame, nprobe: int = IVF_NPROBE
+) -> DataFrame:
+    """(query_id, qe, r, neighbor_id, embedding): the IVF candidate
+    step. The first IVF_QUERIES vectors rank the centroid table
+    (broadcast, map-only) and keep their ``nprobe`` nearest lists
+    (probe rank ``r``); that probe set — a constant IVF_QUERIES x
+    nprobe rows, broadcast so the corpus-sized list source never
+    shuffles — joins the (cid, vec_id, embedding) list source on cid,
+    and self pairs drop. A vector sits in exactly one list, so the
+    (query, neighbor) pairs are unique. ``scripts/ann_probe.py`` counts
+    these rows."""
+    probes = nearest(
+        e.where(F.col("vec_id") < IVF_QUERIES),
+        cents,
+        "cosine",
+        n=nprobe,
+        carry=("embedding",),
+    ).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), "cid", "r"
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("ac").desc(), F.col("cid"))
     return (
-        scored.withColumn("r", F.row_number().over(w))
-        .where(F.col("r") == 1)
-        .select("cid", "vec_id", "embedding")
+        lists.join(F.broadcast(probes), "cid")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id", "qe", "r", F.col("vec_id").alias("neighbor_id"), "embedding"
+        )
     )
 
 
 def ivf_serve(lists: DataFrame, cents: DataFrame, e: DataFrame) -> DataFrame:
     """The IVFFlat serving query over ANY (cid, vec_id, embedding)
-    inverted-list source — the persisted index (q_ann_serve) or the
-    continuously-maintained streaming view (q_ann_index_stream):
-    queries score the centroid table (broadcast, map-only), probe
-    their nprobe lists, and the candidate join runs against the list
-    source keyed on cid."""
-    queries = e.where(F.col("vec_id") < IVF_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    qscored = queries.join(F.broadcast(cents)).select(
+    inverted-list source — the one-shot build (q_ann_ivf), the
+    persisted index (q_ann_serve) or the continuously-maintained
+    streaming view (q_ann_index_stream): each query's probed-list
+    candidates (``ivf_probe_join``) re-ranked by exact cosine."""
+    scored = ivf_probe_join(lists, cents, e).select(
         "query_id",
-        "qe",
-        "cid",
-        cosine(F.col("qe"), F.col("ce")).alias("ac"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("ac").desc(), F.col("cid")
-    )
-    probes = (
-        qscored.withColumn("r", F.row_number().over(wq))
-        .where(F.col("r") <= IVF_NPROBE)
-        .select("query_id", "qe", "cid")
-    )
-    scored = (
-        lists.join(F.broadcast(probes), "cid")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine(F.col("qe"), F.col("embedding")).alias("cs"),
-        )
+        "neighbor_id",
+        cosine(F.col("qe"), F.col("embedding")).alias("cs"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cs").desc(), F.col("neighbor_id")
@@ -3293,10 +3025,6 @@ SQL_IVF_SERVE = f"""
 def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the IVF index once per dataset: centroid table + inverted
     lists (with vectors — IVFFlat) written partitioned by cid."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-
     def build(build_dir: str) -> None:
         e = read_table(spark, sf_dir, "embeddings")
         cents = ivf_centroids(e)
@@ -3323,8 +3051,6 @@ def q_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the index is built once (one assignment pass) and amortized
     across every query thereafter; per serve, work = |queries| x 16
     centroid scores + an equi-join bounded by the probed lists."""
-    import os
-
     path = _ensure_ivf_index(spark, sf_dir)
     cents = spark.read.parquet(os.path.join(path, "centroids"))
     lists = spark.read.parquet(os.path.join(path, "lists"))
@@ -3351,16 +3077,15 @@ def q_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # v2: build refactored onto the shared ivfpq_coarse_centroids /
 # ivfpq_encode kernels (round 13) — bumped so the rebuilt store is
 # re-proven through the oracle instead of serving a pre-refactor cache
-_IVFPQ_INDEX_VERSION = "v2"
+_IVFPQ_INDEX_VERSION = "v3"
 
 
 def ivfpq_coarse_centroids(e: DataFrame) -> DataFrame:
-    """The frozen coarse quantizer: deterministic first-K init (same as
-    ``_ivfpq_candidates``), so every build/serve/stream path derives
-    the identical (cid, ce) table."""
-    ad = F.col("embedding").cast("array<double>")
-    return e.where(F.col("vec_id") < IVFPQ_CENTROIDS).select(
-        F.col("vec_id").alias("cid"), ad.alias("ce")
+    """The frozen coarse quantizer: deterministic first-K init in
+    double, so every build/serve/stream path derives the identical
+    (cid, ce) table."""
+    return first_k(e, IVFPQ_CENTROIDS).select(
+        "cid", F.col("ce").cast("array<double>").alias("ce")
     )
 
 
@@ -3372,53 +3097,40 @@ def ivfpq_encode(e: DataFrame, tcb: DataFrame, cents: DataFrame) -> DataFrame:
     corpus in micro-batches and unioning equals encoding it one-shot —
     the property q_ann_codes_stream's append fold rests on."""
     enc = _pq_assign(_pq_subvectors(e), tcb).select("vec_id", "s", "code")
-    ad = F.col("embedding").cast("array<double>")
-    scored = (
-        e.select("vec_id", ad.alias("ev"))
-        .join(F.broadcast(cents))
-        .select(
-            "vec_id", "cid", l2sq(F.col("ev"), F.col("ce")).alias("cdist")
-        )
-    )
-    lists = (
-        scored.groupBy("vec_id")
-        .agg(F.min(F.struct("cdist", "cid")).alias("best"))
-        .select("vec_id", F.col("best.cid").alias("cid"))
-    )
+    lists = nearest(e, cents, "l2sq").select("vec_id", "cid")
     return enc.join(lists, "vec_id").select("vec_id", "s", "code", "cid")
+
+
+def ivfpq_probe_join(codes: DataFrame, cents: DataFrame, e: DataFrame) -> DataFrame:
+    """(query_id, vec_id, s, code): the IVF-PQ candidate step. The
+    first PQ_NQ vectors rank the coarse centroids (squared L2,
+    broadcast, map-only) and keep their IVFPQ_NPROBE nearest lists;
+    that probe set (broadcast) joins the (vec_id, s, code, cid) code
+    source on cid — each query meets ONLY its probed lists' members,
+    never the whole corpus — and self pairs drop."""
+    probes = nearest(
+        e.where(F.col("vec_id") < PQ_NQ), cents, "l2sq", n=IVFPQ_NPROBE
+    ).select(F.col("vec_id").alias("query_id"), "cid")
+    return (
+        codes.join(F.broadcast(probes), "cid")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", "s", "code")
+    )
 
 
 def ivfpq_serve(
     codes: DataFrame, cents: DataFrame, tcb: DataFrame, e: DataFrame
 ) -> DataFrame:
     """Shared IVF-PQ serving kernel (the q_ann_serve / ivf_serve split
-    applied to the compressed tier): queries score the coarse
-    centroids (broadcast, map-only), build their LUT from the stored
-    codebook, and ADC-fold only the probed lists' codes. Used by both
+    applied to the compressed tier): queries build their LUT from the
+    stored codebook and ADC-fold only their probed lists' codes
+    (``ivfpq_probe_join``). Used by the one-shot build (q_ann_ivfpq),
     the persisted index (q_ann_serve_pq) and the stream-maintained
-    code view (q_ann_codes_stream), so the two serving paths cannot
+    code view (q_ann_codes_stream), so the serving paths cannot
     drift."""
-    qsub = _pq_subvectors(e.where(F.col("vec_id") < PQ_NQ))
-    lut = _pq_lut(qsub, tcb)
-    ad = F.col("embedding").cast("array<double>")
-    qscored = (
-        e.where(F.col("vec_id") < PQ_NQ)
-        .select("vec_id", ad.alias("ev"))
-        .join(F.broadcast(cents))
-        .select(
-            "vec_id", "cid", l2sq(F.col("ev"), F.col("ce")).alias("cdist")
-        )
-    )
-    wq = Window.partitionBy("vec_id").orderBy(F.col("cdist").asc(), F.col("cid"))
-    probes = (
-        qscored.withColumn("r", F.row_number().over(wq))
-        .where(F.col("r") <= IVFPQ_NPROBE)
-        .select(F.col("vec_id").alias("query_id"), "cid")
-    )
-    pairs = (
-        codes.join(F.broadcast(probes), "cid")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "s", "code"])
+    lut = _pq_lut(_pq_subvectors(e.where(F.col("vec_id") < PQ_NQ)), tcb)
+    pairs = ivfpq_probe_join(codes, cents, e).join(
+        F.broadcast(lut), ["query_id", "s", "code"]
     )
     return (
         _adc_fold_and_rank(pairs, pool=PQ_TOPK)
@@ -3438,10 +3150,6 @@ def _ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     Everything persisted is exactly what q_ann_ivfpq derives inline —
     float64 round-trips bit-exactly through parquet, so the stored
     codebook/codes are the inline ones, not approximations."""
-    import os
-
-    from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
-
     def build(build_dir: str) -> None:
         e = read_table(spark, sf_dir, "embeddings")
         sub = _pq_subvectors(e)
@@ -3499,8 +3207,6 @@ def q_ann_serve_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows (broadcast-sized at any corpus) + an ADC fold bounded by the
     probed lists — and the lists hold codes, not vectors, so bytes
     read per probe are ~64x smaller than IVFFlat serving."""
-    import os
-
     path = _ensure_ivfpq_index(spark, sf_dir)
     cents = spark.read.parquet(os.path.join(path, "centroids"))
     codes = spark.read.parquet(os.path.join(path, "codes"))
@@ -3726,26 +3432,15 @@ def q_embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF list layout or k-means mixture built on these centroids.
 
     Scale: O(N*K) — one broadcast of K centroids, the per-vector
-    top-2 collapses map-side; per-point s rounds to 6 dp and
-    accumulates in exact decimal (order-independent), the q_kmeans
-    reporting discipline. The full pairwise silhouette is O(N^2) and
+    top-2 is the kernel's ``nearest`` window; per-point s rounds to
+    6 dp and accumulates in exact decimal (order-independent), the
+    q_kmeans reporting discipline. The full pairwise silhouette is O(N^2) and
     is deliberately NOT what this computes."""
     e = read_table(spark, sf_dir, "embeddings")
-    cents = e.where(F.col("vec_id") < SIL_K).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    scored = fan_out(e, "vec_id").join(F.broadcast(cents)).select(
-        "vec_id",
-        "cid",
-        (1 - cosine(F.col("embedding"), F.col("ce"))).alias("dist"),
-        cosine(F.col("embedding"), F.col("ce")).alias("cs"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cs").desc(), "cid")
-    ranked = scored.withColumn("r", F.row_number().over(w)).where(
-        F.col("r") <= 2
-    )
-    own = ranked.where(F.col("r") == 1).select("vec_id", "cid", F.col("dist").alias("a"))
-    nxt = ranked.where(F.col("r") == 2).select("vec_id", F.col("dist").alias("b"))
+    ranked = nearest(fan_out(e, "vec_id"), first_k(e, SIL_K), "cosine", n=2)
+    dist = 1 - F.col("score")
+    own = ranked.where(F.col("r") == 1).select("vec_id", "cid", dist.alias("a"))
+    nxt = ranked.where(F.col("r") == 2).select("vec_id", dist.alias("b"))
     s = F.round(
         (F.col("b") - F.col("a"))
         / F.when(F.col("a") > F.col("b"), F.col("a")).otherwise(F.col("b")),
@@ -3850,25 +3545,14 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_embedding_silhouette: geometry AND semantics before trusting a
     cluster-derived curriculum or mixture.
 
-    Scale: the assignment is the broadcast argmax every IVF path
-    uses; everything after is aggregates over (cluster x label)
-    counts — a few hundred rows at any corpus size. All ratios are
-    exact-integer rationals: no log, no sum-of-doubles."""
+    Scale: the assignment is the kernel's ``nearest`` (broadcast
+    argmax, one struct per vector); everything after is aggregates
+    over (cluster x label) counts — a few hundred rows at any corpus
+    size. All ratios are exact-integer rationals: no log, no
+    sum-of-doubles."""
     e = read_table(spark, sf_dir, "embeddings")
-    cents = e.where(F.col("vec_id") < SIL_K).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    scored = fan_out(e, "vec_id").join(F.broadcast(cents)).select(
-        "vec_id",
-        "label",
-        "cid",
-        cosine(F.col("embedding"), F.col("ce")).alias("cs"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cs").desc(), "cid")
-    assign = (
-        scored.withColumn("r", F.row_number().over(w))
-        .where(F.col("r") == 1)
-        .select("vec_id", "cid", "label")
+    assign = nearest(
+        fan_out(e, "vec_id"), first_k(e, SIL_K), "cosine", carry=("label",)
     )
     cl = assign.groupBy("cid", "label").agg(F.count(F.lit(1)).alias("n_cl"))
     wm = Window.partitionBy("cid").orderBy(F.col("n_cl").desc(), "label")

@@ -31,7 +31,7 @@ ORACLE: dict[str, str] = {}
 # PRIORITY derived by scripts/rotate_window.py from
 # CORRECTNESS_r*.json (latest: r17).  Do not hand-order;
 # regenerate after each driver round.  Derivation: the
-# 58 never-driver-proven names lead, then proofs
+# 68 never-driver-proven names lead, then proofs
 # ascending by round (stable tie-break: prior order).
 PRIORITY: tuple[str, ...] = (
     # -- never driver-proven --
@@ -93,6 +93,16 @@ PRIORITY: tuple[str, ...] = (
     "q_ams_stream",
     "q_cdc_zone_roundtrip",
     "q_compact_scan",
+    "q_ann_ivf",
+    "q_ann_serve",
+    "q_embedding_silhouette",
+    "q_cluster_purity",
+    "q_retrieval_eval",
+    "q_ann_tuning",
+    "q_semdedup",
+    "q_dedup_embedding",
+    "q_dedup_embedding_trained",
+    "q_dedup_clusters",
     # -- proven r11 --
     "q_media_jpeg",
     "q_media_gif",
@@ -128,7 +138,6 @@ PRIORITY: tuple[str, ...] = (
     "q_lang_distribution",
     # -- proven r12 --
     "q_dedup_incremental",
-    "q_ann_ivf",
     "q_media_decode",
     "q_media_frame_stats",
     "q_media_audio_stats",
@@ -144,7 +153,6 @@ PRIORITY: tuple[str, ...] = (
     "q_ngram_novelty",
     "q_rake_keywords",
     "q_pca_power",
-    "q_ann_serve",
     "q_pack_nextfit",
     "q_target_encoding",
     "q_column_correlation",
@@ -171,7 +179,6 @@ PRIORITY: tuple[str, ...] = (
     "q_window_tumbling",
     "q_window_sliding",
     # -- proven r13 --
-    "q_embedding_silhouette",
     "q_source_overlap",
     "q_triangle_count",
     "q_ohlc_bars",
@@ -180,7 +187,6 @@ PRIORITY: tuple[str, ...] = (
     "q_zipf_fit",
     "q_token_entropy",
     "q_random_projection",
-    "q_cluster_purity",
     "q_neyman_allocation",
     "q_dp_counts",
     "q_sprt_monitor",
@@ -219,7 +225,6 @@ PRIORITY: tuple[str, ...] = (
     "q10_returned_items",
     # -- proven r14 --
     "q_dedup_spans",
-    "q_retrieval_eval",
     "q_media_wav_adpcm",
     "q_media_mp4_samples",
     "q_media_mp3_sideinfo",
@@ -306,7 +311,6 @@ PRIORITY: tuple[str, ...] = (
     "q_assoc_rules",
     "q_distinctive_terms",
     "q_dedup_threshold_sweep",
-    "q_ann_tuning",
     "q_matryoshka_eval",
     "q_retractable_minmax",
     "q_two_sample_ks",
@@ -363,14 +367,10 @@ PRIORITY: tuple[str, ...] = (
     "q_survival_km",
     "q_hard_negatives",
     "q_negative_sampling",
-    "q_semdedup",
     "q_dedup_simhash_pairs",
-    "q_dedup_embedding",
-    "q_dedup_embedding_trained",
     "q_doc_cdc_chunks",
     "q_bm25_search",
     "q_quality_classifier",
-    "q_dedup_clusters",
     "q_para_dedup",
     "q_hybrid_search",
     "q_media_bmp",

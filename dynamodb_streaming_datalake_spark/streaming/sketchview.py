@@ -808,7 +808,7 @@ _register_bloom()
 # hash-match q_ann_ivf's oracle VERBATIM — the same
 # result-invisibility bar as q_ann_serve's persisted index.
 
-IVF_VIEW_VERSION = "v3"
+IVF_VIEW_VERSION = "v4"
 
 
 def ivf_view(cents: DataFrame) -> View:
@@ -893,7 +893,7 @@ _register_ivf()
 # the same build/serve result-invisibility bar as q_ann_serve_pq's
 # persisted index.
 
-PQCODES_VIEW_VERSION = "v3"
+PQCODES_VIEW_VERSION = "v4"
 
 
 def pq_codes_view(tcb: DataFrame, cents: DataFrame) -> View:

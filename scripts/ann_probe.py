@@ -37,13 +37,23 @@ def ivf_diagnostics(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from dynamodb_streaming_datalake_spark.operators.similarity import (
-        _ivfpq_candidates,
-        _ivf_candidates,
+        _pq_subvectors,
+        _pq_trained_codebook,
+        ivf_assign_lists,
+        ivf_centroids,
+        ivf_probe_join,
+        ivfpq_coarse_centroids,
+        ivfpq_encode,
+        ivfpq_probe_join,
     )
     from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
     e = read_table(spark, sf_dir, "embeddings")
-    cand_ivf = _ivf_candidates(e)
+    # the candidate pairs are the serve paths' own probe joins over a
+    # one-shot build: one row per (query, neighbor) for IVFFlat, one
+    # per (query, neighbor, subspace) for IVF-PQ's codes
+    cents = ivf_centroids(e)
+    cand_ivf = ivf_probe_join(ivf_assign_lists(e, cents), cents, e)
     lists_occ = (
         cand_ivf.groupBy("query_id")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -54,6 +64,9 @@ def ivf_diagnostics(spark, sf_dir: str) -> dict:
         )
         .collect()[0]
     )
+    tcb = _pq_trained_codebook(_pq_subvectors(e), sf_dir=sf_dir)
+    coarse = ivfpq_coarse_centroids(e)
+    cand_pq = ivfpq_probe_join(ivfpq_encode(e, tcb, coarse), coarse, e)
     return {
         "n_embeddings": e.count(),
         "ivf_candidates": cand_ivf.count(),
@@ -62,7 +75,7 @@ def ivf_diagnostics(spark, sf_dir: str) -> dict:
             "max": lists_occ["max"],
             "avg": round(lists_occ["avg"], 1),
         },
-        "ivfpq_candidates": _ivfpq_candidates(e).count(),
+        "ivfpq_candidates": cand_pq.select("query_id", "vec_id").distinct().count(),
     }
 
 

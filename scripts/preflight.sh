@@ -176,6 +176,64 @@ if bad:
 print("one-parse-site guard OK")
 EOF
 
+# one nearest-centroid kernel per engine: the first-K init
+# (F.col("vec_id").alias("cid" | "code")) is written only in
+# operators/quantize.py's first_k, and the GEMM engine's unit-row
+# normalisation (np.linalg.norm(..., keepdims=True)) only in
+# operators/dedup.py's _unit; a copy anywhere else in the repo's .py
+# files fails
+python - <<'EOF'
+import ast, os, sys
+
+OPS = os.path.join(".", "dynamodb_streaming_datalake_spark", "operators")
+SITES = {
+    "first-K init": (os.path.join(OPS, "quantize.py"), "first_k"),
+    "GEMM normalisation": (os.path.join(OPS, "dedup.py"), "_unit"),
+}
+
+
+def str_arg(call, value):
+    return bool(call.args) and getattr(call.args[0], "value", None) == value
+
+
+def kind(call):
+    f = call.func
+    if getattr(f, "attr", None) == "alias" and (str_arg(call, "cid") or str_arg(call, "code")):
+        recv = f.value
+        if isinstance(recv, ast.Call) and str_arg(recv, "vec_id"):
+            if getattr(recv.func, "attr", getattr(recv.func, "id", None)) == "col":
+                return "first-K init"
+    if getattr(f, "attr", None) == "norm" and any(k.arg == "keepdims" for k in call.keywords):
+        return "GEMM normalisation"
+    return None
+
+
+def hits(node, owner):
+    """(kind, owner function, line) of each kernel copy under node."""
+    for child in ast.iter_child_nodes(node):
+        inner = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else owner
+        if isinstance(child, ast.Call) and kind(child):
+            yield kind(child), owner, child.lineno
+        yield from hits(child, inner)
+
+
+bad = []
+for root, dirs, files in os.walk("."):
+    dirs[:] = sorted(d for d in dirs if not d.startswith((".", "__")))
+    for f in sorted(files):
+        if f.endswith(".py"):
+            p = os.path.join(root, f)
+            tree = ast.parse(open(p, encoding="utf-8").read(), p)
+            bad += [
+                f"{k}: {p}:{line} in {owner}"
+                for k, owner, line in hits(tree, None)
+                if (p, owner) != SITES[k]
+            ]
+if bad:
+    sys.exit("a quantizer kernel step outside its kernel (quantize.first_k, dedup._unit):\n" + "\n".join(bad))
+print("quantizer kernel guard OK")
+EOF
+
 if [ "${1:-}" = "quick" ]; then
     echo "preflight (quick) PASSED"
     exit 0

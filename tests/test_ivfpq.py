@@ -19,12 +19,14 @@ from dynamodb_streaming_datalake_spark.operators.similarity import (
     PQ_NQ,
     PQ_TOPK,
     _adc_fold_and_rank,
-    _ivfpq_candidates,
     _pq_assign,
     _pq_filtered_pairs,
     _pq_lut,
     _pq_subvectors,
     _pq_trained_codebook,
+    ivfpq_coarse_centroids,
+    ivfpq_encode,
+    ivfpq_probe_join,
     q_ann_ivfpq,
     q_ann_pq,
 )
@@ -39,13 +41,25 @@ def _pq_parts(spark, sf_dir):
     return e, sub, tcb
 
 
+def _probe_pairs(spark, sf_dir):
+    """(query_id, neighbor_id): the IVF-PQ candidate pairs — the serve
+    path's own probe join over a one-shot encode of the corpus."""
+    e, _, tcb = _pq_parts(spark, sf_dir)
+    cents = ivfpq_coarse_centroids(e)
+    return (
+        ivfpq_probe_join(ivfpq_encode(e, tcb, cents), cents, e)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+        .distinct()
+    )
+
+
 def test_ivfpq_candidates_are_pruned(spark, sf_smoke):
     """The point of IVF: each query meets only its nprobe lists'
     members, a strict subset of the corpus — the exhaustive baseline
     would score Q x (N-1) pairs."""
     e = read_table(spark, sf_smoke, "embeddings")
     n = e.count()
-    cand = _ivfpq_candidates(e)
+    cand = _probe_pairs(spark, sf_smoke)
     per_q = {
         r["query_id"]: r["c"]
         for r in cand.groupBy("query_id").agg(F.count(F.lit(1)).alias("c")).collect()
@@ -78,10 +92,9 @@ def test_ivfpq_topk_shape(spark, sf_smoke):
 def test_ivfpq_neighbors_come_from_probed_lists(spark, sf_smoke):
     """End-to-end containment: every returned neighbor is a member of
     one of its query's probed inverted lists."""
-    e = read_table(spark, sf_smoke, "embeddings")
     cand = {
         (r["query_id"], r["neighbor_id"])
-        for r in _ivfpq_candidates(e).collect()
+        for r in _probe_pairs(spark, sf_smoke).collect()
     }
     for r in q_ann_ivfpq(spark, sf_smoke).collect():
         assert (r["query_id"], r["neighbor_id"]) in cand
@@ -173,7 +186,7 @@ def test_ivfpq_vs_exhaustive_adc_volume(spark, sf_smoke):
     one number."""
     e = read_table(spark, sf_smoke, "embeddings")
     n = e.count()
-    pruned = _ivfpq_candidates(e).count()
+    pruned = _probe_pairs(spark, sf_smoke).count()
     assert pruned < PQ_NQ * (n - 1), (pruned, PQ_NQ * (n - 1))
     # and the composed query still fills top-k for every query
     assert q_ann_ivfpq(spark, sf_smoke).count() == PQ_NQ * PQ_TOPK
