@@ -1,37 +1,39 @@
-"""Shared per-dataset artifact caches: one in-process memo, one on-disk
-build directory, one set of counters.
+"""Shared per-dataset artifact caches: one key rule for two tiers, one
+set of counters.
+
+The key rule: an artifact is keyed on the stamps of the inputs it was
+built from, where a file's stamp is its ``(realpath, st_mtime_ns,
+st_size)``. A rewritten input changes its stamp, so the next call
+builds again; nothing is bumped by hand.
 
 In process — ``memo(kind, paths, build, session=None)``: every
 artifact derived from fixture files (parquet schemas, footer row
 counts, scan-plan handles, the pinned trade-graph edges, trained BPE
 merges, the unigram DP, PQ codebook rows) is stored under
-``(kind, session, stamps)`` where each input file contributes its
-``(realpath, st_mtime_ns, st_size)``. A rewritten input changes its
-stamp, so the next call rebuilds. Artifacts bound to a SparkSession
-(DataFrames, checkpointed frames) pass that session and are never
-handed to another one; session-free payloads (schemas, driver rows,
-counts) pass ``None`` and serve every session. A hit costs one
-``os.stat`` per input and one dict lookup — no py4j call.
+``(kind, session, stamps of paths)``. Artifacts bound to a
+SparkSession (DataFrames, checkpointed frames) pass that session and
+are never handed to another one; session-free payloads (schemas,
+driver rows, counts) pass ``None`` and serve every session. A hit
+costs one ``os.stat`` per input and one dict lookup — no py4j call.
+Storing an entry drops the entries of the same kind that are stale —
+an input whose stamp has changed since, or is gone — or whose session
+has been stopped (``sparkContext._jsc is None``), so an entry does not
+outlive its inputs by more than one store of its kind.
 
-One eviction rule: storing an entry drops the entries of the same kind
-that are stale — an input whose stamp has changed since, or is gone —
-or whose session has been stopped (``sparkContext._jsc is None``). So
-the memo holds at most one stamp per (kind, paths) and live session,
-and an entry does not outlive its inputs by more than one store of its
-kind (a vacuumed snapshot version's schema goes at the next commit).
-
-On disk — ``ensure_cached_build``: builds that are materialized under
-``$TMPDIR/<family>_cache_<version>_<sha16(sf_dir)>`` and reused by
-bench, correctness, and tests. Its discipline:
-
-* the build lands in a unique temp dir and is atomically renamed into
-  place, so a crashed build can never be mistaken for a complete one
-  and concurrent builders race safely (loser's rename fails, winner's
-  dir is used);
-* only caches from OLDER versions of the SAME family are swept — the
-  version is encoded in the dir name, so same-version caches for other
-  sf_dirs survive (bench/tests alternating between scales don't thrash
-  each other), and other families are never touched.
+On disk — ``ensure_cached_build(family, sf_dir, build_fn)``: builds
+materialized under ``$TMPDIR/<family>_cache_<sha16(sf_dir)>_<key>``
+and reused by bench, correctness and tests across processes. ``key``
+hashes the stamps of every top-level entry of ``sf_dir`` (the
+fixtures) and the source stamp — the sha256 of the package's ``.py``
+files, computed once per process — so a fixture rewritten in place
+and a change to any build code both land in a new dir. The build
+lands in a unique temp dir and is atomically renamed into place, so a
+crashed build is never mistaken for a complete one and concurrent
+builders race safely (the loser's rename fails, the winner's dir is
+used). Committing a build sweeps the superseded dirs of the same
+family and ``sf_dir``; other ``sf_dir``s' caches survive (bench and
+tests alternating between scales do not thrash each other) and other
+families are never touched.
 
 Counters: ``STATS[kind]`` holds ``hits``, ``builds`` and ``build_sec``
 for every memo kind and every on-disk family. A build's seconds include
@@ -41,6 +43,8 @@ through ``read_table``).
 
 from __future__ import annotations
 
+import functools
+import glob
 import hashlib
 import os
 import shutil
@@ -104,42 +108,38 @@ def memo(
     return value
 
 
-def cache_path(family: str, version: str, sf_dir: str) -> str:
-    key = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:16]
-    return os.path.join(
-        tempfile.gettempdir(), f"{family}_cache_{version}_{key}"
-    )
+def _sha16(text: str) -> str:
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
+
+
+@functools.cache
+def _source_stamp() -> str:
+    """sha256 of the package's ``.py`` files in sorted path order."""
+    h = hashlib.sha256()
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        h.update(os.path.relpath(path, pkg).encode())
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
 
 
 def ensure_cached_build(
-    family: str,
-    version: str,
-    sf_dir: str,
-    build_fn: Callable[[str], None],
-    extra_stale_prefixes: Sequence[str] = (),
+    family: str, sf_dir: str, build_fn: Callable[[str], None]
 ) -> str:
-    """Return the committed cache dir for (family, version, sf_dir),
-    building it with ``build_fn(build_dir)`` if absent. See module
-    docstring for the commit/sweep discipline. ``extra_stale_prefixes``
-    names legacy layouts to sweep alongside older versions.
-
-    The key is only (family, version, sf_dir): nothing notices that the
-    code which built a cached dir has changed. Bump a family's version
-    whenever its build code path changes (the build function or any
-    kernel it calls), or every reader keeps serving — and every oracle
-    check keeps re-proving — what the old code wrote."""
-    final = cache_path(family, version, sf_dir)
+    """Return the committed cache dir of ``family`` for the current
+    fixtures of ``sf_dir`` and the current package source, building it
+    with ``build_fn(build_dir)`` if absent. See the module docstring
+    for the key, the commit and the sweep."""
+    real = os.path.realpath(sf_dir)
+    stamps = [_stamp(os.path.join(real, n)) for n in sorted(os.listdir(real))]
+    prefix, sf_key = f"{family}_cache_", _sha16(real)
+    name = f"{prefix}{sf_key}_{_sha16(repr((stamps, _source_stamp())))}"
+    tmp_root = tempfile.gettempdir()
+    final = os.path.join(tmp_root, name)
     if os.path.isdir(final):
         STATS[family]["hits"] += 1
         return final
-    tmp_root = tempfile.gettempdir()
-    keep = f"{family}_cache_{version}_"
-    for name in os.listdir(tmp_root):
-        stale = any(name.startswith(p) for p in extra_stale_prefixes) or (
-            name.startswith(f"{family}_cache_") and not name.startswith(keep)
-        )
-        if stale:
-            shutil.rmtree(os.path.join(tmp_root, name), ignore_errors=True)
     build = tempfile.mkdtemp(prefix=f"{family}_build_", dir=tmp_root)
     try:
         _timed_build(family, lambda: build_fn(build))
@@ -151,4 +151,9 @@ def ensure_cached_build(
     except BaseException:
         shutil.rmtree(build, ignore_errors=True)
         raise
+    # superseded: this family's dirs for the same sf_dir under another
+    # key (or a pre-stamp ``<family>_cache_v<n>_<sf_key>`` dir)
+    for other in os.listdir(tmp_root):
+        if other.startswith(prefix) and sf_key in other and other != name:
+            shutil.rmtree(os.path.join(tmp_root, other), ignore_errors=True)
     return final

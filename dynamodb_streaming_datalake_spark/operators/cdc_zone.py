@@ -147,25 +147,16 @@ def read_day_state(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-#: zone layout version — bump to invalidate previously cached zones when
-#: the synthesis/write code changes (e.g. the decimal(18,2) widening)
-_ZONE_VERSION = "v4"
-
-
 def ensure_cdc_zone(spark: SparkSession, sf_dir: str) -> str:
     """Build the gzip NDJSON zone for ``sf_dir`` once; reuse thereafter.
 
-    The zone is deterministic in (sf_dir, layout version), so bench +
-    correctness + tests share one copy instead of leaking a fresh
-    168-partition write per invocation. Commit/sweep discipline is the
-    shared one (`cache.ensure_cached_build`); the legacy
-    ``cdc_zone_rt_`` layout is swept alongside older versions."""
+    The zone is deterministic in its inputs (the ``sf_dir`` fixtures
+    and the package source), so bench + correctness + tests share one
+    copy instead of leaking a fresh 168-partition write per invocation.
+    Key and commit discipline are the shared ones
+    (`cache.ensure_cached_build`)."""
     return ensure_cached_build(
-        "cdc_zone",
-        _ZONE_VERSION,
-        sf_dir,
-        lambda build_dir: build_cdc_zone(spark, sf_dir, build_dir),
-        extra_stale_prefixes=("cdc_zone_rt_",),
+        "cdc_zone", sf_dir, lambda d: build_cdc_zone(spark, sf_dir, d)
     )
 
 
@@ -215,24 +206,33 @@ def _zone_day_glob(path: str) -> str:
     return os.path.join(path, "y=2024", "m=1", "d=1", "h=*")
 
 
-#: memory-sink view names created by this module, per prefix — dropping
-#: by the tracked name avoids a catalog listTables sweep per invocation
+#: the memory-sink view last created per prefix — dropping by the
+#: tracked name avoids a catalog listTables sweep per invocation
 #: (~150 ms of py4j/catalog wall, measured; round 18)
-_TWIN_VIEWS: dict[str, list[str]] = {}
+_TWIN_VIEWS: dict[str, str] = {}
 
 
-def _drop_twin_views(spark: SparkSession, prefix: str) -> None:
-    """Memory sinks keep their full emission log in driver memory; drop
-    leftovers from earlier invocations so repeated bench/correctness
-    runs in one session don't accumulate them. Names are tracked at
-    registration (`_register_twin_view`) — same-session leftovers are
-    exactly the tracked ones, and a FRESH session has nothing to drop."""
-    for name in _TWIN_VIEWS.pop(prefix, []):
-        spark.catalog.dropTempView(name)
-
-
-def _register_twin_view(prefix: str, name: str) -> None:
-    _TWIN_VIEWS.setdefault(prefix, []).append(name)
+def _drain_twin(df: DataFrame, prefix: str, output_mode: str) -> DataFrame:
+    """Drain the streaming ``df`` with ``availableNow`` into a fresh
+    memory sink and return the sink's table. Memory sinks keep their
+    full emission log in driver memory, so the view the previous call
+    left under ``prefix`` is dropped first (in a FRESH session the drop
+    finds nothing)."""
+    spark = df.sparkSession
+    if prefix in _TWIN_VIEWS:
+        spark.catalog.dropTempView(_TWIN_VIEWS[prefix])
+    name = _TWIN_VIEWS[prefix] = f"{prefix}{next(_TWIN_SEQ)}"
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError(f"stream {name} did not drain in 600s")
+    return spark.table(name)
 
 
 @query(
@@ -288,20 +288,7 @@ def q_stateful_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = _zone_day_glob(path)
     stream = spark.readStream.schema(zone_row_schema()).json(day)
     latest = streaming_latest_state(stream, payload_cols=["value"])
-    _drop_twin_views(spark, "stateful_twin_")
-    name = f"stateful_twin_{next(_TWIN_SEQ)}"
-    _register_twin_view("stateful_twin_", name)
-    q = (
-        latest.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("stateful twin stream did not drain in 600s")
-    out = spark.table(name)
+    out = _drain_twin(latest, "stateful_twin_", "update")
     w = Window.partitionBy("id", "name").orderBy(
         F.col("event_time_us").desc(), F.col("event_id").desc()
     )
@@ -397,20 +384,7 @@ def q_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim,
         ["id"],
     )
-    _drop_twin_views(spark, "enrich_twin_")
-    name = f"enrich_twin_{next(_TWIN_SEQ)}"
-    _register_twin_view("enrich_twin_", name)
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("enrichment stream did not drain in 600s")
-    return spark.table(name).select(
+    return _drain_twin(enriched, "enrich_twin_", "append").select(
         "eventID",
         "id",
         "name",
@@ -426,14 +400,12 @@ def q_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # small-file compaction under the driver's oracle gate (round 5)
 # ---------------------------------------------------------------------------
 
-_COMPACT_VERSION = "v3"
-
 
 def ensure_compacted_zone(spark: SparkSession, sf_dir: str) -> str:
     """One day of the CDC zone written deliberately FRAGMENTED
     (coalesce_per_hour=False -> one file per shuffle task per hour),
     then compacted with the manifest-swap `compact_partitions` — built
-    once per (version, sf_dir) via the shared cache discipline. The
+    once per sf_dir via the shared cache discipline. The
     build asserts the compaction actually rewrote multi-file
     partitions, so the query on top is really reading post-swap
     files."""
@@ -463,7 +435,7 @@ def ensure_compacted_zone(spark: SparkSession, sf_dir: str) -> str:
                 "the query would not exercise the swap path"
             )
 
-    return ensure_cached_build("compact", _COMPACT_VERSION, sf_dir, build)
+    return ensure_cached_build("compact", sf_dir, build)
 
 
 @query(
@@ -512,8 +484,6 @@ def q_compact_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # custom-stateful gap sessionization under the gate (round 11)
 # ---------------------------------------------------------------------------
 
-_SESS_SRC_VERSION = "v1"
-
 
 def _ensure_session_source(spark: SparkSession, sf_dir: str) -> str:
     """Events (4 columns) plus one far-future flush sentinel per user
@@ -542,7 +512,7 @@ def _ensure_session_source(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(build_dir, "src")
         )
 
-    return ensure_cached_build("sesssrc", _SESS_SRC_VERSION, sf_dir, build)
+    return ensure_cached_build("sesssrc", sf_dir, build)
 
 
 @query(
@@ -573,20 +543,7 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
     sessions = streaming_sessionize(stream)
-    _drop_twin_views(spark, "sess_twin_")
-    name = f"sess_twin_{next(_TWIN_SEQ)}"
-    _register_twin_view("sess_twin_", name)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("session twin stream did not drain in 600s")
-    return spark.table(name).select(
+    return _drain_twin(sessions, "sess_twin_", "append").select(
         "user_id",
         "session_no",
         "n_events",
@@ -691,22 +648,5 @@ def q_stream_enrich_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "left",
     )
-    _drop_twin_views(spark, "scd2_twin_")
-    name = f"scd2_twin_{next(_TWIN_SEQ)}"
-    _register_twin_view("scd2_twin_", name)
-    q = (
-        enriched.select(
-            "event_id", "user_id", "ts_us", "version_no", "valid_from_us"
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("scd2 enrichment stream did not drain in 600s")
-    return spark.table(name).select(
-        "event_id", "user_id", "ts_us", "version_no", "valid_from_us"
-    )
+    cols = ("event_id", "user_id", "ts_us", "version_no", "valid_from_us")
+    return _drain_twin(enriched.select(*cols), "scd2_twin_", "append").select(*cols)

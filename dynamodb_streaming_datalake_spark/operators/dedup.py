@@ -978,17 +978,11 @@ def gemm_nearest(
     each row is emitted for each of its ``k`` nearest centroids (id in
     ``out``, 1-based rank ``r``).
 
-    Picks (``tests/test_quantize.py`` pins them): k == 1 is
-    ``np.argmax`` — ties to the earlier centroid, and the NaN score of a
-    zero-norm centroid WINS (the DataFrame kernel ranks its NULL last);
-    k > 1 is a stable ``argsort(-S)`` — ties to the earlier centroid,
-    NaN last. A zero-norm row (NaN everywhere) gets the first
-    centroid(s) either way. These are the picks each caller made before
-    sharing the kernel: ``trained_coarse_centroids`` and the
-    centroid-to-super-list step take k = 1; the driver assignment and
-    the vector-to-super-lists probe take nprobe and ``super_probe``,
-    > 1 at every call site unless the codebook holds one list, where
-    both picks coincide."""
+    Picks (``tests/test_quantize.py`` pins them): one stable
+    ``argsort(-S)`` for every k — ties to the earlier centroid, and the
+    NaN score of a zero-norm centroid ranks last, as the DataFrame
+    kernel and the oracle rank its NULL cosine. A zero-norm row (NaN
+    everywhere) gets the first centroid(s)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
@@ -1001,10 +995,7 @@ def gemm_nearest(
             if not len(pdf):
                 continue
             S = _unit(np.array(pdf[vec].tolist(), dtype=np.float64)) @ Cn.T
-            if k == 1:
-                idx = np.argmax(S, axis=1)[:, None]
-            else:
-                idx = np.argsort(-S, axis=1, kind="stable")[:, :k]
+            idx = np.argsort(-S, axis=1, kind="stable")[:, :k]
             n = idx.shape[1]
             at = np.repeat(np.arange(len(pdf)), n)
             yield pd.DataFrame(
@@ -1206,9 +1197,10 @@ def trained_coarse_centroids(emb: DataFrame, k: int) -> DataFrame:
     ``k`` scales ~sqrt(N) and the first-k codebook stops covering the
     space).
 
-    Assignment is the Arrow GEMM kernel (``gemm_nearest``, k = 1: the
-    first-index argmax keeps the lowest cid on ties, matching the
-    oracle's ``ORDER BY cos DESC, cid``; a flip needs two coarse scores
+    Assignment is the Arrow GEMM kernel (``gemm_nearest``, k = 1: its
+    stable pick keeps the lowest cid on ties and ranks a zero-norm
+    centroid last, matching the oracle's ``ORDER BY cos DESC, cid``,
+    where that NULL cosine sorts last; a flip needs two coarse scores
     within ~1 ulp, the same accepted contract as IVF probe selection).
     The update is the DataFrame kernel's exact-decimal
     ``centroid_means``, so the DuckDB oracle re-derives bit-identical

@@ -90,13 +90,10 @@ def zorder_write(
 # driver-gated z-order query (round 5)
 # ---------------------------------------------------------------------------
 
-_ZO_VERSION = "v1"
-
 
 def ensure_zorder_events(spark, sf_dir: str) -> str:
     """Z-ordered copy of ``events`` on (user_id, value), built once per
-    (version, sf_dir) with the shared cache discipline
-    (`cache.ensure_cached_build`)."""
+    sf_dir with the shared cache discipline (`cache.ensure_cached_build`)."""
     import os
 
     from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
@@ -109,7 +106,7 @@ def ensure_zorder_events(spark, sf_dir: str) -> str:
             os.path.join(build_dir, "events"),
         )
 
-    return ensure_cached_build("zorder", _ZO_VERSION, sf_dir, build)
+    return ensure_cached_build("zorder", sf_dir, build)
 
 
 def _register() -> None:

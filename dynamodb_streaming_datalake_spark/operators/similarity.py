@@ -2935,8 +2935,6 @@ _fmt(
 # lists' files. q_ann_ivf's oracle transfers verbatim, and the pruning
 # is pinned in tests/test_plans_ext.py.
 
-_IVF_INDEX_VERSION = "v2"
-
 
 def ivf_centroids(e: DataFrame) -> DataFrame:
     """(cid, ce): the frozen coarse quantizer — deterministic first-K
@@ -3033,7 +3031,7 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
         )
         cents.write.parquet(os.path.join(build_dir, "centroids"))
 
-    return ensure_cached_build("ivfindex", _IVF_INDEX_VERSION, sf_dir, build)
+    return ensure_cached_build("ivfindex", sf_dir, build)
 
 
 @query("q_ann_serve", oracle=SQL_IVF_SERVE)
@@ -3073,11 +3071,6 @@ def q_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # training, and ADC fold are the deterministic ones q_ann_ivfpq runs
 # inline, so serving from the store must hash-match its oracle
 # VERBATIM — build/serve result-invisibility, pinned like q_ann_serve.
-
-# v2: build refactored onto the shared ivfpq_coarse_centroids /
-# ivfpq_encode kernels (round 13) — bumped so the rebuilt store is
-# re-proven through the oracle instead of serving a pre-refactor cache
-_IVFPQ_INDEX_VERSION = "v3"
 
 
 def ivfpq_coarse_centroids(e: DataFrame) -> DataFrame:
@@ -3161,7 +3154,7 @@ def _ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
         cents.write.parquet(os.path.join(build_dir, "centroids"))
         tcb.write.parquet(os.path.join(build_dir, "codebook"))
 
-    return ensure_cached_build("ivfpqindex", _IVFPQ_INDEX_VERSION, sf_dir, build)
+    return ensure_cached_build("ivfpqindex", sf_dir, build)
 
 
 #: q_ann_ivfpq's oracle shape verbatim — the result every IVF-PQ

@@ -23,7 +23,6 @@ from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
 from dynamodb_streaming_datalake_spark.registry import query
 from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
-_EVO_VERSION = "v1"
 #: the generation-2 channel domain, keyed by o_orderkey % 3
 EVO_CHANNELS = ("web", "store", "app")
 
@@ -48,10 +47,7 @@ def build_generations(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
 
 def ensure_generations(spark: SparkSession, sf_dir: str) -> str:
     return ensure_cached_build(
-        "schema_evo",
-        _EVO_VERSION,
-        sf_dir,
-        lambda build_dir: build_generations(spark, sf_dir, build_dir),
+        "schema_evo", sf_dir, lambda d: build_generations(spark, sf_dir, d)
     )
 
 

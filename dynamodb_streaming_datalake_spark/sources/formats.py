@@ -27,8 +27,6 @@ from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
 from dynamodb_streaming_datalake_spark.registry import query
 from dynamodb_streaming_datalake_spark.sources.readers import read_table
 
-_FMT_VERSION = "v1"
-
 
 def _build_sharded_archives(
     spark: SparkSession,
@@ -117,10 +115,7 @@ def build_csv(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
 
 
 def ensure_csv(spark: SparkSession, sf_dir: str) -> str:
-    return ensure_cached_build(
-        "fmt_csv", _FMT_VERSION, sf_dir,
-        lambda d: build_csv(spark, sf_dir, d),
-    )
+    return ensure_cached_build("fmt_csv", sf_dir, lambda d: build_csv(spark, sf_dir, d))
 
 
 @query(
@@ -188,10 +183,7 @@ def build_orc(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
 
 
 def ensure_orc(spark: SparkSession, sf_dir: str) -> str:
-    return ensure_cached_build(
-        "fmt_orc", _FMT_VERSION, sf_dir,
-        lambda d: build_orc(spark, sf_dir, d),
-    )
+    return ensure_cached_build("fmt_orc", sf_dir, lambda d: build_orc(spark, sf_dir, d))
 
 
 @query(
@@ -401,8 +393,7 @@ def build_avro(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
 
 def ensure_avro(spark: SparkSession, sf_dir: str) -> str:
     return ensure_cached_build(
-        "fmt_avro", _FMT_VERSION, sf_dir,
-        lambda d: build_avro(spark, sf_dir, d),
+        "fmt_avro", sf_dir, lambda d: build_avro(spark, sf_dir, d)
     )
 
 
@@ -509,8 +500,7 @@ def build_warc(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
 
 def ensure_warc(spark: SparkSession, sf_dir: str) -> str:
     return ensure_cached_build(
-        "fmt_warc", "v2", sf_dir,  # v2: length-framed text (X-Text-Length)
-        lambda d: build_warc(spark, sf_dir, d),
+        "fmt_warc", sf_dir, lambda d: build_warc(spark, sf_dir, d)
     )
 
 
@@ -632,10 +622,7 @@ def build_zip(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
 
 
 def ensure_zip(spark: SparkSession, sf_dir: str) -> str:
-    return ensure_cached_build(
-        "fmt_zip", _FMT_VERSION, sf_dir,
-        lambda d: build_zip(spark, sf_dir, d),
-    )
+    return ensure_cached_build("fmt_zip", sf_dir, lambda d: build_zip(spark, sf_dir, d))
 
 
 def parse_zip(blob: bytes) -> list[tuple[str, str]]:
@@ -758,10 +745,7 @@ def build_tgz(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
 
 
 def ensure_tgz(spark: SparkSession, sf_dir: str) -> str:
-    return ensure_cached_build(
-        "fmt_tgz", _FMT_VERSION, sf_dir,
-        lambda d: build_tgz(spark, sf_dir, d),
-    )
+    return ensure_cached_build("fmt_tgz", sf_dir, lambda d: build_tgz(spark, sf_dir, d))
 
 
 def parse_tgz(blob: bytes) -> list[tuple[str, str]]:

@@ -40,11 +40,9 @@ AGG_VIEW = monoid(agg_event_partials, merge_agg_partials)
 # driver-gated lifecycle (round 7): the streaming twin of q_incr_agg
 # ---------------------------------------------------------------------------
 
-_AGGVIEW_VERSION = "v2"
-
 
 def _ensure_agg_view(spark: SparkSession, sf_dir: str) -> str:
-    """Two committed view versions built once per (version, sf_dir)
+    """Two committed view versions built once per sf_dir
     with the REAL fold kernel: v=1 folds the base events (4/5), v=2
     folds the delta (every 5th event) on top — the same deterministic
     split as the batch q_incr_agg, so the final view must equal the
@@ -62,7 +60,7 @@ def _ensure_agg_view(spark: SparkSession, sf_dir: str) -> str:
         advance_view(spark, ev.where(~is_delta), view, 1, AGG_VIEW)
         advance_view(spark, ev.where(is_delta), view, 2, AGG_VIEW)
 
-    return ensure_cached_build("aggview", _AGGVIEW_VERSION, sf_dir, build)
+    return ensure_cached_build("aggview", sf_dir, build)
 
 
 def _register() -> None:

@@ -76,8 +76,6 @@ BANDIT_VIEW = monoid(bandit_arm_counts, merge_arm_counts)
 # driver-gated lifecycle: the streaming twin of q_bandit_posterior
 # ---------------------------------------------------------------------------
 
-_BANDITVIEW_VERSION = "v2"
-
 
 def _ensure_bandit_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed versions with the REAL fold kernel: v=1 folds the
@@ -95,9 +93,7 @@ def _ensure_bandit_view(spark: SparkSession, sf_dir: str) -> str:
             half = ev.where(F.col("event_id") % 2 == v - 1)
             advance_view(spark, half, view, v, BANDIT_VIEW)
 
-    return ensure_cached_build(
-        "banditview", _BANDITVIEW_VERSION, sf_dir, build
-    )
+    return ensure_cached_build("banditview", sf_dir, build)
 
 
 def _register() -> None:

@@ -91,11 +91,9 @@ CMS_VIEW = monoid(lambda batch: cms_build(batch, "user_id"), merge_cms)
 # driver-gated lifecycle: the streaming twin of q_cms_heavy_hitters
 # ---------------------------------------------------------------------------
 
-_CMSVIEW_VERSION = "v2"
-
 
 def _ensure_cms_view(spark: SparkSession, sf_dir: str) -> str:
-    """Two committed sketch versions built once per (version, sf_dir)
+    """Two committed sketch versions built once per sf_dir
     with the REAL fold kernel: v=1 folds the even event half, v=2
     folds the odd half on top — so the final sketch must cell-equal a
     one-shot build over all events."""
@@ -104,7 +102,7 @@ def _ensure_cms_view(spark: SparkSession, sf_dir: str) -> str:
         ev = read_table(spark, sf_dir, "events")
         _fold_halves(spark, ev, build_dir, "event_id", CMS_VIEW)
 
-    return ensure_cached_build("cmsview", _CMSVIEW_VERSION, sf_dir, build)
+    return ensure_cached_build("cmsview", sf_dir, build)
 
 
 def _register() -> None:
@@ -164,8 +162,6 @@ def merge_hll(prev: DataFrame, delta: DataFrame) -> DataFrame:
 #: lineitem rows -> HLL registers of l_orderkey
 HLL_VIEW = monoid(lambda batch: hll_registers(batch, "l_orderkey"), merge_hll)
 
-_HLLVIEW_VERSION = "v2"
-
 
 def _ensure_hll_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed register versions, built with the real fold: even
@@ -175,7 +171,7 @@ def _ensure_hll_view(spark: SparkSession, sf_dir: str) -> str:
         li = read_table(spark, sf_dir, "lineitem")
         _fold_halves(spark, li, build_dir, "l_orderkey", HLL_VIEW)
 
-    return ensure_cached_build("hllview", _HLLVIEW_VERSION, sf_dir, build)
+    return ensure_cached_build("hllview", sf_dir, build)
 
 
 def _register_hll() -> None:
@@ -259,8 +255,6 @@ def _theta_delta(batch_df: DataFrame) -> DataFrame:
 #: orders rows -> per-side KMV of o_custkey
 THETA_VIEW = monoid(_theta_delta, merge_theta)
 
-_THETAVIEW_VERSION = "v2"
-
 
 def _ensure_theta_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed sketch versions built with the real fold: even
@@ -273,7 +267,7 @@ def _ensure_theta_view(spark: SparkSession, sf_dir: str) -> str:
         orders = read_table(spark, sf_dir, "orders")
         _fold_halves(spark, orders, build_dir, "o_orderkey", THETA_VIEW)
 
-    return ensure_cached_build("thetaview", _THETAVIEW_VERSION, sf_dir, build)
+    return ensure_cached_build("thetaview", sf_dir, build)
 
 
 def _register_theta() -> None:
@@ -351,8 +345,6 @@ def merge_daily_hll(prev: DataFrame, delta: DataFrame) -> DataFrame:
 #: raw events -> per-(day, register) HLL of user_id
 DAILY_HLL_VIEW = monoid(daily_hll_registers, merge_daily_hll)
 
-_DAILYHLL_VERSION = "v2"
-
 
 def _ensure_daily_hll_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed daily-register versions built with the real fold:
@@ -362,7 +354,7 @@ def _ensure_daily_hll_view(spark: SparkSession, sf_dir: str) -> str:
         ev = read_table(spark, sf_dir, "events")
         _fold_halves(spark, ev, build_dir, "event_id", DAILY_HLL_VIEW)
 
-    return ensure_cached_build("dailyhllview", _DAILYHLL_VERSION, sf_dir, build)
+    return ensure_cached_build("dailyhllview", sf_dir, build)
 
 
 def _register_daily_hll() -> None:
@@ -424,8 +416,6 @@ def merge_ams(prev: DataFrame, delta: DataFrame) -> DataFrame:
 #: shifts Z — which is why the replay guard must hold here.
 AMS_VIEW = monoid(lambda batch: ams_sketch(batch, "user_id", "event_type"), merge_ams)
 
-_AMSVIEW_VERSION = "v2"
-
 
 def _ensure_ams_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed counter versions built with the real fold: even
@@ -435,7 +425,7 @@ def _ensure_ams_view(spark: SparkSession, sf_dir: str) -> str:
         ev = read_table(spark, sf_dir, "events")
         _fold_halves(spark, ev, build_dir, "event_id", AMS_VIEW)
 
-    return ensure_cached_build("amsview", _AMSVIEW_VERSION, sf_dir, build)
+    return ensure_cached_build("amsview", sf_dir, build)
 
 
 def _register_ams() -> None:
@@ -521,8 +511,6 @@ _register_ams()
 #: materialized by compaction.
 MINHASH_VIEW = segmented(minhash_signatures, "minhash_min")
 
-_MHVIEW_VERSION = "v3"
-
 
 def _ensure_minhash_view(spark: SparkSession, sf_dir: str) -> str:
     """Two committed signature versions built with the real fold: even
@@ -533,7 +521,7 @@ def _ensure_minhash_view(spark: SparkSession, sf_dir: str) -> str:
         d = read_table(spark, sf_dir, "documents")
         _fold_halves(spark, d, build_dir, "doc_id", MINHASH_VIEW)
 
-    return ensure_cached_build("mhview", _MHVIEW_VERSION, sf_dir, build)
+    return ensure_cached_build("mhview", sf_dir, build)
 
 
 def _register_minhash() -> None:
@@ -587,8 +575,6 @@ _register_minhash()
 # must behave at CDC scale: per-batch work is batch-sized, state is
 # key-sized, and no commit ever rewrites the accumulated state.
 
-PATCH_VIEW_VERSION = "v2"
-
 #: events -> the batch's own per-key folded patch states, one delta
 #: segment per micro-batch
 PATCH_VIEW = segmented(
@@ -606,7 +592,7 @@ def _ensure_patch_view(spark: SparkSession, sf_dir: str) -> str:
         e = read_table(spark, sf_dir, "events")
         _fold_halves(spark, e, build_dir, "event_id", PATCH_VIEW)
 
-    return ensure_cached_build("patchview", PATCH_VIEW_VERSION, sf_dir, build)
+    return ensure_cached_build("patchview", sf_dir, build)
 
 
 def _register_patch() -> None:
@@ -706,8 +692,6 @@ def bloom_bitmap_from_view(
     return bitmap
 
 
-_BLOOMVIEW_VERSION = "v2"
-
 
 def _ensure_bloom_view(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Two committed word-table versions over the URGENT-orders key set
@@ -729,7 +713,7 @@ def _ensure_bloom_view(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
         _fold_halves(spark, urgent, build_dir, "o_orderkey", view)
 
     return (
-        ensure_cached_build("bloomview", _BLOOMVIEW_VERSION, sf_dir, build),
+        ensure_cached_build("bloomview", sf_dir, build),
         m_bits,
     )
 
@@ -808,8 +792,6 @@ _register_bloom()
 # hash-match q_ann_ivf's oracle VERBATIM — the same
 # result-invisibility bar as q_ann_serve's persisted index.
 
-IVF_VIEW_VERSION = "v4"
-
 
 def ivf_view(cents: DataFrame) -> View:
     """Vectors (vec_id, embedding) -> inverted-list rows assigned
@@ -834,7 +816,7 @@ def _ensure_ivf_view(spark: SparkSession, sf_dir: str) -> str:
         view = ivf_view(ivf_centroids(e))
         _fold_halves(spark, e, build_dir, "vec_id", view)
 
-    return ensure_cached_build("ivfview", IVF_VIEW_VERSION, sf_dir, build)
+    return ensure_cached_build("ivfview", sf_dir, build)
 
 
 def _register_ivf() -> None:
@@ -893,8 +875,6 @@ _register_ivf()
 # the same build/serve result-invisibility bar as q_ann_serve_pq's
 # persisted index.
 
-PQCODES_VIEW_VERSION = "v4"
-
 
 def pq_codes_view(tcb: DataFrame, cents: DataFrame) -> View:
     """Vectors (vec_id, embedding) -> 4-byte PQ codes encoded against
@@ -924,7 +904,7 @@ def _ensure_pq_codes_view(spark: SparkSession, sf_dir: str) -> str:
         view = pq_codes_view(tcb, ivfpq_coarse_centroids(e))
         _fold_halves(spark, e, build_dir, "vec_id", view)
 
-    return ensure_cached_build("pqcodesview", PQCODES_VIEW_VERSION, sf_dir, build)
+    return ensure_cached_build("pqcodesview", sf_dir, build)
 
 
 def _register_pq_codes() -> None:
@@ -982,8 +962,6 @@ _register_pq_codes()
 # committed-version guard makes checkpoint replays no-ops, as for
 # every sketch view.
 
-DECONTAM_VIEW_VERSION = "v3"
-
 
 def decontam_view(eval_hashes: DataFrame) -> View:
     """Documents (doc_id, text) -> overlap counts of the contaminated
@@ -1016,9 +994,7 @@ def _ensure_decontam_view(spark: SparkSession, sf_dir: str) -> str:
         train = d.where(bucket >= cut)
         _fold_halves(spark, train, build_dir, "doc_id", view)
 
-    return ensure_cached_build(
-        "decontamview", DECONTAM_VIEW_VERSION, sf_dir, build
-    )
+    return ensure_cached_build("decontamview", sf_dir, build)
 
 
 def _register_decontam() -> None:
@@ -1073,8 +1049,6 @@ _register_decontam()
 # duplicated, or mis-folded a single signature row changes candidate
 # pairs and fails the hash.
 
-COMPACT_VIEW_VERSION = "v2"
-
 
 def _ensure_compacted_minhash_view(spark: SparkSession, sf_dir: str) -> str:
     """Eight overlapping delta commits (each doc lands in TWO
@@ -1098,9 +1072,7 @@ def _ensure_compacted_minhash_view(spark: SparkSession, sf_dir: str) -> str:
         m = read_manifest(spark, view, 8)
         assert len(m["segments"]) == 1 and m["consolidated"], m
 
-    return ensure_cached_build(
-        "mhcompact", COMPACT_VIEW_VERSION, sf_dir, build
-    )
+    return ensure_cached_build("mhcompact", sf_dir, build)
 
 
 def _register_compaction() -> None:
@@ -1152,8 +1124,6 @@ _register_compaction()
 # Online model refresh without a training job: the filter's weights
 # are a SELECT away at any moment of ingest.
 
-PROBE_VIEW_VERSION = "v2"
-
 
 def merge_probe_gram(prev: DataFrame, delta: DataFrame) -> DataFrame:
     """Component-wise integer sum of the two 1-row Gram frames."""
@@ -1178,7 +1148,7 @@ def _ensure_probe_view(spark: SparkSession, sf_dir: str) -> str:
         d = read_table(spark, sf_dir, "documents")
         _fold_halves(spark, d, build_dir, "doc_id", PROBE_VIEW)
 
-    return ensure_cached_build("probeview", PROBE_VIEW_VERSION, sf_dir, build)
+    return ensure_cached_build("probeview", sf_dir, build)
 
 
 def _register_probe() -> None:
@@ -1229,8 +1199,6 @@ _register_probe()
 # committed-version guard is what makes checkpoint replays safe, the
 # CMS precedent.
 
-OHLC_VIEW_VERSION = "v2"
-
 _OHLC_KEYS = ("event_type", "hour_bucket")
 
 
@@ -1265,7 +1233,7 @@ def _ensure_ohlc_view(spark: SparkSession, sf_dir: str) -> str:
         ev = read_table(spark, sf_dir, "events")
         _fold_halves(spark, ev, build_dir, "event_id", OHLC_VIEW)
 
-    return ensure_cached_build("ohlcview", OHLC_VIEW_VERSION, sf_dir, build)
+    return ensure_cached_build("ohlcview", sf_dir, build)
 
 
 def _register_ohlc() -> None:
@@ -1323,8 +1291,6 @@ _register_ohlc()
 # whole history. Non-idempotent sums -> the MVCC committed-version
 # guard, the CMS precedent.
 
-SPRT_VIEW_VERSION = "v2"
-
 
 def _sprt_delta(batch_df: DataFrame) -> DataFrame:
     return batch_df.agg(
@@ -1350,7 +1316,7 @@ def _ensure_sprt_view(spark: SparkSession, sf_dir: str) -> str:
         ev = read_table(spark, sf_dir, "events")
         _fold_halves(spark, ev, build_dir, "event_id", SPRT_VIEW)
 
-    return ensure_cached_build("sprtview", SPRT_VIEW_VERSION, sf_dir, build)
+    return ensure_cached_build("sprtview", sf_dir, build)
 
 
 def _register_sprt() -> None:

@@ -102,8 +102,6 @@ def start_snapshot_maintenance(
 # driver-gated MVCC lifecycle (round 5)
 # ---------------------------------------------------------------------------
 
-_MVCC_VERSION = "v3"
-
 #: the MVCC fixtures' snapshot: events keyed (id, name), newest
 #: (event_time_s, eventID) wins
 _MVCC_VIEW = snapshot_view(("id", "name"), ("event_time_s", "eventID"))
@@ -137,7 +135,7 @@ def _mvcc_days(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
 
 
 def _ensure_mvcc_snapshots(spark: SparkSession, sf_dir: str) -> str:
-    """Two committed snapshot versions built once per (version, sf_dir):
+    """Two committed snapshot versions built once per sf_dir:
     v=1 upserts day-1 CDC rows, v=2 upserts day-2 on top — the exact
     foreachBatch kernel (``advance_view``), driven as two batches.
     Shared cache discipline (`cache.ensure_cached_build`)."""
@@ -150,7 +148,7 @@ def _ensure_mvcc_snapshots(spark: SparkSession, sf_dir: str) -> str:
         for v, day in enumerate(_mvcc_days(spark, sf_dir)[:2], start=1):
             advance_view(spark, day, snap, v, _MVCC_VIEW)
 
-    return ensure_cached_build("mvcc", _MVCC_VERSION, sf_dir, build)
+    return ensure_cached_build("mvcc", sf_dir, build)
 
 
 def _register() -> None:
@@ -241,14 +239,12 @@ _register()
 # travel to a vacuumed version fails loudly.
 
 
-_VACUUM_VERSION = "v3"
-
 
 def _ensure_vacuumed_snapshots(spark: SparkSession, sf_dir: str) -> str:
     """Three committed versions built with the real upsert kernel
     (day-1 -> v=1, day-2 -> v=2, the rest -> v=3), then VACUUMed to
     keep_last=2 — so v=1 is genuinely gone from disk while v=2 and
-    v=3 still serve. Cached per (version, sf_dir)."""
+    v=3 still serve. Cached per sf_dir."""
     import os
 
     from dynamodb_streaming_datalake_spark.cache import ensure_cached_build
@@ -263,7 +259,7 @@ def _ensure_vacuumed_snapshots(spark: SparkSession, sf_dir: str) -> str:
         deleted = vacuum_view(spark, snap, keep_last=2)[0]
         assert deleted == [1], deleted
 
-    return ensure_cached_build("mvccvac", _VACUUM_VERSION, sf_dir, build)
+    return ensure_cached_build("mvccvac", sf_dir, build)
 
 
 def _register_vacuum() -> None:

@@ -234,6 +234,56 @@ if bad:
 print("quantizer kernel guard OK")
 EOF
 
+# one on-disk cache: a build is keyed by its input stamps and the
+# source stamp inside cache.ensure_cached_build, so a module-level
+# ``*_VERSION = "v..."`` string constant (a hand-bumped cache key) in
+# the package fails, and so does a tempfile.gettempdir( / mkdtemp(
+# call outside cache.py (a hand-rolled disk cache)
+python - <<'EOF'
+import ast, os, sys
+
+PKG = "dynamodb_streaming_datalake_spark"
+CACHE = os.path.join(PKG, "cache.py")
+
+
+def version_constant(n):
+    """The name of a module-level ``*_VERSION = "v..."`` assignment."""
+    targets = n.targets if isinstance(n, ast.Assign) else [getattr(n, "target", None)]
+    v = getattr(n, "value", None)
+    if isinstance(v, ast.Constant) and isinstance(v.value, str) and v.value.startswith("v"):
+        for t in targets:
+            if isinstance(t, ast.Name) and t.id.endswith("_VERSION"):
+                return t.id
+    return None
+
+
+def called(n):
+    """The function name of a call node (``f(`` or ``mod.f(``)."""
+    if isinstance(n, ast.Call):
+        return getattr(n.func, "attr", getattr(n.func, "id", None))
+    return None
+
+
+bad = []
+for root, dirs, files in os.walk(PKG):
+    dirs[:] = sorted(d for d in dirs if not d.startswith((".", "__")))
+    for f in sorted(files):
+        if not f.endswith(".py"):
+            continue
+        p = os.path.join(root, f)
+        tree = ast.parse(open(p, encoding="utf-8").read(), p)
+        bad += [f"{p}:{n.lineno} {version_constant(n)}" for n in tree.body if version_constant(n)]
+        if p != CACHE:
+            bad += [
+                f"{p}:{n.lineno} {called(n)}("
+                for n in ast.walk(tree)
+                if called(n) in ("gettempdir", "mkdtemp")
+            ]
+if bad:
+    sys.exit("a hand-rolled on-disk cache outside cache.ensure_cached_build:\n" + "\n".join(bad))
+print("one-disk-cache guard OK")
+EOF
+
 if [ "${1:-}" = "quick" ]; then
     echo "preflight (quick) PASSED"
     exit 0

@@ -1,7 +1,9 @@
 """The in-process artifact memo (``cache.memo``): its key, its one
 eviction rule, its counters, and the two failure modes it exists to
 close — a frame handed to a session that has been stopped, and an
-artifact keyed on fewer files than it reads."""
+artifact keyed on fewer files than it reads. Then the on-disk tier
+(``cache.ensure_cached_build``), keyed by the same rule: a fixture
+rewritten in place, or changed package source, gets a new build."""
 
 from __future__ import annotations
 
@@ -194,3 +196,84 @@ def test_cache_consumers_survive_session_restart(sf_smoke):
     # session-free payloads are not rebuilt for the new session
     assert rebuilt["table_schema"] == 0
     assert [rebuilt[k] for k in rebuilt if k.startswith("bpe_merges/")] == [0]
+
+
+# ---------------------------------------------------------------------------
+# the on-disk tier: ensure_cached_build keys on the same stamps plus the
+# source stamp (its hit and sweep: tests/test_end_to_end.py)
+# ---------------------------------------------------------------------------
+
+
+def _sf(tmp_path: Path) -> Path:
+    """A two-fixture stand-in for an sf dir."""
+    d = tmp_path / "sf"
+    d.mkdir()
+    for t in ("events", "orders"):
+        (d / f"{t}.parquet").write_bytes(t.encode())
+    return d
+
+
+def _counting_build(calls: list):
+    def build(build_dir: str) -> None:
+        calls.append(build_dir)
+        Path(build_dir, "part").write_text(str(len(calls)))
+
+    return build
+
+
+def test_disk_build_rebuilds_when_fixture_rewritten_in_place(tmp_path, monkeypatch):
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf, calls = _sf(tmp_path), []
+    first = cache.ensure_cached_build("fam", str(sf), _counting_build(calls))
+    events = sf / "events.parquet"
+    mtime = events.stat().st_mtime_ns
+    events.write_bytes(b"rewritten")
+    os.utime(events, ns=(mtime + 10**9, mtime + 10**9))
+    second = cache.ensure_cached_build("fam", str(sf), _counting_build(calls))
+    assert len(calls) == 2 and second != first
+    assert not os.path.exists(first)
+    assert Path(second, "part").read_text() == "2"
+
+
+def test_disk_build_rebuilds_when_source_changes(tmp_path, monkeypatch):
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sf, calls = _sf(tmp_path), []
+    first = cache.ensure_cached_build("fam", str(sf), _counting_build(calls))
+    monkeypatch.setattr(cache, "_source_stamp", lambda: "changed build code")
+    second = cache.ensure_cached_build("fam", str(sf), _counting_build(calls))
+    assert len(calls) == 2 and second != first and not os.path.exists(first)
+
+
+def test_zone_roundtrip_follows_rewritten_events(spark, sf_smoke, tmp_path):
+    """q_cdc_zone_roundtrip on a copied sf dir, then again after its
+    events.parquet is rewritten in place: the zone is rebuilt from the
+    new file, so the query still matches its DuckDB oracle."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from dynamodb_streaming_datalake_spark.registry import all_oracle_sql, all_queries
+    from tests.oracle_utils import compare_query
+
+    name = "q_cdc_zone_roundtrip"
+    fn, sql = all_queries()[name], all_oracle_sql()[name]
+    d = tmp_path / "sf"
+    shutil.copytree(sf_smoke, d)
+    os.chmod(d, 0o755)
+    stats = cache.STATS["cdc_zone"]
+    compare_query(spark, str(d), name, fn, sql)
+    builds, before = stats["builds"], fn(spark, str(d)).count()
+
+    ev_path = d / "events.parquet"
+    ev = pq.read_table(ev_path)
+    ev = ev.filter(pc.not_equal(pc.bit_wise_and(ev["event_id"], 1), 0))
+    os.chmod(ev_path, 0o644)
+    ev_path.unlink()
+    pq.write_table(ev, ev_path)
+
+    compare_query(spark, str(d), name, fn, sql)
+    assert stats["builds"] == builds + 1
+    assert fn(spark, str(d)).count() != before

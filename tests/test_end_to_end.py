@@ -89,34 +89,43 @@ def test_full_dataflow_stream_lake_reconstruct(spark, tmp_path):
     } == want
 
 
-def test_zone_cache_versioned_cleanup(tmp_path, monkeypatch):
-    """ensure_cdc_zone spares same-version caches for OTHER sf_dirs
-    (bench/tests alternating scales must not thrash each other) while
-    sweeping pre-versioned and superseded caches, and never rebuilds a
-    zone it already has."""
+def test_zone_cache_stamped_cleanup(tmp_path, monkeypatch):
+    """ensure_cdc_zone spares the caches of OTHER sf_dirs (bench/tests
+    alternating scales must not thrash each other) and of other
+    families, sweeps this sf_dir's superseded and pre-stamp caches,
+    and never rebuilds a zone it already has."""
     import os
+    import tempfile
 
     from dynamodb_streaming_datalake_spark import cache
     from dynamodb_streaming_datalake_spark.operators import cdc_zone as cz
 
-    # the cache scaffolding now lives in the shared cache module
-    monkeypatch.setattr(cache.tempfile, "gettempdir", lambda: str(tmp_path))
-    keep = tmp_path / f"cdc_zone_cache_{cz._ZONE_VERSION}_deadbeefdeadbeef"
-    stale_unversioned = tmp_path / "cdc_zone_cache_0123456789abcdef"
-    stale_rt = tmp_path / "cdc_zone_rt_old"
-    for d in (keep, stale_unversioned, stale_rt):
+    root = tmp_path / "tmp"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+    sf = tmp_path / "sfX"
+    sf.mkdir()
+    (sf / "events.parquet").write_bytes(b"x")
+    sf_key = cache._sha16(os.path.realpath(sf))
+    keep = root / "cdc_zone_cache_deadbeefdeadbeef_0123456789abcdef"
+    other_prefix = root / "cdc_zone_rt_old"
+    other_family = root / f"compact_cache_{sf_key}_0123456789abcdef"
+    stale_key = root / f"cdc_zone_cache_{sf_key}_0123456789abcdef"
+    stale_versioned = root / f"cdc_zone_cache_v4_{sf_key}"
+    for d in (keep, other_prefix, other_family, stale_key, stale_versioned):
         d.mkdir()
 
     built = []
     monkeypatch.setattr(
         cz, "build_cdc_zone", lambda spark, sf, p: built.append(p)
     )
-    path = cz.ensure_cdc_zone(None, str(tmp_path / "sfX"))
+    path = cz.ensure_cdc_zone(None, str(sf))
     assert os.path.isdir(path) and len(built) == 1
-    assert os.path.basename(path).startswith(f"cdc_zone_cache_{cz._ZONE_VERSION}_")
-    assert keep.is_dir(), "same-version cache for another sf_dir was deleted"
-    assert not stale_unversioned.exists() and not stale_rt.exists()
+    assert os.path.basename(path).startswith(f"cdc_zone_cache_{sf_key}_")
+    assert keep.is_dir(), "the cache of another sf_dir was deleted"
+    assert other_prefix.is_dir() and other_family.is_dir()
+    assert not stale_key.exists() and not stale_versioned.exists()
 
     # cached: second call must not rebuild
-    cz.ensure_cdc_zone(None, str(tmp_path / "sfX"))
+    cz.ensure_cdc_zone(None, str(sf))
     assert len(built) == 1

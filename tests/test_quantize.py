@@ -3,10 +3,9 @@
 No fixture holds a zero-norm embedding or an exact score tie, so the
 oracle gate never sees these cases; here both engines' picks are pinned
 against a pure-Python sort on a tiny frame: ``quantize.nearest`` in its
-struct (n = 1) and window (n = 2) forms, and ``dedup.gemm_nearest`` with
-its documented argmax (k = 1) and stable-argsort (k > 1) picks. A
-zero-norm cosine is 0/0: NULL in Spark SQL (as in DuckDB), NaN in
-numpy — and the two engines rank those differently.
+struct (n = 1) and window (n = 2) forms, and ``dedup.gemm_nearest`` at
+k = 1 and 2. A zero-norm cosine is 0/0: NULL in Spark SQL (as in
+DuckDB), NaN in numpy; both engines rank it after every score.
 """
 
 from __future__ import annotations
@@ -92,25 +91,6 @@ def test_nearest_struct_and_window_forms_sort_by_score_then_cid(
         assert got[4][0] == 0 and got[6] == [0, 1][:n]
 
 
-def _gemm_reference(k, K):
-    """np.argmax for k == 1 (first maximum; a NaN counts as maximal),
-    stable argsort of -S for k > 1 (NaN last)."""
-    out = {}
-    for i, v in enumerate(VECS):
-        S = [_score("cosine", v, VECS[c]) for c in range(K)]
-        S = [math.nan if x is None else x for x in S]
-        if k == 1:
-            nan = [c for c, s in enumerate(S) if math.isnan(s)]
-            out[i] = nan[:1] or [max(range(K), key=lambda c: (S[c], -c))]
-        else:
-            order = sorted(
-                range(K),
-                key=lambda c: (math.isnan(S[c]), 0.0 if math.isnan(S[c]) else -S[c], c),
-            )
-            out[i] = order[:k]
-    return out
-
-
 @pytest.mark.parametrize("K", [2, 3])
 @pytest.mark.parametrize("k", [1, 2])
 def test_gemm_nearest_argmax_and_argsort_picks(planted, k, K):
@@ -119,9 +99,7 @@ def test_gemm_nearest_argmax_and_argsort_picks(planted, k, K):
     got: dict = {}
     for r in sorted(rows, key=lambda r: (r["vec_id"], r["r"])):
         got.setdefault(r["vec_id"], []).append(r["cid"])
-    assert got == _gemm_reference(k, K)
-    # k = 1 lets the zero-norm centroid's NaN win; k = 2 ranks it last
-    if K == 3:
-        assert got[5][0] == (2 if k == 1 else 0)
-    else:
-        assert got[3][0] == 0
+    # the struct and window forms' picks: NaN (the DataFrame kernel's
+    # NULL) ranks after every score, ties go to the smaller cid
+    assert got == _reference("cosine", k, K)
+    assert got[3][0] == 0 and got[5][0] == 0
